@@ -125,10 +125,11 @@ def connected_components(
     # node branch) — without the pin an expensive upstream derivation
     # (LSH star-edge verify, a window over the events table) re-runs
     # per consumer.  Measured on the sf0.1 star-edge input
-    # (bench_r06_probe cc): one evaluation ≈ 1.0 s, un-pinned CC ≈
-    # 3.5 s — the extra ~2 s was pure input re-evaluation.  Callers
-    # that already pass a checkpointed frame pay one cheap re-
-    # materialization of in-memory blocks.
+    # (scripts/bench_r06_probe.py cc, commit a4597d3): one
+    # evaluation ≈ 1.0 s, un-pinned CC ≈ 3.5 s — the extra ~2 s was
+    # pure input re-evaluation.  Callers that already pass a
+    # checkpointed frame pay one cheap re-materialization of
+    # in-memory blocks.
     typed = edges.select(
         F.col("u").cast("string"), F.col("v").cast("string")
     ).localCheckpoint(eager=True)

@@ -111,16 +111,14 @@ def compact_stream_epochs(
     with the touched-bucket fraction of the serving table plus the
     new-epoch volume, not the table size.
     """
-    if not fsutil.exists(spark, stream_out):
-        return CompactResult(0, 0, 0, None)
     done_max = read_compacted_epoch(spark, stream_out)
-    try:
-        epochs_df = spark.read.parquet(stream_out)
-    except Exception as exc:
-        if "UNABLE_TO_INFER_SCHEMA" in str(exc) or "Unable to infer schema" in str(exc):
-            # marker/sidecar files only — every epoch already folded
-            return CompactResult(0, 0, 0, done_max if done_max >= 0 else None)
-        raise
+    if all(
+        n.startswith(("_", ".")) for n in fsutil.list_names(spark, stream_out)
+    ):
+        # no sink yet, or marker/sidecar files only (names parquet
+        # reads skip) — every epoch already folded
+        return CompactResult(0, 0, 0, done_max if done_max >= 0 else None)
+    epochs_df = spark.read.parquet(stream_out)
     if "epoch_id" not in epochs_df.columns:
         raise ValueError(
             f"{stream_out} is not an epoch-partitioned stream sink "

@@ -220,7 +220,7 @@ def refresh_from_feed(
         change_feed.select("conv_id")
         # a NULL conv_id names nothing — drop it.  (Note xxhash64(NULL)
         # is NOT NULL: it folds to the seed, i.e. one constant bucket —
-        # the same constant plans/refresh._null_bucket relies on — so
+        # the same constant plans/pipeline._null_bucket relies on — so
         # without this filter a NULL feed row would needlessly drag
         # that whole bucket into every refresh.)
         .filter(F.col("conv_id").isNotNull())

@@ -9,12 +9,14 @@ is persisted as a stage table; resumability = checking the stage's
 ``_SUCCESS``-backed checkpoint marker before recomputing (north_rule:
 "resumable from checkpoint with per-partition lineage + metrics").
 
-Lineage rows: (stage, rows_in, rows_out, wall_ms, n_partitions) are
-appended to ``<root>/_lineage`` (an ordinary Spark-written table);
-checkpoint markers are tiny JSON files under ``<root>/_checkpoints``
-written through the Hadoop FileSystem of ``out_root`` — so resume
-works identically whether ``out_root`` is local disk, HDFS, or an
-object store (FIXTURES.md §4 schemas).
+Every stage, in build and refresh alike, ends in ``_finish_stage``:
+it writes the stage's lineage rows (stage, partition_id, rows_in,
+rows_out, wall_ms, n_partitions) as one small JSON-lines file under
+``<root>/_lineage`` and then the stage's checkpoint marker under
+``<root>/_checkpoints`` — both through the Hadoop FileSystem of
+``out_root``, so resume works identically on local disk, HDFS or an
+object store, and a marker never exists without its lineage rows
+(FIXTURES.md §4 schemas; read back with ``read_lineage``).
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,61 +76,6 @@ def _read_marker(spark: SparkSession, root: str, stage: str) -> dict:
     return json.loads(fsutil.read_text(spark, _ckpt_path(root, stage)))
 
 
-def _lineage_flushed_path(root: str) -> str:
-    return os.path.join(root, "_checkpoints", "_lineage_flushed.json")
-
-
-def _lineage_flushed(spark: SparkSession, root: str) -> set[str]:
-    """Stages whose lineage rows have already been appended to
-    ``_lineage``.  Lineage is written once per run (batched), so a run
-    that crashes mid-pipeline leaves completed stages with markers but
-    no lineage rows; on resume those stages are skipped and would be
-    silently absent from ``_lineage`` forever.  This marker lets the
-    resume backfill exactly the missing stages from their marker JSONs
-    without duplicating rows on later no-op resumes."""
-    path = _lineage_flushed_path(root)
-    if fsutil.exists(spark, path):
-        return set(json.loads(fsutil.read_text(spark, path))["stages"])
-    lineage_path = os.path.join(root, "_lineage")
-    if fsutil.exists(spark, lineage_path):
-        # legacy root: built before this marker existed, but its
-        # lineage WAS written end-of-run — treat the stages already
-        # present as flushed, or every no-op resume would re-append
-        # (duplicate) each stage's rows.  Bounded collect: one row
-        # per distinct stage name.
-        try:
-            return {
-                r.stage
-                for r in spark.read.parquet(lineage_path)
-                .select("stage")
-                .distinct()
-                .collect()
-            }
-        except Exception as exc:
-            # the directory exists but holds no committed parquet (a
-            # run died INSIDE the lineage write, leaving only
-            # _temporary/) — nothing was flushed; resume recovers
-            # from the stage markers exactly as before this fallback.
-            # ONLY that case: a transient read failure (throttling,
-            # one bad footer) must propagate, or this resume would
-            # re-append every marker-done stage's lineage rows on top
-            # of the already-flushed ones (silent double counting)
-            msg = str(exc)
-            if (
-                "UNABLE_TO_INFER_SCHEMA" in msg
-                or "Unable to infer schema" in msg
-            ):
-                return set()
-            raise
-    return set()
-
-
-def _mark_lineage_flushed(spark: SparkSession, root: str, stages: set[str]) -> None:
-    fsutil.write_text(
-        spark, _lineage_flushed_path(root), json.dumps({"stages": sorted(stages)})
-    )
-
-
 def _bucket_counts(spark: SparkSession, out_path: str) -> list[tuple] | None:
     """Per-p_hash-bucket row counts of a just-written stage table, or
     None for unbucketed tables.  ONE scan of the p_hash column (row
@@ -146,51 +94,196 @@ def _bucket_counts(spark: SparkSession, out_path: str) -> list[tuple] | None:
     ]
 
 
-def _write_lineage(
-    spark: SparkSession, root: str, entries: list[tuple[dict, list | None]]
-) -> None:
-    """ONE lineage write for the whole run: every stage-level row plus
-    the per-partition rows (FIXTURES.md §4 / north_rule 'per-partition
-    lineage + metrics') in a single appended file.  r3 issued two
-    writes and two full-table scans PER STAGE (a rows_out count, a
-    separate per-partition aggregation, and two one-file appends at
-    ~0.6 s of fixed job cost each) — measurable orchestration tax at
-    bench scale, pure waste at 100 TB.  Crash-safety is preserved by
-    the stage markers, which now carry the same rows (rows_out, wall,
-    bucket counts), so a run that dies before this final write loses
-    no information.
+LINEAGE_SCHEMA = (
+    "stage string, partition_id int, rows_in bigint, rows_out bigint, "
+    "wall_ms bigint, n_partitions int"
+)
 
-    The frame is a SINGLE-SLICE parallelize (the _driver_union_find
-    idiom), not createDataFrame([...]) (a Python worker per default
-    slice) and not a literal explode(array(struct...)) plan: r5 built
-    ~stages·(1+n_buckets) struct literals inline and Catalyst analysis
-    of that expression tree cost ~5 s per run at bench scale — pure
-    driver time, measured in scripts/bench_r06_probe.py (guide §7.3:
-    very large plans spend their wall in the optimizer).  One slice =
-    one task = one output file; row count stays bounded by
-    configuration (stages · (1 + n_buckets))."""
-    rows = []
-    for row, bucket_counts in entries:
-        rows.append(
-            (
-                row["stage"],
-                -1,
-                int(row["rows_in"]),
-                int(row["rows_out"]),
-                int(row["wall_ms"]),
-                int(row["n_partitions"]),
-            )
-        )
-        rows.extend(
-            (row["stage"], int(pid), -1, int(cnt), -1, int(row["n_partitions"]))
-            for pid, cnt in (bucket_counts or [])
-        )
-    lineage = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
-        "stage string, partition_id int, rows_in bigint, rows_out bigint, "
-        "wall_ms bigint, n_partitions int",
+
+def _new_run_id() -> str:
+    """Per-call id naming one run's lineage files: sortable by start
+    time, unique across concurrent or same-second runs."""
+    return f"{time.strftime('%Y%m%dT%H%M%S')}-{uuid.uuid4().hex[:8]}"
+
+
+def _finish_stage(
+    spark: SparkSession,
+    root: str,
+    run_id: str,
+    stage: str,
+    rows_out: int,
+    wall_ms: int,
+    buckets: list | None,
+    rows_in: int = -1,
+    n_partitions: int = -1,
+    label: str | None = None,
+    pre_mark_joins: list | None = None,
+) -> dict:
+    """Finish one stage of a build or refresh: write its lineage rows,
+    then its checkpoint marker.  Returns the stage-level lineage row.
+
+    The lineage rows — one stage-level row (``partition_id = -1``,
+    named ``label``, default ``stage``) plus one per ``p_hash`` bucket
+    — go to ``<root>/_lineage/<run_id>-<stage>.jsonl``: a driver-side
+    small-file write that runs no Spark job.  Written BEFORE the
+    marker, so every stage a resume skips already has its rows and
+    nothing is ever reconstructed or re-appended.  (A crash between
+    the two small writes leaves rows for a stage the resume then runs
+    again, so that stage gets two rows; the other order would lose
+    rows instead.)
+
+    ``pre_mark_joins`` holds futures of side writes the stage launched
+    (e.g. the extract stage's error channel); they are joined, and the
+    list cleared, first — neither a lineage row nor a marker may
+    promise an output a still-in-flight write could fail to deliver."""
+    while pre_mark_joins:
+        pre_mark_joins.pop().result()
+    row = {
+        "stage": label or stage,
+        "rows_in": int(rows_in),
+        "rows_out": int(rows_out),
+        "wall_ms": int(wall_ms),
+        "n_partitions": int(n_partitions),
+    }
+    lines = [{**row, "partition_id": -1}] + [
+        {**row, "partition_id": int(b), "rows_in": -1, "rows_out": int(c),
+         "wall_ms": -1}
+        for b, c in buckets or []
+    ]
+    fsutil.write_text(
+        spark,
+        os.path.join(root, "_lineage", f"{run_id}-{stage}.jsonl"),
+        "".join(json.dumps(line) + "\n" for line in lines),
     )
-    lineage.write.mode("append").parquet(os.path.join(root, "_lineage"))
+    _mark_done(
+        spark, root, stage,
+        {"rows_out": rows_out, "wall_ms": wall_ms, "bucket_counts": buckets},
+    )
+    return row
+
+
+def read_lineage(spark: SparkSession, root: str) -> DataFrame:
+    """Every lineage row recorded under ``root`` (FIXTURES.md §4
+    ``_lineage`` schema).  Reads the ``*.jsonl`` stage files only."""
+    lin = os.path.join(root, "_lineage")
+    files = [
+        os.path.join(lin, n)
+        for n in fsutil.list_names(spark, lin)
+        if n.endswith(".jsonl")
+    ]
+    if not files:
+        return spark.createDataFrame([], LINEAGE_SCHEMA)
+    return spark.read.schema(LINEAGE_SCHEMA).json(files)
+
+
+_NULL_BUCKET_MEMO: dict[int, int] = {}
+
+
+def _null_bucket(spark: SparkSession, n_buckets: int) -> int:
+    """The bucket every NULL-conv_id row (same_as / canonical_of)
+    hashes into: Spark's xxhash64 folds a NULL input to the seed, so
+    this is a constant per modulus — computed through the engine
+    rather than hard-coding the seed.  Memoized per modulus: it is an
+    engine constant (pure function of the modulus, no data), so the
+    one-row probe job runs once per process, not once per refresh."""
+    if n_buckets not in _NULL_BUCKET_MEMO:
+        _NULL_BUCKET_MEMO[n_buckets] = (
+            spark.range(1)
+            .select(
+                F.pmod(F.xxhash64(F.lit(None).cast("string")), F.lit(n_buckets))
+                .cast("int")
+                .alias("b")
+            )
+            .collect()[0]
+            .b
+        )
+    return _NULL_BUCKET_MEMO[n_buckets]
+
+
+def _materialize_by_copy(
+    spark: SparkSession,
+    root: str,
+    extras: DataFrame,
+    n_buckets: int,
+    touched: list[int] | None = None,
+) -> list[tuple[int, int]] | None:
+    """Stage D without recomputation, for build (``touched=None``: the
+    whole table) and refresh (only the ``touched`` buckets).
+
+    ``triples`` is ``triples_raw`` ∪ ``extras`` (same_as ∪ canonical),
+    bucketed by the same ``(conv_id, n_buckets)`` scheme as the raw
+    table, and every extras row carries a NULL conv_id.  So each
+    bucket's raw files are already that bucket's materialized content,
+    except the NULL bucket, which also holds the extras.  Clone the
+    raw bucket dirs at the FS level (``sio.copy_buckets`` — a
+    server-side copy on an object store), then append the extras into
+    the NULL bucket when it is in scope.  This skips the union's
+    full-table exchange and parquet re-encode.  Identical content to
+    the union write (tests/test_r06_internals.py, and the refresh
+    row-identity tests).
+
+    The NULL-conv_id invariant is checked row-inline on the append
+    job: a non-NULL conv_id fails that job before it commits, so no
+    extras row lands in a bucket it does not hash to.
+
+    Returns the written buckets' counts (the extract marker's raw
+    counts, plus the appended count on the NULL bucket), or None when
+    the copy does not apply — the catalog backend, or a raw (or, on
+    refresh, materialized) table bucketed some other way — and the
+    caller writes the union instead."""
+    raw_path = os.path.join(root, "triples_raw")
+    triples_path = os.path.join(root, "triples")
+    if sio.iceberg_available(spark) and not sio._is_path(triples_path):
+        return None
+    layout = {"partition_key": "conv_id", "n_buckets": n_buckets}
+    if sio.read_bucket_meta(spark, raw_path) != layout or (
+        touched is not None
+        and sio.read_bucket_meta(spark, triples_path) != layout
+    ):
+        return None
+    raw_counts = _read_marker(spark, root, "extract").get("bucket_counts")
+    if raw_counts is None:
+        # pre-counts extract marker: one footer scan of the raw table
+        raw_counts = _bucket_counts(spark, raw_path)
+    if touched is None:
+        fsutil.delete(spark, triples_path, recursive=True)
+    sio.copy_buckets(spark, raw_path, triples_path, buckets=touched)
+    counts = {
+        int(b): int(c)
+        for b, c in raw_counts
+        if touched is None or int(b) in touched
+    }
+    nb = _null_bucket(spark, n_buckets)
+    if touched is None or nb in touched:
+        conv = F.col("conv_id")
+        guarded = extras.withColumn(
+            "conv_id",
+            F.when(conv.isNull(), conv).otherwise(
+                F.raise_error(
+                    F.concat(
+                        F.lit(
+                            "materialize: same_as/canonical rows must "
+                            "carry a NULL conv_id, got "
+                        ),
+                        conv,
+                    )
+                )
+            ),
+        )
+        n_extra = sio.append_into_bucket(guarded, triples_path, nb)
+        if n_extra:
+            counts[nb] = counts.get(nb, 0) + n_extra
+    fsutil.write_text(
+        spark,
+        os.path.join(triples_path, "_schema.json"),
+        sio.with_partition_hash(
+            sio.read_table(spark, raw_path).unionByName(extras),
+            "conv_id",
+            n_buckets,
+        ).schema.json(),
+    )
+    sio._write_bucket_meta(spark, triples_path, "conv_id", n_buckets)
+    return sorted(counts.items())
 
 
 def run_pipeline(
@@ -243,46 +336,31 @@ def run_pipeline(
         return STAGES.index(stage) <= STAGES.index(stop_after)
 
     lineage: list[dict] = []
-    lineage_entries: list[tuple[dict, list | None]] = []
     run: list[str] = []
     skipped: list[str] = []
-
-    flushed = _lineage_flushed(spark, out_root) if resume else set()
-    if flushed and not fsutil.exists(spark, _lineage_flushed_path(out_root)):
-        # legacy root resolved via the _lineage fallback above: persist
-        # the marker now so later resumes don't re-pay the distinct scan
-        _mark_lineage_flushed(spark, out_root, flushed)
+    run_id = _new_run_id()
 
     # futures a stage's fn() launched that must complete BEFORE that
     # stage's checkpoint marker becomes durable (e.g. the extract
-    # stage's error-channel write): a marker must never promise
-    # outputs a still-in-flight side write could fail to deliver —
-    # resume would then skip the stage and serve the broken sink
-    # forever.  Joined (and cleared) by staged() right before
-    # _mark_done.
+    # stage's error-channel write) — joined by _finish_stage
     pre_mark_joins: list = []
+
+    def finish(
+        name: str, rows_out: int, wall_ms: int, buckets,
+        rows_in: int = -1, n_partitions: int = -1,
+    ) -> None:
+        lineage.append(
+            _finish_stage(
+                spark, out_root, run_id, name, rows_out, wall_ms, buckets,
+                rows_in=rows_in, n_partitions=n_partitions,
+                pre_mark_joins=pre_mark_joins,
+            )
+        )
+        run.append(name)
 
     def staged(name: str, in_df: DataFrame | None, fn, out_path: str, partition_key):
         if resume and _is_done(spark, out_root, name):
             skipped.append(name)
-            if name not in flushed:
-                # crashed-run backfill: the stage completed (marker
-                # present) but its lineage rows never reached the
-                # batched end-of-run write — reconstruct them from the
-                # marker (rows_out / wall_ms / bucket_counts are all
-                # there; rows_in wasn't recorded → -1)
-                meta = _read_marker(spark, out_root, name)
-                row = {
-                    "stage": name,
-                    "rows_in": -1,
-                    "rows_out": meta["rows_out"],
-                    "wall_ms": meta["wall_ms"],
-                    "n_partitions": -1,
-                }
-                lineage.append(row)
-                lineage_entries.append(
-                    (row, [tuple(bc) for bc in meta["bucket_counts"] or []] or None)
-                )
             return sio.read_table(spark, out_path)
         t0 = time.monotonic()
         out_df = fn()
@@ -309,33 +387,15 @@ def run_pipeline(
             buckets = observed
             rows_out = sum(c for _, c in observed)
         wall_ms = int((time.monotonic() - t0) * 1000)
-        row = {
-            "stage": name,
-            "rows_in": (
+        finish(
+            name, rows_out, wall_ms, buckets,
+            rows_in=(
                 in_df.count()
                 if in_df is not None and lineage_input_counts
                 else -1
             ),
-            "rows_out": rows_out,
-            "wall_ms": wall_ms,
-            "n_partitions": persisted.rdd.getNumPartitions(),
-        }
-        lineage.append(row)
-        lineage_entries.append((row, buckets))
-        for fut in pre_mark_joins:
-            fut.result()
-        pre_mark_joins.clear()
-        _mark_done(
-            spark,
-            out_root,
-            name,
-            {
-                "rows_out": rows_out,
-                "wall_ms": wall_ms,
-                "bucket_counts": buckets,
-            },
+            n_partitions=persisted.rdd.getNumPartitions(),
         )
-        run.append(name)
         return persisted
 
     raw_path = os.path.join(out_root, "triples_raw")
@@ -358,11 +418,9 @@ def run_pipeline(
             # stage markers + lineage too: a rebuild that crashes
             # mid-run must not let a later resume=True skip downstream
             # stages on the strength of the PREVIOUS corpus's markers
-            # (mixed-corpus serving), and append-mode _lineage would
-            # keep the old corpus's rows next to the new ones
-            # (double-counted stage totals).  _checkpoints also holds
-            # _lineage_flushed.json, whose stale 'extract' entry would
-            # suppress the crashed rebuild's lineage backfill.
+            # (mixed-corpus serving), and _lineage would keep the old
+            # corpus's rows next to the new ones (double-counted stage
+            # totals)
             os.path.join(out_root, "_checkpoints"),
             os.path.join(out_root, "_lineage"),
             # downstream stage tables too: a full run overwrites them
@@ -392,10 +450,11 @@ def run_pipeline(
     # (rejects + good); pin it with localCheckpoint so the scan + rule
     # evaluation runs once, not once per sink.  localCheckpoint beats
     # persist(MEMORY_AND_DISK) here by ~2 s at bench scale (measured,
-    # scripts/bench_r06_probe.py stage_a): the checkpoint materializes
-    # straight to shuffle-format RDD blocks, while the cache path pays
-    # columnar-cache encode on write AND decode on each of the two
-    # sink reads, competing with execution memory (guide §5).  The
+    # scripts/bench_r06_probe.py stage_a at commit a4597d3): the
+    # checkpoint materializes straight to shuffle-format RDD blocks,
+    # while the cache path pays columnar-cache encode on write AND
+    # decode on each of the two sink reads, competing with execution
+    # memory (guide §5).  The
     # rejects sink reads only the pinned checkpoint and nothing reads
     # it back in-run — written on the side pool, overlapped with the
     # good-side bucketed write.
@@ -458,21 +517,11 @@ def run_pipeline(
         rows_out = (
             sum(c for _, c in buckets) if buckets is not None else triples_a.count()
         )
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        row = {
-            "stage": "extract",
-            "rows_in": turns.count() if lineage_input_counts else -1,
-            "rows_out": rows_out,
-            "wall_ms": wall_ms,
-            "n_partitions": triples_a.rdd.getNumPartitions(),
-        }
-        lineage.append(row)
-        lineage_entries.append((row, buckets))
-        _mark_done(
-            spark, out_root, "extract",
-            {"rows_out": rows_out, "wall_ms": wall_ms, "bucket_counts": buckets},
+        finish(
+            "extract", rows_out, int((time.monotonic() - t0) * 1000), buckets,
+            rows_in=turns.count() if lineage_input_counts else -1,
+            n_partitions=triples_a.rdd.getNumPartitions(),
         )
-        run.append("extract")
     else:
         triples_a = staged("extract", turns, stage_a, raw_path, "conv_id")
 
@@ -562,92 +611,21 @@ def run_pipeline(
             raw_src = stage_a_ckpt[0] if stage_a_ckpt else triples_a
             return raw_src.unionByName(same_as).unionByName(canonical)
 
-        def _materialize_copy() -> bool:
-            """Stage D without recomputation (parquet backend): the raw
-            table was JUST written bucketed by the same
-            ``(conv_id, n_buckets)`` scheme this stage would bucket by,
-            and every same_as/canonical row carries a NULL conv_id — so
-            for every bucket EXCEPT the NULL bucket the raw files are
-            already the materialized table's exact content.  Clone them
-            at the FS level (``sio.copy_buckets`` — server-side copy on
-            an object store) and append same_as ∪ canonical into the
-            NULL bucket; this skips the union's full-table exchange +
-            parquet re-encode and the post-write count scan (counts =
-            extract marker's bucket counts + the write-observed extra
-            count).  Identical table content — fingerprint-verified
-            against the union write in scripts/bench_r06b_matcopy.py;
-            measured ~3.3 s → ~0.6 s at bench scale.  Returns False
-            (caller falls back to the union write) on the catalog
-            backend or when the raw layout doesn't match."""
-            if sio.iceberg_available(spark) and not sio._is_path(triples_path):
-                return False
-            raw_meta = sio.read_bucket_meta(spark, raw_path)
-            if (
-                raw_meta is None
-                or raw_meta["n_buckets"] != n_buckets
-                or raw_meta["partition_key"] != "conv_id"
-            ):
-                return False
-            from lexicator_spark.plans.refresh import _null_bucket
-
-            t0 = time.monotonic()
-            fsutil.delete(spark, triples_path, recursive=True)
-            copied = sio.copy_buckets(spark, raw_path, triples_path)
-            extra = same_as.unionByName(canonical)
-            nb = _null_bucket(spark, n_buckets)
-            n_extra = sio.append_into_bucket(extra, triples_path, nb)
-            fsutil.write_text(
-                spark,
-                os.path.join(triples_path, "_schema.json"),
-                sio.with_partition_hash(
-                    triples_a.unionByName(extra), "conv_id", n_buckets
-                ).schema.json(),
-            )
-            sio._write_bucket_meta(spark, triples_path, "conv_id", n_buckets)
-            try:
-                buckets = _read_marker(spark, out_root, "extract").get(
-                    "bucket_counts"
-                )
-            except Exception:
-                buckets = None
-            if buckets is None:
-                # pre-counts extract marker: one footer scan of the
-                # just-built table (already includes the extras)
-                buckets = _bucket_counts(spark, triples_path)
-            else:
-                merged = {int(b): int(c) for b, c in buckets}
-                if n_extra:
-                    merged[nb] = merged.get(nb, 0) + n_extra
-                buckets = sorted(merged.items())
-            rows_out = sum(c for _, c in buckets)
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            row = {
-                "stage": "materialize",
-                "rows_in": -1,
-                "rows_out": rows_out,
-                "wall_ms": wall_ms,
-                "n_partitions": len(copied) + 1,
-            }
-            lineage.append(row)
-            lineage_entries.append((row, buckets))
-            _mark_done(
-                spark,
-                out_root,
-                "materialize",
-                {
-                    "rows_out": rows_out,
-                    "wall_ms": wall_ms,
-                    "bucket_counts": buckets,
-                },
-            )
-            run.append("materialize")
-            return True
-
         if _runs("materialize"):
-            if (resume and _is_done(spark, out_root, "materialize")) or (
-                not _materialize_copy()
-            ):
+            t0 = time.monotonic()
+            buckets = None
+            if not (resume and _is_done(spark, out_root, "materialize")):
+                buckets = _materialize_by_copy(
+                    spark, out_root, same_as.unionByName(canonical), n_buckets
+                )
+            if buckets is None:
                 staged("materialize", None, stage_d, triples_path, "conv_id")
+            else:
+                finish(
+                    "materialize", sum(c for _, c in buckets),
+                    int((time.monotonic() - t0) * 1000), buckets,
+                    n_partitions=len(buckets),
+                )
 
         # join BEFORE entities (reads _surface_stats) and before
         # returning: a side-job failure must fail the build, never
@@ -674,7 +652,8 @@ def run_pipeline(
         — the rollup input is ≤ vocabulary × n_buckets rows and
         produces the identical frame by the sidecar's documented
         contract (the refresh path already relies on this equality;
-        measured 1.43 s → 0.58 s at bench scale, bench_r06_probe)."""
+        measured 1.43 s → 0.58 s at bench scale with
+        scripts/bench_r06_probe.py at commit a4597d3)."""
         from lexicator_spark.plans.refresh import surface_rollup
 
         stats = sio.read_table(
@@ -684,14 +663,6 @@ def run_pipeline(
 
     if _runs("entities"):
         staged("entities", None, stage_entities, entities_path, None)
-
-    if lineage_entries:
-        _write_lineage(spark, out_root, lineage_entries)
-        _mark_lineage_flushed(
-            spark,
-            out_root,
-            flushed | {row["stage"] for row, _ in lineage_entries},
-        )
 
     return PipelineResult(
         triples_path=triples_path,

@@ -30,10 +30,10 @@ exploiting what each stage actually depends on:
   exactly as the full build does, so the refreshed table is
   row-identical to a from-scratch run (asserted in
   tests/test_refresh_e2e.py).
-- **Stage D** (materialize) upserts only the buckets whose raw rows
+- **Stage D** (materialize) re-copies only the buckets whose raw rows
   changed, plus the single NULL-conv_id bucket (``pmod(xxhash64(
-  NULL), P)`` — where every same_as/canonical row lands) when the
-  link set changed.
+  NULL), P)`` — where every same_as/canonical row lands, appended
+  after the copy) when the link set changed.
 - **entities** is vocabulary-sized arithmetic over the
   ``_surface_stats`` rollup (``mention_counts_of_triples`` twin) —
   a full rewrite of a tiny table, never a corpus rescan.
@@ -138,8 +138,9 @@ def recover_inflight_refresh(spark: SparkSession, out_root: str) -> bool:
     # the crashed upsert changed the raw table AFTER the extract
     # marker's bucket_counts were written: recount them (parquet
     # footer-metadata scan, cheap) so later O(delta) marker merges
-    # (_delta_bucket_counts) and lineage backfills don't perpetuate
-    # pre-crash numbers for the buckets the dead refresh rewrote
+    # (_delta_bucket_counts) and the copy-materialize counts don't
+    # perpetuate pre-crash numbers for the buckets the dead refresh
+    # rewrote
     ck = os.path.join(out_root, "_checkpoints", f"{STAGES[0]}.json")
     if fsutil.exists(spark, ck):
         marker = json.loads(fsutil.read_text(spark, ck))
@@ -248,30 +249,6 @@ def update_surface_stats(
         # it themselves BEFORE calling, see refresh_pipeline)
         pin_replacement=False,
     )
-
-
-_NULL_BUCKET_MEMO: dict[int, int] = {}
-
-
-def _null_bucket(spark: SparkSession, n_buckets: int) -> int:
-    """The bucket every NULL-conv_id row (same_as / canonical_of)
-    hashes into: Spark's xxhash64 folds a NULL input to the seed, so
-    this is a constant per modulus — computed through the engine
-    rather than hard-coding the seed.  Memoized per modulus: it is an
-    engine constant (pure function of the modulus, no data), so the
-    one-row probe job runs once per process, not once per refresh."""
-    if n_buckets not in _NULL_BUCKET_MEMO:
-        _NULL_BUCKET_MEMO[n_buckets] = (
-            spark.range(1)
-            .select(
-                F.pmod(F.xxhash64(F.lit(None).cast("string")), F.lit(n_buckets))
-                .cast("int")
-                .alias("b")
-            )
-            .collect()[0]
-            .b
-        )
-    return _NULL_BUCKET_MEMO[n_buckets]
 
 
 def _delta_bucket_counts(
@@ -480,26 +457,12 @@ def refresh_pipeline(
     touched = sorted(res.touched_buckets)
     wall_a = int((time.monotonic() - t0) * 1000)
 
-    lineage: list[tuple[dict, list | None]] = []
+    run_id = P._new_run_id()
 
     def _done(stage: str, rows_out: int, wall_ms: int, buckets, rows_in=-1):
-        P._mark_done(
-            spark,
-            out_root,
-            stage,
-            {"rows_out": rows_out, "wall_ms": wall_ms, "bucket_counts": buckets},
-        )
-        lineage.append(
-            (
-                {
-                    "stage": f"refresh:{stage}",
-                    "rows_in": rows_in,
-                    "rows_out": rows_out,
-                    "wall_ms": wall_ms,
-                    "n_partitions": -1,
-                },
-                buckets,
-            )
+        P._finish_stage(
+            spark, out_root, run_id, stage, rows_out, wall_ms, buckets,
+            rows_in=rows_in, label=f"refresh:{stage}",
         )
 
     raw_buckets = _delta_bucket_counts(
@@ -626,52 +589,19 @@ def refresh_pipeline(
     # costs hide under the larger one's tail.  Each thread reports its
     # own wall; job descriptions are thread-local so the UI stays
     # readable.
-    nb = _null_bucket(spark, n_buckets)
+    nb = P._null_bucket(spark, n_buckets)
     mat_touched = sorted(set(touched) | ({nb} if links_changed else set()))
 
     def _stage_d():
         t0 = time.monotonic()
-        # File-level bucket replacement (pipeline._materialize_copy's
-        # refresh twin): for every touched bucket EXCEPT the NULL
-        # bucket, the just-refreshed raw files ARE the replacement
-        # content of the materialized table (same (conv_id, modulus)
-        # bucketing; same_as/canonical rows all carry NULL conv_id) —
+        # the touched raw buckets ARE the replacement content of the
+        # materialized table (plus the extras in the NULL bucket):
         # clone them instead of re-reading + re-shuffling + re-encoding
-        # the touched raw rows.  Only the NULL bucket (raw NULL-conv
-        # rows + EVERY same_as/canonical row) needs a real write, and
-        # only when it is touched.  Per-bucket counts come from
-        # ``raw_buckets`` (already merged O(delta)) — zero extra jobs.
-        mat_can_copy = (
-            mat_meta is not None
-            and mat_meta["partition_key"] == "conv_id"
-            and mat_meta["n_buckets"] == n_buckets
-            and raw_buckets is not None
+        fresh = P._materialize_by_copy(
+            spark, out_root, same_as_new.unionByName(canonical_new),
+            n_buckets, touched=mat_touched,
         )
-        if mat_can_copy:
-            plain = [b for b in mat_touched if b != nb]
-            sio.copy_buckets(spark, raw_path, triples_path, buckets=plain)
-            raw_map = {int(b): int(c) for b, c in raw_buckets}
-            fresh = [(b, raw_map[b]) for b in plain if b in raw_map]
-            if nb in mat_touched:
-                repl_nb = (
-                    sio.read_table(spark, raw_path, keep_bucket_col=True)
-                    .filter(F.col("p_hash") == nb)
-                    .drop("p_hash")
-                    .unionByName(same_as_new)
-                    .unionByName(canonical_new)
-                )
-                nb_counts = sio.upsert_partitions(
-                    repl_nb,
-                    triples_path,
-                    partition_key="conv_id",
-                    n_buckets=n_buckets,
-                    touched_buckets=[nb],
-                    # reads the raw table + two frames pinned above —
-                    # never the triples files being replaced
-                    pin_replacement=False,
-                )
-                fresh += list(nb_counts or [])
-        else:
+        if fresh is None:
             repl = (
                 sio.read_table(spark, raw_path, keep_bucket_col=True)
                 .filter(F.col("p_hash").isin(mat_touched))
@@ -730,7 +660,6 @@ def refresh_pipeline(
     _done("entities", n_entities, wall_e, None)
     refreshed.append("entities")
 
-    P._write_lineage(spark, out_root, lineage)
     end_refresh(spark, out_root)
     return RefreshPipelineResult(
         n_changed=res.n_changed,

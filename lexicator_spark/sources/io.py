@@ -223,7 +223,7 @@ def upsert_partitions(
     touched_buckets: list[int] | None = None,
     files_per_bucket: int = 1,
     pin_replacement: bool = True,
-) -> None:
+) -> list[tuple[int, int]] | None:
     """Idempotent partition-level upsert on the parquet backend — the
     stand-in for Iceberg ``MERGE INTO``: dynamic partition overwrite
     rewrites ONLY the ``p_hash`` buckets present in ``df``; every
@@ -404,14 +404,16 @@ def read_table(
     try:
         df = reader.parquet(location)
     except Exception as exc:
-        # ONLY the zero-data-files case (a write of an all-empty frame
-        # leaves just the sidecars) reads back as an empty table;
-        # anything else — lost files, permissions, transient store
-        # errors — must raise, or a resumed pipeline would silently
-        # materialize an empty graph as success
+        # the declared schema already reads a zero-data-files table (a
+        # write of an all-empty frame leaves just the sidecars) as
+        # empty, without inference; of the failures ONLY a missing
+        # path reads back as an empty table — anything else (lost
+        # files, permissions, transient store errors) must raise, or a
+        # resumed pipeline would silently materialize an empty graph
+        # as success
         empty_shaped = any(
             marker in str(exc)
-            for marker in ("PATH_NOT_FOUND", "Path does not exist", "UNABLE_TO_INFER_SCHEMA")
+            for marker in ("PATH_NOT_FOUND", "Path does not exist")
         )
         if schema is None or not empty_shaped:
             raise

@@ -7,7 +7,6 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from lexicator_spark import synth
 from lexicator_spark.operators.extract import extract_triples, split_rejects
@@ -254,28 +253,6 @@ def test_resume_skip_does_not_stamp_frontier(spark, tmp_path):
     assert not os.path.exists(floc)  # refresh bootstrap handles it safely
 
 
-def test_legacy_lineage_not_duplicated_on_resume(spark, tmp_path):
-    """A root whose lineage was written before _lineage_flushed.json
-    existed must not get every stage's rows re-appended on a no-op
-    resume: the flushed set falls back to the stages already present
-    in _lineage."""
-    from lexicator_spark.plans.pipeline import run_pipeline
-
-    turns = _mk_turns(spark, n=10, seed=4)
-    out = str(tmp_path / "kg")
-    run_pipeline(spark, turns, out, resume=True, n_buckets=4)
-    os.remove(os.path.join(out, "_checkpoints", "_lineage_flushed.json"))
-    run_pipeline(spark, turns, out, resume=True, n_buckets=4)
-    stage_rows = (
-        spark.read.parquet(os.path.join(out, "_lineage"))
-        .filter(F.col("partition_id") == -1)
-        .groupBy("stage")
-        .count()
-        .collect()
-    )
-    assert stage_rows and all(r["count"] == 1 for r in stage_rows)
-
-
 def test_backfill_non_conv_id_bucketed_falls_back_unpruned(spark, tmp_path):
     """A location bucketed on some OTHER key must not take the pruned
     path: its p_hash is not hash(conv_id) mod raw_n, so the
@@ -301,7 +278,7 @@ def test_rebuild_clears_markers_and_lineage(spark, tmp_path):
     strength of the PREVIOUS corpus (mixed-corpus serving), and
     append-mode lineage would keep the old corpus's rows next to the
     new ones, double-counting every stage total."""
-    from lexicator_spark.plans.pipeline import run_pipeline
+    from lexicator_spark.plans.pipeline import read_lineage, run_pipeline
 
     turns_a = _mk_turns(spark, n=15, seed=5)
     turns_b = _mk_turns(spark, n=15, seed=6)
@@ -309,7 +286,7 @@ def test_rebuild_clears_markers_and_lineage(spark, tmp_path):
     run_pipeline(spark, turns_a, out, resume=True, n_buckets=4)
     run_pipeline(spark, turns_b, out, resume=False, n_buckets=4)
 
-    lin_df = spark.read.parquet(os.path.join(out, "_lineage"))
+    lin_df = read_lineage(spark, out)
     stage_rows = lin_df.filter("partition_id = -1").collect()
     stages = [r.stage for r in stage_rows]
     # exactly one stage-level row per stage — no corpus-A leftovers

@@ -8,7 +8,7 @@ import os
 from pyspark.sql import functions as F
 
 from lexicator_spark import synth
-from lexicator_spark.plans.pipeline import run_pipeline, triples_of
+from lexicator_spark.plans.pipeline import read_lineage, run_pipeline, triples_of
 from tests import oracle
 
 
@@ -321,7 +321,7 @@ def test_lineage_written(spark, tmp_path):
     df = synth.corpus_df(spark, corpus)
     out = str(tmp_path / "kg")
     run_pipeline(spark, df, out, resume=False)
-    lin = spark.read.parquet(os.path.join(out, "_lineage"))
+    lin = read_lineage(spark, out)
     stages = {r.stage for r in lin.select("stage").distinct().collect()}
     assert {"extract", "link", "canonicalize", "materialize", "entities"} <= stages
     assert lin.filter("rows_out < 0").count() == 0
@@ -351,37 +351,82 @@ def test_empty_input_pipeline_completes(spark, tmp_path):
         "extract", "link", "canonicalize", "materialize", "entities"
     }
     assert triples_of(spark, out).count() == 0
-    lin = spark.read.parquet(os.path.join(out, "_lineage"))
+    lin = read_lineage(spark, out)
     assert lin.filter("partition_id = -1").count() == 5
     assert lin.filter("partition_id = -1 AND rows_out <> 0").count() == 0
 
 
-def test_lineage_backfill_after_crash_before_flush(spark, tmp_path):
-    """Lineage is written once per run; a crash between the last stage
-    marker and that batched write must not lose the stages forever.
-    On resume, skipped-but-unflushed stages are reconstructed from
-    their marker JSONs; later no-op resumes append nothing."""
-    import shutil
+def test_lineage_complete_after_crash_mid_build(spark, tmp_path, monkeypatch):
+    """Each stage writes its lineage rows with its marker, so a build
+    that dies in Stage C (after the extract and link markers are
+    durable) and is then resumed leaves exactly one stage-level row
+    per stage, and a later no-op resume adds none."""
+    import pytest
+
+    from lexicator_spark.plans import pipeline as P
 
     corpus = synth.make_corpus(n_convs=12, seed=9)
     df = synth.corpus_df(spark, corpus)
     out = str(tmp_path / "kg")
-    run_pipeline(spark, df, out, resume=False)
-    # simulate the crash window: markers exist, lineage flush didn't
-    shutil.rmtree(os.path.join(out, "_lineage"))
-    os.remove(os.path.join(out, "_checkpoints", "_lineage_flushed.json"))
+
+    def crash(_edges):
+        raise RuntimeError("simulated crash in canonicalize")
+
+    monkeypatch.setattr(P, "connected_components", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_pipeline(spark, df, out, resume=False)
+    assert P._is_done(spark, out, "extract") and P._is_done(spark, out, "link")
+    assert not P._is_done(spark, out, "canonicalize")
+    monkeypatch.undo()
 
     res = run_pipeline(spark, df, out, resume=True)
-    assert res.stages_run == [] and len(res.stages_skipped) == 5
-    lin = spark.read.parquet(os.path.join(out, "_lineage"))
-    stages = {r.stage for r in lin.select("stage").distinct().collect()}
-    assert {"extract", "link", "canonicalize", "materialize", "entities"} <= stages
-    # per-bucket rows survive the round-trip through the marker
-    assert lin.filter("stage = 'extract' AND partition_id >= 0").count() > 0
+    assert res.stages_skipped == ["extract", "link"]
+    lin = read_lineage(spark, out)
+    stage_rows = [r.stage for r in lin.filter("partition_id = -1").collect()]
+    assert sorted(stage_rows) == sorted(
+        ["extract", "link", "canonicalize", "materialize", "entities"]
+    )
+    for stage in ("extract", "materialize"):
+        total = lin.filter(
+            f"stage = '{stage}' AND partition_id = -1"
+        ).collect()[0].rows_out
+        parts = lin.filter(f"stage = '{stage}' AND partition_id >= 0").collect()
+        assert parts and sum(p.rows_out for p in parts) == total
     n = lin.count()
 
     run_pipeline(spark, df, out, resume=True)  # no-op resume
-    assert spark.read.parquet(os.path.join(out, "_lineage")).count() == n
+    assert read_lineage(spark, out).count() == n
+
+
+def test_stage_recorder_runs_no_spark_job(spark, tmp_path):
+    """Finishing a stage (lineage rows + marker) is driver-side
+    small-file I/O: it must never launch a Spark job."""
+    from lexicator_spark.plans import pipeline as P
+
+    sc = spark.sparkContext
+    group = "stage-recorder-no-job"
+    root = str(tmp_path / "kg")
+    sc.setJobGroup(group, "stage recorder")
+    try:
+        P._finish_stage(
+            spark, root, P._new_run_id(), "extract", 3, 1, [(0, 1), (1, 2)]
+        )
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        # control: a job in this group IS seen by the tracker
+        spark.range(1).count()
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
+    assert P._is_done(spark, root, "extract")
+    rows = read_lineage(spark, root).collect()
+    assert sorted((r.partition_id, r.rows_out) for r in rows) == [
+        (-1, 3), (0, 1), (1, 2)
+    ]
 
 
 def test_cli_dedup_paragraphs_and_turns_verbs(spark, tmp_path):

@@ -116,7 +116,7 @@ def test_copy_materialize_equals_union_write(spark, tmp_path):
     """The materialize-by-copy layout (clone raw buckets + append the
     NULL-bucket extras) must read back row-identical to the union
     write it replaces."""
-    from lexicator_spark.plans.refresh import _null_bucket
+    from lexicator_spark.plans.pipeline import _null_bucket
 
     raw_loc = str(tmp_path / "raw")
     df = spark.range(500).select(
@@ -150,6 +150,33 @@ def test_copy_materialize_equals_union_write(spark, tmp_path):
     b = spark.read.schema(a.schema).parquet(copy_loc).drop("p_hash")
     # row-identical as multisets
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+def test_copy_materialize_rejects_non_null_conv_id_extras(spark, tmp_path):
+    """The copy path appends same_as/canonical rows into the NULL-conv_id
+    bucket on the promise that they all carry a NULL conv_id.  An
+    extras row with a conv_id must fail the append job before it
+    commits: none of the extras can be read from the table after."""
+    from lexicator_spark.plans.pipeline import _mark_done, _materialize_by_copy
+
+    root = str(tmp_path / "kg")
+    df = spark.range(100).select(
+        F.concat(F.lit("c"), (F.col("id") % 20).cast("string")).alias("conv_id"),
+        F.col("id").alias("v"),
+    )
+    sio.write_table(df, os.path.join(root, "triples_raw"), n_buckets=8)
+    _mark_done(spark, root, "extract", {"bucket_counts": None})
+    extras = spark.range(5).select(
+        F.when(F.col("id") == 3, F.lit("c3"))
+        .otherwise(F.lit(None).cast("string"))
+        .alias("conv_id"),
+        (F.col("id") + 10_000).alias("v"),
+    )
+    with pytest.raises(Exception, match="NULL conv_id, got c3"):
+        _materialize_by_copy(spark, root, extras, 8)
+    got = sio.read_table(spark, os.path.join(root, "triples"))
+    assert got.filter(F.col("v") >= 10_000).count() == 0
+    assert got.count() == 100
 
 
 def test_copy_buckets_subset_replaces_whole_and_deletes_absent(spark, tmp_path):

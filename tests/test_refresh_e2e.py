@@ -25,7 +25,7 @@ from lexicator_spark.operators.canonicalize import (
     connected_components,
     update_components,
 )
-from lexicator_spark.plans.pipeline import run_pipeline
+from lexicator_spark.plans.pipeline import read_lineage, run_pipeline
 from lexicator_spark.plans.refresh import refresh_pipeline
 from lexicator_spark.sources import io as sio
 
@@ -390,6 +390,18 @@ def test_refresh_pipeline_pruned_feed_path(spark, tmp_path):
         spark, None, root, change_feed=feed, turns_location=raw_turns
     )
     assert res.n_changed == 1 and res.surfaces_added >= 1
+    # a links-changing refresh records one refresh:<stage> lineage row
+    # per stage it refreshed
+    assert res.links_changed
+    refresh_rows = [
+        r.stage
+        for r in read_lineage(spark, root)
+        .filter("partition_id = -1 AND stage LIKE 'refresh:%'")
+        .collect()
+    ]
+    assert sorted(refresh_rows) == sorted(
+        f"refresh:{s}" for s in res.stages_refreshed
+    )
 
     full = str(tmp_path / "full")
     run_pipeline(spark, _df(spark, v1 + extra), full)
