@@ -3,15 +3,19 @@ conversations — the Spark re-design of lexicator's RecentChanges
 delta refresh (SURVEY.md §2 #2, ``ContentStore.refresh`` /
 ``find_recent_changes`` [M]).
 
-Batch form (parquet backend): the processed frontier is the per-conv
-max ``(turn_idx)`` already present in the stage table; new work =
-turns beyond the frontier, PLUS every turn of any conversation that
-gained turns (the extraction window and ``replies_to`` need the whole
-conversation — re-deriving a conversation is idempotent because stage
-writes are keyed dedups).  With Iceberg the frontier bookkeeping is
-replaced by incremental snapshot reads — same function shape.
+Batch form (parquet backend): the processed frontier is the explicit
+``_frontier(conv_id, done_max_idx)`` table stored beside the stage
+table — written at build time (``materialize_frontier``,
+``backfill_triples``) and bucket-upserted by every refresh, so
+zero-triple conversations count as processed.  New work = every turn
+of any conversation that is new or gained turns beyond its frontier
+row (``changed_conversations``; the extraction window and
+``replies_to`` need the whole conversation — re-deriving a
+conversation is idempotent because stage writes are keyed dedups).
+With Iceberg the frontier bookkeeping is replaced by incremental
+snapshot reads — same function shape.
 
-Scale: the frontier aggregate is one shuffle over (conv_id); the
+Scale: detection is one union-aggregate shuffle over (conv_id); the
 anti/semi joins run on conv_id — co-partitioned with the stage
 tables' salted-hash layout, so at 10^12 turns the delta path touches
 only buckets containing changed conversations.
@@ -31,27 +35,49 @@ from lexicator_spark.sources import fsutil
 from lexicator_spark.sources import io as sio
 
 
-def changed_conversations(turns: DataFrame, done_triples: DataFrame) -> DataFrame:
-    """conv_ids that are new or have turns beyond the processed
-    frontier recorded in the stage table.
+def changed_conversations(turns: DataFrame, frontier: DataFrame) -> DataFrame:
+    """``(conv_id, max_idx)`` of every conversation in ``turns`` that is
+    new or has turns beyond its ``frontier`` row (``conv_id,
+    done_max_idx``): the one change detector of the refresh path.
 
-    Caveat: a conversation whose turns produced zero triples has no
-    frontier row and re-derives on every refresh (a no-op — extraction
-    is deterministic).  If that tail matters at scale, persist an
-    explicit ``_frontier(conv_id, max_turn_idx)`` table instead; the
-    join shape below is unchanged."""
-    frontier = done_triples.groupBy("conv_id").agg(
-        F.max("turn_idx").alias("done_max_idx")
+    ONE union-aggregate instead of aggregate + left join: tagging turns
+    rows live=true and frontier rows live=false, a single
+    groupBy(conv_id) computes both sides' maxima — one exchange with
+    map-side partial aggregation (each scan partition ships ~one row
+    per conversation) replaces the aggregate-then-join shape's three
+    exchanges + two sorts (the snapshot aggregate, then both sides
+    re-shuffled for the sort-merge join).  Candidates are conversations
+    present in ``turns`` (max_idx non-null), changed iff no frontier
+    row or the snapshot advanced past it.  ``max_idx`` is the changed
+    conversation's new frontier value, so callers that pin this frame
+    need no second snapshot aggregate.  The plan shape is asserted in
+    tests/test_plans.py."""
+    merged = (
+        turns.select(
+            "conv_id",
+            F.col("turn_idx").alias("idx"),
+            F.lit(True).alias("live"),
+        )
+        .unionByName(
+            frontier.select(
+                "conv_id",
+                F.col("done_max_idx").alias("idx"),
+                F.lit(False).alias("live"),
+            )
+        )
+        .groupBy("conv_id")
+        .agg(
+            F.max(F.when(F.col("live"), F.col("idx"))).alias("max_idx"),
+            F.max(F.when(~F.col("live"), F.col("idx"))).alias("done_max_idx"),
+        )
     )
-    latest = turns.groupBy("conv_id").agg(F.max("turn_idx").alias("max_idx"))
-    return (
-        latest.join(frontier, "conv_id", "left")
-        .filter(
+    return merged.filter(
+        F.col("max_idx").isNotNull()
+        & (
             F.col("done_max_idx").isNull()
             | (F.col("max_idx") > F.col("done_max_idx"))
         )
-        .select("conv_id")
-    )
+    ).select("conv_id", "max_idx")
 
 
 _ISIN_DELTA_MAX = 1000
@@ -87,33 +113,6 @@ def _delta_good_triples(
         delta_turns = turns.join(changed, "conv_id", "left_semi")
     good, _rejects = split_rejects(extract_triples(delta_turns, impl=impl))
     return good
-
-
-def extract_incremental(
-    turns: DataFrame, done_triples: DataFrame, impl: str = "native"
-) -> DataFrame:
-    """Good triples for new/changed conversations only.  Union the
-    result with the untouched part of the stage table (or MERGE under
-    Iceberg) to refresh the stage."""
-    changed = changed_conversations(turns, done_triples)
-    return _delta_good_triples(turns, changed, impl)
-
-
-def refresh_triples(
-    turns: DataFrame, done_triples: DataFrame, impl: str = "native"
-) -> DataFrame:
-    """Full refreshed stage table: untouched conversations' existing
-    triples + re-derived triples for changed conversations.  The
-    changed-conversation set is computed ONCE and feeds both the keep
-    anti-join and the delta extraction."""
-    changed = changed_conversations(turns, done_triples).localCheckpoint(
-        eager=True
-    )
-    kept = done_triples.join(changed, "conv_id", "left_anti")
-    # same_as/canonical rows carry conv_id NULL — they are global and
-    # always recomputed downstream, never kept here
-    kept = kept.filter(F.col("conv_id").isNotNull())
-    return kept.unionByName(_delta_good_triples(turns, changed, impl))
 
 
 def validate_refresh_preconditions(
@@ -594,9 +593,10 @@ def refresh_triples_partitioned(
     done_max_idx)`` table co-located with (and bucket-upserted like)
     the stage table, so conversations that produce zero triples are
     still recorded as processed — a refresh with no new turns rewrites
-    NOTHING (the triples-derived frontier of ``changed_conversations``
-    would re-derive the zero-triple tail forever).  On first refresh
-    of a pre-frontier table the frontier bootstraps from the triples.
+    NOTHING (a frontier derived from the triples would re-derive the
+    zero-triple tail forever).  Detection is ``changed_conversations``
+    against that table.  On first refresh of a pre-frontier table the
+    frontier bootstraps from the triples.
 
     The table's bucketing comes from the ``_buckets.json`` sidecar
     recorded at write time; passing an ``n_buckets`` that contradicts
@@ -652,47 +652,8 @@ def refresh_triples_partitioned(
             )
         else:
             frontier = sio.read_table(spark, floc)
-        # Detection as ONE union-aggregate instead of aggregate + left
-        # join: tagging turns rows live=true and frontier rows
-        # live=false, a single groupBy(conv_id) computes both sides'
-        # maxima — one exchange with map-side partial aggregation
-        # (each scan partition ships ~one row per conversation)
-        # replaces the r5 shape's three exchanges + two sorts (the
-        # snapshot aggregate, then both sides re-shuffled for the
-        # sort-merge join).  Semantics identical: candidates are
-        # conversations present in TURNS (max_idx non-null), changed
-        # iff no frontier row or the snapshot advanced past it.
-        merged = (
-            turns.select(
-                "conv_id",
-                F.col("turn_idx").alias("idx"),
-                F.lit(True).alias("live"),
-            )
-            .unionByName(
-                frontier.select(
-                    "conv_id",
-                    F.col("done_max_idx").alias("idx"),
-                    F.lit(False).alias("live"),
-                )
-            )
-            .groupBy("conv_id")
-            .agg(
-                F.max(F.when(F.col("live"), F.col("idx"))).alias("max_idx"),
-                F.max(F.when(~F.col("live"), F.col("idx"))).alias(
-                    "done_max_idx"
-                ),
-            )
-        )
-        changed_with_max = (
-            merged.filter(
-                F.col("max_idx").isNotNull()
-                & (
-                    F.col("done_max_idx").isNull()
-                    | (F.col("max_idx") > F.col("done_max_idx"))
-                )
-            )
-            .select("conv_id", "max_idx")
-            .localCheckpoint(eager=True)
+        changed_with_max = changed_conversations(turns, frontier).localCheckpoint(
+            eager=True
         )
         changed = changed_with_max.select("conv_id")
     # ONE job answers both "how many changed?" and "which buckets?":

@@ -540,7 +540,7 @@ def run_pipeline(
     # likewise materialize the per-bucket surface-universe stats
     # (_surface_stats) the end-to-end refresh maintains — one
     # aggregate over the mention triples this build just wrote, so
-    # the first --refresh-e2e never pays a full-table bootstrap and
+    # the first --refresh never pays a full-table bootstrap and
     # the table is born consistent with the downstream stages.
     #
     # Both sidecar builds are INDEPENDENT of stages B-D (they read the

@@ -1,12 +1,13 @@
 """End-to-end incremental pipeline refresh — the RecentChanges analog
-propagated through EVERY stage, not just extraction.
+propagated through EVERY stage, not just extraction.  This is the one
+refresh path: the CLI's ``--refresh`` runs :func:`refresh_pipeline`.
 
-``__main__ --refresh`` (and ``refresh_triples_partitioned``) keep the
-Stage-A table O(delta), but then drop the downstream checkpoints and
-recompute link → canonicalize → materialize → entities from scratch:
-Stage B re-derives the distinct surface universe with a full-corpus
-shuffle, Stage C re-runs the global connected-components fixpoint, and
-Stage D rewrites the whole materialized table.  At 10^12 turns a
+Refreshing only the Stage-A table O(delta)
+(``refresh_triples_partitioned``) and then recomputing link →
+canonicalize → materialize → entities from scratch would re-derive the
+distinct surface universe with a full-corpus shuffle (Stage B), re-run
+the global connected-components fixpoint (Stage C) and rewrite the
+whole materialized table (Stage D).  At 10^12 turns a
 ten-conversation delta must not cost four corpus-wide jobs.
 
 :func:`refresh_pipeline` makes the downstream stages O(delta) too, by
@@ -45,7 +46,8 @@ prior build (all five stage markers present): refreshing a root whose
 downstream stages are stale relative to ``triples_raw`` (e.g. after a
 Stage-A-only ``refresh_triples_partitioned`` without the downstream
 recompute) would silently miss that earlier delta — detected where
-cheap, documented here where not.
+cheap, documented here where not.  The CLI finishes a partly built
+root with ``run_pipeline(resume=True)`` before it refreshes.
 """
 
 from __future__ import annotations
@@ -53,6 +55,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,9 +77,6 @@ from lexicator_spark.operators.link import build_catalog, link_surfaces
 from lexicator_spark.plans import pipeline as P
 from lexicator_spark.sources import fsutil
 from lexicator_spark.sources import io as sio
-
-# re-exported under the historical name; the authority is pipeline.STAGES
-STAGES = P.STAGES
 
 
 @dataclass
@@ -131,7 +131,7 @@ def recover_inflight_refresh(spark: SparkSession, out_root: str) -> bool:
     divergence."""
     if not fsutil.exists(spark, _inflight_path(out_root)):
         return False
-    for stage in STAGES[1:]:
+    for stage in P.STAGES[1:]:
         fsutil.delete(
             spark, os.path.join(out_root, "_checkpoints", f"{stage}.json")
         )
@@ -141,7 +141,7 @@ def recover_inflight_refresh(spark: SparkSession, out_root: str) -> bool:
     # (_delta_bucket_counts) and the copy-materialize counts don't
     # perpetuate pre-crash numbers for the buckets the dead refresh
     # rewrote
-    ck = os.path.join(out_root, "_checkpoints", f"{STAGES[0]}.json")
+    ck = os.path.join(out_root, "_checkpoints", f"{P.STAGES[0]}.json")
     if fsutil.exists(spark, ck):
         marker = json.loads(fsutil.read_text(spark, ck))
         counts = P._bucket_counts(
@@ -204,11 +204,12 @@ def ensure_surface_stats(
     table AS OF the last downstream (link/canonicalize) sync — it is
     the record of the surface universe Stage B last saw.  Every path
     that mutates ``triples_raw`` keeps it that way: ``refresh_pipeline``
-    updates stats and downstream together; CLI ``--refresh`` updates
-    stats for its touched buckets and then recomputes downstream in
-    full; stream-epoch compaction deliberately does NOT touch stats —
-    the next detection-mode refresh re-detects the compacted
-    conversations from the frontier and squares both up."""
+    updates stats and downstream together (so does the CLI's
+    ``--refresh``, which runs it); crash recovery drops the table and
+    rebuilds it with the downstream stages; stream-epoch compaction
+    deliberately does NOT touch stats — the next detection-mode
+    refresh re-detects the compacted conversations from the frontier
+    and squares both up."""
     loc = _stats_location(out_root)
     if not fsutil.exists(spark, os.path.join(loc, "_schema.json")):
         raw = sio.read_table(
@@ -302,13 +303,13 @@ def update_stage_bucket_counts(
     touched: list[int],
 ) -> None:
     """Keep a stage marker's per-bucket counts current after an
-    out-of-band mutation of its table (CLI ``--refresh`` refreshes
-    triples_raw without going through ``refresh_pipeline``; stream
-    compaction folds epochs into it) — otherwise the next
-    ``refresh_pipeline``'s O(delta) lineage counts would merge against
-    stale untouched-bucket numbers and persist the error back into the
-    marker.  Same O(delta) merge as ``_delta_bucket_counts``; no-op
-    when the root has no marker for the stage (standalone tables)."""
+    out-of-band mutation of its table (stream compaction folds epochs
+    into triples_raw without going through ``refresh_pipeline``) —
+    otherwise the next ``refresh_pipeline``'s O(delta) lineage counts
+    would merge against stale untouched-bucket numbers and persist the
+    error back into the marker.  Same O(delta) merge as
+    ``_delta_bucket_counts``; no-op when the root has no marker for
+    the stage (standalone tables)."""
     try:
         marker = P._read_marker(spark, out_root, stage)
     except Exception:
@@ -377,7 +378,7 @@ def refresh_pipeline(
             ),
         )
         end_refresh(spark, out_root)
-    for stage in STAGES:
+    for stage in P.STAGES:
         if not P._is_done(spark, out_root, stage):
             raise ValueError(
                 f"refresh_pipeline needs a complete prior build: stage "
@@ -414,8 +415,6 @@ def refresh_pipeline(
             .select("surface_form")
             .localCheckpoint(eager=True)  # pinned: the files move next
         )
-
-    from concurrent.futures import ThreadPoolExecutor
 
     side_pool = ThreadPoolExecutor(max_workers=1)
     old_totals_future = side_pool.submit(_pin_old_totals)
@@ -642,8 +641,6 @@ def refresh_pipeline(
             else sio.read_table(spark, entities_path).count()
         )
         return n, int((time.monotonic() - t0) * 1000)
-
-    from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_d = pool.submit(_stage_d)

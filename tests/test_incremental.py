@@ -8,8 +8,6 @@ from lexicator_spark import synth
 from lexicator_spark.operators.extract import extract_triples
 from lexicator_spark.operators.incremental import (
     changed_conversations,
-    extract_incremental,
-    refresh_triples,
     refresh_triples_partitioned,
 )
 from lexicator_spark.sources import io as sio
@@ -22,7 +20,15 @@ def _tset(df):
     }
 
 
-def test_incremental_refresh_equals_full_recompute(spark):
+def frontier_from(triples):
+    """The processed frontier a triples table implies (the refresh's
+    bootstrap shape): per-conversation max turn_idx."""
+    from pyspark.sql import functions as F
+
+    return triples.groupBy("conv_id").agg(F.max("turn_idx").alias("done_max_idx"))
+
+
+def test_incremental_refresh_equals_full_recompute(spark, tmp_path):
     full_corpus = synth.make_corpus(n_convs=50, seed=33, shuffled=False)
     # v1 = drop the last turn of every 3rd conversation + drop every
     # 7th conversation entirely → those convs are "changed/new" in v2
@@ -39,7 +45,9 @@ def test_incremental_refresh_equals_full_recompute(spark):
     v2 = synth.corpus_df(spark, full_corpus)
 
     done = extract_triples(v1).localCheckpoint()
-    changed = {r.conv_id for r in changed_conversations(v2, done).collect()}
+    changed = {
+        r.conv_id for r in changed_conversations(v2, frontier_from(done)).collect()
+    }
     expected = {
         c for c in {r[0] for r in full_corpus.rows}
         if int(c[1:]) % 7 == 0 or int(c[1:]) % 3 == 0
@@ -51,8 +59,13 @@ def test_incremental_refresh_equals_full_recompute(spark):
     with_triples = {r.conv_id for r in done.select("conv_id").distinct().collect()}
     assert all(c not in with_triples for c in changed - expected)
 
-    refreshed = refresh_triples(v2, done)
-    assert _tset(refreshed) == _tset(extract_triples(v2))
+    # the refresh bootstraps the same frontier from the stage table
+    # (no _frontier yet) and ends equal to a full recompute
+    loc = str(tmp_path / "triples_raw")
+    sio.write_table(done, loc, partition_key="conv_id", n_buckets=4)
+    res = refresh_triples_partitioned(spark, v2, loc)
+    assert res.n_changed == len(changed)
+    assert _tset(res.table) == _tset(extract_triples(v2))
 
 
 def _file_state(root):
@@ -125,14 +138,6 @@ def test_partitioned_refresh_upserts_only_touched_buckets(spark, tmp_path):
     # and omitting it uses the recorded value
     auto = refresh_triples_partitioned(spark, v2, loc)
     assert auto.n_changed == 0
-
-
-def test_incremental_noop_when_nothing_changed(spark):
-    corpus = synth.make_corpus(n_convs=20, seed=5)
-    turns = synth.corpus_df(spark, corpus)
-    done = extract_triples(turns).localCheckpoint()
-    assert extract_incremental(turns, done).count() == 0
-    assert _tset(refresh_triples(turns, done)) == _tset(done)
 
 
 def test_read_turns_jsonl_and_csv_equal_parquet(spark, tmp_path):

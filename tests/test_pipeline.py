@@ -241,8 +241,7 @@ def test_cli_graph_verb(spark, tmp_path):
 
 def test_cli_full_run_then_incremental_refresh(tmp_path):
     """CLI driver (SURVEY §2 #13): full run, then --refresh on the same
-    out root — extract is served by the partition-level upsert (stage
-    skipped), downstream stages recompute."""
+    out root — refresh_pipeline updates every stage table O(delta)."""
     import json
     import subprocess
     import sys
@@ -264,42 +263,25 @@ def test_cli_full_run_then_incremental_refresh(tmp_path):
         "extract", "link", "canonicalize", "materialize", "entities"
     }
 
-    # grow the corpus → refresh re-extracts the new conversations and
-    # recomputes downstream stages
-    msgs = run_cli(80, "--refresh")
-    stats = next(m for m in msgs if "refreshed_convs" in m)
-    assert stats["refreshed_convs"] > 0 and stats["buckets_touched"] > 0
-    final = msgs[-1]
-    assert "extract" in final["stages_skipped"]
-    assert {"link", "canonicalize", "materialize", "entities"} <= set(
-        final["stages_run"]
-    )
-
-    # same corpus again → true no-op: nothing re-extracted, every
-    # checkpoint kept, no stage recomputed
-    msgs = run_cli(80, "--refresh")
-    stats = next(m for m in msgs if "refreshed_convs" in m)
-    assert stats == {"refreshed_convs": 0, "buckets_touched": 0}
-    final = msgs[-1]
-    assert final["stages_run"] == []
-
-    # --refresh-e2e: grow again — every stage table is updated
-    # O(delta) in one verb (no downstream stage recompute jobs)
-    stats = run_cli(100, "--refresh-e2e")[-1]
-    assert stats["refreshed_convs"] >= 20
+    # grow the corpus → the new conversations are re-extracted and
+    # every stage table is updated in place (no stage recompute)
+    stats = run_cli(80, "--refresh")[-1]
+    assert stats["refreshed_convs"] >= 20 and stats["buckets_touched"] > 0
     assert "extract" in stats["stages_refreshed"]
     assert {"materialize", "entities"} <= set(stats["stages_refreshed"])
 
-    # and the e2e no-op: same corpus → zero stages touched
-    stats = run_cli(100, "--refresh-e2e")[-1]
-    assert stats["refreshed_convs"] == 0
+    # same corpus again → true no-op: nothing re-extracted, no stage
+    # touched
+    stats = run_cli(80, "--refresh")[-1]
+    assert stats["refreshed_convs"] == 0 and stats["buckets_touched"] == 0
     assert stats["stages_refreshed"] == []
 
 
 def test_cli_flag_conflicts_error_before_jvm():
-    # both refresh verbs must REJECT a --stage cutoff (and --refresh-e2e
-    # the build-only flags) instead of silently ignoring it; argparse
-    # errors fire before any SparkSession is built, so this is JVM-free
+    # --refresh must REJECT a --stage cutoff and the build-only flags
+    # instead of silently ignoring them, and the removed --refresh-e2e
+    # is an unknown flag; argparse errors fire before any SparkSession
+    # is built, so this is JVM-free
     import pytest
 
     from lexicator_spark.__main__ import main
@@ -307,9 +289,9 @@ def test_cli_flag_conflicts_error_before_jvm():
     base = ["--synth", "5", "--out", "/tmp/unused"]
     for extra in (
         ["--refresh", "--stage", "extract"],
-        ["--refresh-e2e", "--stage", "extract"],
-        ["--refresh-e2e", "--no-resume"],
-        ["--refresh-e2e", "--backfill", "4"],
+        ["--refresh", "--no-resume"],
+        ["--refresh", "--backfill", "4"],
+        ["--refresh-e2e"],
     ):
         with pytest.raises(SystemExit) as exc:
             main(base + extra)
@@ -490,13 +472,13 @@ def test_cli_stage_cutoff(tmp_path):
 
     out = str(tmp_path / "kg")
 
-    def run_cli(*extra, expect_rc=0):
+    def run_cli(*extra):
         r = subprocess.run(
             [sys.executable, "-m", "lexicator_spark",
              "--synth", "30", "--out", out, "--cpus", "4", *extra],
             capture_output=True, text=True, cwd="/root/repo", timeout=420,
         )
-        assert r.returncode == expect_rc, r.stdout[-2000:] + r.stderr[-2000:]
+        assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
         return [json.loads(l) for l in r.stdout.splitlines()
                 if l.startswith("{")]
 
@@ -508,19 +490,21 @@ def test_cli_stage_cutoff(tmp_path):
     assert second["stages_skipped"] == ["extract"]
     assert second["stages_run"] == ["link", "canonicalize"]
 
-    final = run_cli()[-1]
-    assert final["stages_run"] == ["materialize", "entities"]
-
-    # --refresh recomputes every downstream stage; a cutoff would
-    # close its crash-recovery window with stale stages → refused
-    run_cli("--refresh", "--stage", "link", expect_rc=2)
+    # --refresh on the partly built root finishes the build from the
+    # checkpoints, then refreshes (a no-op: same corpus)
+    *_, build, refresh = run_cli("--refresh")
+    assert build["stages_run"] == ["materialize", "entities"]
+    assert refresh["refreshed_convs"] == 0
+    for stage in ("extract", "link", "canonicalize", "materialize", "entities"):
+        assert os.path.exists(os.path.join(out, "_checkpoints", f"{stage}.json"))
 
 
 def test_cli_refresh_recovers_after_crash(tmp_path):
-    """An in-flight marker left by a --refresh that died between its
-    raw upsert and the downstream recompute must force the next
-    --refresh to recompute the downstream stages even when its own
-    delta is empty (the crashed delta is undetectable by then)."""
+    """An in-flight marker left by a refresh that died between its raw
+    upsert and the downstream sync must force the next --refresh to
+    rebuild the downstream stages even when its own delta is empty
+    (the crashed delta is undetectable by then)."""
+    import glob
     import json
     import subprocess
     import sys
@@ -537,22 +521,25 @@ def test_cli_refresh_recovers_after_crash(tmp_path):
         return [json.loads(l) for l in r.stdout.splitlines()
                 if l.startswith("{")]
 
+    def runs_of(stage):
+        return len(glob.glob(os.path.join(out, "_lineage", f"*-{stage}.jsonl")))
+
+    downstream = ("link", "canonicalize", "materialize", "entities")
     run_cli()
     marker = os.path.join(out, "_checkpoints", "_refresh_inflight.json")
     with open(marker, "w") as f:
         f.write('{"inflight": true}')
 
-    msgs = run_cli("--refresh")  # same corpus → no new delta
-    stats = next(m for m in msgs if "refreshed_convs" in m)
+    stats = run_cli("--refresh")[-1]  # same corpus → no new delta
     assert stats["refreshed_convs"] == 0
-    final = msgs[-1]
-    # recovery dropped the stale downstream markers → recomputed
-    assert {"link", "canonicalize", "materialize", "entities"} <= set(
-        final["stages_run"]
-    )
+    # recovery rebuilt link…entities from the raw table: each wrote
+    # a second run's lineage file; extraction did not re-run
+    assert [runs_of(s) for s in downstream] == [2, 2, 2, 2]
+    assert runs_of("extract") == 1
     assert not os.path.exists(marker)
 
     # and without a crash, the no-op stays a no-op
-    msgs = run_cli("--refresh")
-    assert msgs[-1]["stages_run"] == []
+    stats = run_cli("--refresh")[-1]
+    assert stats["stages_refreshed"] == []
+    assert [runs_of(s) for s in downstream] == [2, 2, 2, 2]
     assert not os.path.exists(marker)

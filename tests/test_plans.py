@@ -250,3 +250,34 @@ def test_pagerank_step_has_no_broadcast_nested_loop(spark):
     plan = _plan(step)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def _plan_nodes(plan: str) -> list[str]:
+    """Operator names of a formatted plan, one per node (from its
+    numbered detail headers, e.g. ``(7) Exchange``)."""
+    import re
+
+    return re.findall(r"^\(\d+\) (\w+)", plan, flags=re.M)
+
+
+def test_refresh_detection_is_one_exchange_no_join(spark, tmp_path):
+    """Refresh change detection is one union-aggregate: turns and
+    frontier rows share ONE exchange and no join.  The aggregate +
+    left-join shape it replaced planned a second exchange (shuffle or
+    broadcast) and a join node, and at scale a sort-merge join over
+    both re-shuffled sides."""
+    from lexicator_spark.operators.incremental import changed_conversations
+
+    corpus = synth.make_corpus(n_convs=30, seed=2)
+    turns_path = str(tmp_path / "turns")
+    synth.corpus_df(spark, corpus).write.parquet(turns_path)
+    turns = spark.read.parquet(turns_path)
+    frontier_path = str(tmp_path / "frontier")
+    turns.groupBy("conv_id").agg(
+        F.max("turn_idx").alias("done_max_idx")
+    ).write.parquet(frontier_path)
+    frontier = spark.read.parquet(frontier_path)
+
+    nodes = _plan_nodes(_plan(changed_conversations(turns, frontier)))
+    assert [n for n in nodes if "Join" in n] == [], nodes
+    assert [n for n in nodes if n.endswith("Exchange")] == ["Exchange"], nodes

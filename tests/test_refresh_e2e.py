@@ -253,53 +253,6 @@ def test_surface_stats_materialized_at_build(spark, tmp_path):
     assert key(rolled) == key(twin)
 
 
-def test_mixed_refresh_verbs_stay_consistent(spark, tmp_path):
-    """The CLI --refresh flow (Stage-A upsert + stats update + full
-    downstream recompute) followed by a --refresh-e2e must equal a
-    fresh build: the stats table records the universe the downstream
-    sync saw, whichever verb performed the sync."""
-    import os
-    from datetime import timedelta
-
-    from lexicator_spark.operators.incremental import (
-        refresh_triples_partitioned,
-    )
-    from lexicator_spark.plans.refresh import update_surface_stats
-    from lexicator_spark.sources import fsutil
-
-    t0 = synth.EPOCH + timedelta(days=9)
-
-    def turn(conv, idx, text, secs):
-        return (conv, idx, "user", text, None, t0 + timedelta(seconds=secs))
-
-    v1 = synth.make_corpus(n_convs=20, seed=5, shuffled=False).rows
-    root = str(tmp_path / "kg")
-    run_pipeline(spark, _df(spark, v1), root)
-
-    # verb 1: Stage-A-only refresh + stats update + downstream
-    # recompute (exactly what __main__ --refresh does); the delta
-    # plants a NEW linkable surface, so a stale stats table would
-    # poison the NEXT refresh's universe diff
-    v2 = v1 + [turn("zmix01", 0, f"note [[{LINKED_ADD}]] here", 1)]
-    res = refresh_triples_partitioned(
-        spark, _df(spark, v2), f"{root}/triples_raw"
-    )
-    assert res.n_changed == 1
-    update_surface_stats(spark, root, list(res.touched_buckets))
-    for stage in ("link", "canonicalize", "materialize", "entities"):
-        fsutil.delete(spark, os.path.join(root, "_checkpoints", f"{stage}.json"))
-    run_pipeline(spark, _df(spark, v2), root, resume=True)
-
-    # verb 2: e2e refresh of a second delta — correct only if verb 1
-    # left stats ≡ the universe its downstream recompute saw
-    v3 = v2 + [turn("zmix02", 0, "plain filler, and [[DuckDB]]", 2)]
-    res2 = refresh_pipeline(spark, _df(spark, v3), root)
-    assert res2.n_changed == 1
-    full = str(tmp_path / "full")
-    run_pipeline(spark, _df(spark, v3), full)
-    _assert_stages_equal(spark, root, full)
-
-
 def test_compact_then_e2e_refresh_restores_consistency(spark, tmp_path):
     """The streaming→serving loop composes with the e2e refresh: new
     conversations land via the extract stream, compaction folds them
