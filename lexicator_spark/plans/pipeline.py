@@ -233,7 +233,7 @@ def _materialize_by_copy(
     caller writes the union instead."""
     raw_path = os.path.join(root, "triples_raw")
     triples_path = os.path.join(root, "triples")
-    if sio.iceberg_available(spark) and not sio._is_path(triples_path):
+    if not sio._is_path(triples_path) and sio.iceberg_available(spark):
         return None
     layout = {"partition_key": "conv_id", "n_buckets": n_buckets}
     if sio.read_bucket_meta(spark, raw_path) != layout or (

