@@ -200,15 +200,38 @@ def _null_bucket(spark: SparkSession, n_buckets: int) -> int:
     return _NULL_BUCKET_MEMO[n_buckets]
 
 
+def _check_bucket_layout(
+    spark: SparkSession, location: str, n_buckets: int | None = None
+) -> int:
+    """The one layout rule of the stage tables Stage D copies between:
+    the ``_buckets.json`` at ``location`` must record
+    ``{"partition_key": "conv_id", "n_buckets": n_buckets}`` (any
+    modulus when ``n_buckets`` is None), or a ``ValueError`` names the
+    found and expected layouts.  Runs where a root is opened, before
+    anything is written.  Returns the checked modulus."""
+    found = sio.read_bucket_meta(spark, location)
+    if n_buckets is None and found is not None:
+        n_buckets = found.get("n_buckets")
+    expected = {"partition_key": "conv_id", "n_buckets": n_buckets}
+    if found != expected:
+        raise ValueError(
+            f"{location} is bucketed as {found} (_buckets.json), expected "
+            f"{expected}: the stage tables under a root share one "
+            "conv_id bucket layout"
+        )
+    return n_buckets
+
+
 def _materialize_by_copy(
     spark: SparkSession,
     root: str,
     extras: DataFrame,
     n_buckets: int,
     touched: list[int] | None = None,
-) -> list[tuple[int, int]] | None:
-    """Stage D without recomputation, for build (``touched=None``: the
-    whole table) and refresh (only the ``touched`` buckets).
+) -> list[tuple[int, int]]:
+    """Stage D, the only writer of ``triples``, for build
+    (``touched=None``: the whole table) and refresh (only the
+    ``touched`` buckets).
 
     ``triples`` is ``triples_raw`` ∪ ``extras`` (same_as ∪ canonical),
     bucketed by the same ``(conv_id, n_buckets)`` scheme as the raw
@@ -217,30 +240,23 @@ def _materialize_by_copy(
     except the NULL bucket, which also holds the extras.  Clone the
     raw bucket dirs at the FS level (``sio.copy_buckets`` — a
     server-side copy on an object store), then append the extras into
-    the NULL bucket when it is in scope.  This skips the union's
-    full-table exchange and parquet re-encode.  Identical content to
-    the union write (tests/test_r06_internals.py, and the refresh
-    row-identity tests).
+    the NULL bucket when it is in scope.  This skips a union's
+    full-table exchange and parquet re-encode, with identical content
+    (tests/test_r06_internals.py, and the refresh row-identity tests).
+
+    Precondition, checked by the callers where they open the root
+    (``_check_bucket_layout``): ``triples_raw`` — and on refresh
+    ``triples`` — is bucketed on conv_id at ``n_buckets``.  So only
+    the whole-table copy writes ``triples/_buckets.json``.
 
     The NULL-conv_id invariant is checked row-inline on the append
     job: a non-NULL conv_id fails that job before it commits, so no
     extras row lands in a bucket it does not hash to.
 
-    Returns the written buckets' counts (the extract marker's raw
-    counts, plus the appended count on the NULL bucket), or None when
-    the copy does not apply — the catalog backend, or a raw (or, on
-    refresh, materialized) table bucketed some other way — and the
-    caller writes the union instead."""
+    Returns the written buckets' counts: the extract marker's raw
+    counts, plus the appended count on the NULL bucket."""
     raw_path = os.path.join(root, "triples_raw")
     triples_path = os.path.join(root, "triples")
-    if not sio._is_path(triples_path) and sio.iceberg_available(spark):
-        return None
-    layout = {"partition_key": "conv_id", "n_buckets": n_buckets}
-    if sio.read_bucket_meta(spark, raw_path) != layout or (
-        touched is not None
-        and sio.read_bucket_meta(spark, triples_path) != layout
-    ):
-        return None
     raw_counts = _read_marker(spark, root, "extract").get("bucket_counts")
     if raw_counts is None:
         # pre-counts extract marker: one footer scan of the raw table
@@ -282,7 +298,8 @@ def _materialize_by_copy(
             n_buckets,
         ).schema.json(),
     )
-    sio._write_bucket_meta(spark, triples_path, "conv_id", n_buckets)
+    if touched is None:
+        sio._write_bucket_meta(spark, triples_path, "conv_id", n_buckets)
     return sorted(counts.items())
 
 
@@ -293,7 +310,6 @@ def run_pipeline(
     resume: bool = True,
     impl: str = "native",
     n_buckets: int = sio.DEFAULT_BUCKETS,
-    lineage_input_counts: bool = True,
     backfill_groups: int | None = None,
     turns_source: str | None = None,
     stop_after: str | None = None,
@@ -304,11 +320,11 @@ def run_pipeline(
     ``--stage X`` contract: run up to and including X) — checkpoints
     make a later full run resume exactly where this one stopped.
 
-    ``lineage_input_counts=False`` records -1 for ``rows_in`` instead
-    of counting each stage's input: stage inputs that are persisted
-    parquet count from footer metadata (cheap), but a raw CSV/JSON
-    turns source would be re-parsed end to end just for the lineage
-    row — disable it there.
+    A resume that skips a finished extraction first checks that
+    ``triples_raw`` is bucketed on conv_id at ``n_buckets``
+    (``_check_bucket_layout``): Stage D copies its bucket files, so a
+    raw table at another modulus is refused before anything is
+    written.
 
     ``backfill_groups=N`` builds Stage A via
     ``incremental.backfill_triples`` — N bucket-aligned chunked
@@ -323,6 +339,8 @@ def run_pipeline(
     Stage tables under ``out_root``:
       triples_raw/   Stage A output (+ rejects/ error channel)
       triples/       A + same_as + canonical_of, final graph edges
+                     (raw bucket files copied, extras appended:
+                     ``_materialize_by_copy``)
       entities/      canonical_id → surface_form rows
     """
     if stop_after is not None and stop_after not in STAGES:
@@ -389,11 +407,7 @@ def run_pipeline(
         wall_ms = int((time.monotonic() - t0) * 1000)
         finish(
             name, rows_out, wall_ms, buckets,
-            rows_in=(
-                in_df.count()
-                if in_df is not None and lineage_input_counts
-                else -1
-            ),
+            rows_in=in_df.count() if in_df is not None else -1,
             n_partitions=persisted.rdd.getNumPartitions(),
         )
         return persisted
@@ -460,11 +474,11 @@ def run_pipeline(
     # good-side bucketed write.
 
     # when extraction runs THIS invocation, its pinned output is kept
-    # here so stage D can union straight from the checkpoint instead
+    # here so stage B can link straight from the checkpoint instead
     # of re-reading the just-written parquet (identical rows by
     # determinism: the raw table holds exactly these rows); on a
-    # marker-skipped resume the list stays empty and stage D reads
-    # the persisted table as before
+    # marker-skipped resume the list stays empty and stage B reads
+    # the persisted table
     stage_a_ckpt: list[DataFrame] = []
 
     def stage_a():
@@ -494,9 +508,11 @@ def run_pipeline(
         )
         return good
 
-    if backfill_groups is not None and not (
-        resume and _is_done(spark, out_root, "extract")
-    ):
+    extract_done = resume and _is_done(spark, out_root, "extract")
+    if extract_done:
+        # an earlier run wrote the raw table Stage D will copy
+        _check_bucket_layout(spark, raw_path, n_buckets)
+    if backfill_groups is not None and not extract_done:
         from lexicator_spark.operators.incremental import backfill_triples
 
         t0 = time.monotonic()
@@ -519,7 +535,7 @@ def run_pipeline(
         )
         finish(
             "extract", rows_out, int((time.monotonic() - t0) * 1000), buckets,
-            rows_in=turns.count() if lineage_input_counts else -1,
+            rows_in=turns.count(),
             n_partitions=triples_a.rdd.getNumPartitions(),
         )
     else:
@@ -606,21 +622,15 @@ def run_pipeline(
                 os.path.join(out_root, "canonical"), None,
             )
 
-        # Stage D — materialize final graph tables
-        def stage_d():
-            raw_src = stage_a_ckpt[0] if stage_a_ckpt else triples_a
-            return raw_src.unionByName(same_as).unionByName(canonical)
-
+        # Stage D — materialize the final graph table by file copy
         if _runs("materialize"):
-            t0 = time.monotonic()
-            buckets = None
-            if not (resume and _is_done(spark, out_root, "materialize")):
+            if resume and _is_done(spark, out_root, "materialize"):
+                skipped.append("materialize")
+            else:
+                t0 = time.monotonic()
                 buckets = _materialize_by_copy(
                     spark, out_root, same_as.unionByName(canonical), n_buckets
                 )
-            if buckets is None:
-                staged("materialize", None, stage_d, triples_path, "conv_id")
-            else:
                 finish(
                     "materialize", sum(c for _, c in buckets),
                     int((time.monotonic() - t0) * 1000), buckets,

@@ -264,13 +264,13 @@ def _delta_bucket_counts(
     buckets keep the counts recorded in the stage's checkpoint marker
     (written at build time and maintained by every refresh), only the
     rewritten buckets are re-counted through a partition-pruned read —
-    or, when the caller passes ``fresh_counts`` (the value
-    ``sio.upsert_partitions`` returns from its became-empty probe),
-    with ZERO extra jobs.  Falls back to one full ``_bucket_counts``
-    pass when the marker carries no counts (pre-counts root) — a
-    refresh must never pay a corpus-wide job for lineage bookkeeping
-    (this module's own contract: 'a ten-conversation delta must not
-    cost corpus-wide jobs')."""
+    or, when the caller passes ``fresh_counts`` (the rewritten buckets'
+    counts that ``sio.upsert_partitions`` or ``_materialize_by_copy``
+    returns), with ZERO extra jobs.  Falls back to one full
+    ``_bucket_counts`` pass when the marker carries no counts
+    (pre-counts root) — a refresh must never pay a corpus-wide job for
+    lineage bookkeeping (this module's own contract: 'a
+    ten-conversation delta must not cost corpus-wide jobs')."""
     try:
         prior = P._read_marker(spark, out_root, stage).get("bucket_counts")
     except Exception:
@@ -359,22 +359,16 @@ def refresh_pipeline(
         # frontier advanced with the upsert).  Rebuild the downstream
         # stages in full from the raw table before processing this
         # call's delta — rare crash path, O(corpus) downstream, never
-        # a re-extraction.  The rebuild MUST inherit the root's bucket
-        # modulus: run_pipeline's default would rebucket `triples` to
-        # DEFAULT_BUCKETS and the co-upsert modulus check below would
-        # then refuse every future refresh of a non-default root.
+        # a re-extraction.  The rebuild inherits the raw table's bucket
+        # modulus: run_pipeline refuses a raw table at any other one.
         recovery_turns = (
             turns if turns is not None
             else sio.read_table(spark, turns_location)
         )
-        raw_meta = sio.read_bucket_meta(
-            spark, os.path.join(out_root, "triples_raw")
-        )
         P.run_pipeline(
             spark, recovery_turns, out_root, resume=True, impl=impl,
-            lineage_input_counts=False,
-            n_buckets=(
-                raw_meta["n_buckets"] if raw_meta else sio.DEFAULT_BUCKETS
+            n_buckets=P._check_bucket_layout(
+                spark, os.path.join(out_root, "triples_raw")
             ),
         )
         end_refresh(spark, out_root)
@@ -391,14 +385,11 @@ def refresh_pipeline(
     canonical_path = os.path.join(out_root, "canonical")
     entities_path = os.path.join(out_root, "entities")
 
-    meta = sio.read_bucket_meta(spark, raw_path)
-    n_buckets = meta["n_buckets"] if meta else sio.DEFAULT_BUCKETS
-    mat_meta = sio.read_bucket_meta(spark, triples_path)
-    if mat_meta and mat_meta["n_buckets"] != n_buckets:
-        raise ValueError(
-            f"triples_raw ({n_buckets} buckets) and triples "
-            f"({mat_meta['n_buckets']}) disagree — cannot co-upsert"
-        )
+    # Stage D copies raw buckets over materialized ones: both tables
+    # must record one conv_id layout, checked before anything is
+    # written (a refused refresh leaves no in-flight marker)
+    n_buckets = P._check_bucket_layout(spark, raw_path)
+    P._check_bucket_layout(spark, triples_path, n_buckets)
 
     # ── surface universe, BEFORE the stats upsert ────────────────
     # The old-universe pin only has to land before update_surface_stats
@@ -580,7 +571,7 @@ def refresh_pipeline(
         same_as_new = sio.read_table(spark, same_as_path)
         canonical_new = sio.read_table(spark, canonical_path)
 
-    # ── Stage D (materialize upsert) ∥ entities ──────────────────
+    # ── Stage D (materialize by copy) ∥ entities ─────────────────
     # The two closing stages read disjoint inputs (D: raw buckets +
     # the pinned link/canonical frames; entities: the pinned frames +
     # the stats rollup) and write disjoint tables — run them as two
@@ -600,23 +591,6 @@ def refresh_pipeline(
             spark, out_root, same_as_new.unionByName(canonical_new),
             n_buckets, touched=mat_touched,
         )
-        if fresh is None:
-            repl = (
-                sio.read_table(spark, raw_path, keep_bucket_col=True)
-                .filter(F.col("p_hash").isin(mat_touched))
-                .drop("p_hash")
-            )
-            if nb in mat_touched:
-                # the NULL bucket is rewritten whole: raw rows hashing
-                # there plus EVERY same_as/canonical row (changed or not)
-                repl = repl.unionByName(same_as_new).unionByName(canonical_new)
-            fresh = sio.upsert_partitions(
-                repl,
-                triples_path,
-                partition_key="conv_id",
-                n_buckets=n_buckets,
-                touched_buckets=mat_touched,
-            )
         mat_buckets = _delta_bucket_counts(
             spark, triples_path, out_root, "materialize", mat_touched,
             fresh_counts=fresh,

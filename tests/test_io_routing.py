@@ -118,10 +118,14 @@ def test_filesystem_paths_never_probe_iceberg(spark, monkeypatch, tmp_path):
     )
     t0 = synth.EPOCH + timedelta(days=3)
     extra = [("c000001", 500, "user", "a new filler turn", None, t0)]
+    # the refresh checks the layout at entry, so Stage D's partial copy
+    # keeps the materialized table's _buckets.json
+    rewrites.clear()
     res = refresh_pipeline(
         spark, synth.corpus_df(spark, synth.Corpus(rows=rows + extra)), root
     )
     assert res.n_changed == 1
+    assert os.path.join(root, "triples") not in rewrites
 
 
 def test_fsutil_resolves_jvm_classes_once(spark, monkeypatch, tmp_path):

@@ -97,6 +97,27 @@ def test_pipeline_resume_mid_run(spark, tmp_path):
     assert _tset(triples_of(spark, out)) == want
 
 
+def test_resume_refuses_raw_table_at_another_modulus(spark, tmp_path):
+    """Stage D copies the raw table's bucket files, so a resume that
+    skips a finished extraction must refuse a raw table bucketed at
+    another modulus, naming both layouts, before it writes `triples`
+    (a table refresh_pipeline would later refuse)."""
+    import re
+
+    import pytest
+
+    df = synth.corpus_df(spark, synth.make_corpus(n_convs=20, seed=8))
+    out = str(tmp_path / "kg")
+    run_pipeline(spark, df, out, n_buckets=8, stop_after="canonicalize")
+    found, want = (
+        re.escape(str({"partition_key": "conv_id", "n_buckets": n}))
+        for n in (8, 4)
+    )
+    with pytest.raises(ValueError, match=f"{found}.*{want}"):
+        run_pipeline(spark, df, out, resume=True, n_buckets=4)
+    assert not os.path.exists(os.path.join(out, "triples"))
+
+
 def test_entities_dimension_table(spark, tmp_path):
     """Entities table carries blocking key, link score, mention counts
     and the canonical flag (FIXTURES.md §4 schema)."""

@@ -281,3 +281,67 @@ def test_refresh_detection_is_one_exchange_no_join(spark, tmp_path):
     nodes = _plan_nodes(_plan(changed_conversations(turns, frontier)))
     assert [n for n in nodes if "Join" in n] == [], nodes
     assert [n for n in nodes if n.endswith("Exchange")] == ["Exchange"], nodes
+
+
+def test_graph_rounds_plan_no_sort_merge_join(spark, monkeypatch):
+    """PageRank and k-hop rounds join node-sized frames backed by
+    ``localCheckpoint``, which Catalyst has no size for.  Below the
+    node bound both functions broadcast those sides, so no round plans
+    a SortMergeJoin (which would re-shuffle the pinned edges every
+    round).  Control: with the bound at 0 every round plans them."""
+    from lexicator_spark.operators import graph as G
+
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{(i * 7 + 1) % 12}") for i in range(12)],
+        "a string, b string",
+    ).localCheckpoint(eager=True)
+    seeds = spark.createDataFrame([("n0",)], "node string")
+    frame_type = type(edges)
+
+    def round_plans():
+        """Plan nodes of each PageRank round (not its one-time
+        rank-init join) and of each k-hop round, taken from the frames
+        k-hop checkpoints."""
+        rank_rounds, khop_frames = [], []
+        step, checkpoint = G._pagerank_step, frame_type.localCheckpoint
+
+        def recorded_step(*args, **kwargs):
+            frame = step(*args, **kwargs)
+            rank_rounds.append(_plan_nodes(_plan(frame)))
+            return frame
+
+        def recorded_checkpoint(self, *args, **kwargs):
+            khop_frames.append(_plan_nodes(_plan(self)))
+            return checkpoint(self, *args, **kwargs)
+
+        with monkeypatch.context() as m:
+            m.setattr(G, "_pagerank_step", recorded_step)
+            G.pagerank(edges, iterations=3)
+            m.setattr(frame_type, "localCheckpoint", recorded_checkpoint)
+            G.khop_distances(edges, seeds, 3)
+        # the adjacency and seed pins join nothing; each hop frame does
+        khop_rounds = [n for n in khop_frames if any("Join" in x for x in n)]
+        assert len(rank_rounds) == 3 and len(khop_rounds) == 3
+        return rank_rounds + khop_rounds
+
+    for nodes in round_plans():
+        assert "SortMergeJoin" not in nodes, nodes
+
+    monkeypatch.setattr(G, "_BROADCAST_NODES_MAX", 0)
+    for nodes in round_plans():
+        assert "SortMergeJoin" in nodes, nodes
+
+
+def test_extraction_plans_two_scans(spark):
+    """Extraction reads its input twice, through both impls: the
+    rule-hits branch (with ``uses_tool`` fused into the hits array)
+    and the ``replies_to`` branch.  A third union branch for
+    ``uses_tool`` planned a third scan, because union branches share
+    no subtree."""
+    from pathlib import Path
+
+    fixture = Path(__file__).parent / "fixtures" / "synth_corpus_n300_s42.parquet"
+    turns = spark.read.parquet(str(fixture))
+    for impl in ("native", "pandas"):
+        nodes = _plan_nodes(_plan(extract_triples(turns, impl=impl)))
+        assert nodes.count("Scan") == 2, (impl, nodes)

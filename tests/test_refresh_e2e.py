@@ -477,3 +477,38 @@ def test_refresh_pipeline_validation_failure_strands_no_marker(spark, tmp_path):
     assert res.n_changed == 0
     assert not fsutil.exists(spark, _inflight_path(root))
     assert os.path.exists(os.path.join(root, "entities"))
+
+
+def test_refresh_refuses_materialized_table_without_layout(spark, tmp_path):
+    """Stage D copies raw buckets over the materialized ones, so a
+    `triples` table that records no bucket layout is refused at entry:
+    nothing is written, no in-flight marker is left, and triples_raw
+    (with its _frontier) keeps every byte."""
+    import os
+    from datetime import timedelta
+    from pathlib import Path
+
+    from lexicator_spark.plans.refresh import _inflight_path
+    from lexicator_spark.sources import fsutil
+
+    base = synth.make_corpus(n_convs=10, seed=45, shuffled=False).rows
+    root = str(tmp_path / "inc")
+    run_pipeline(spark, _df(spark, base), root, n_buckets=8)
+    os.remove(os.path.join(root, "triples", "_buckets.json"))
+
+    raw = Path(root) / "triples_raw"
+
+    def raw_files():
+        return {
+            p.relative_to(raw): p.read_bytes()
+            for p in raw.rglob("*")
+            if p.is_file()
+        }
+
+    before = raw_files()
+    t0 = synth.EPOCH + timedelta(days=5)
+    extra = [("zlayout", 0, "user", f"mentions [[{LINKED_ADD}]]", None, t0)]
+    with pytest.raises(ValueError, match="triples is bucketed as None"):
+        refresh_pipeline(spark, _df(spark, base + extra), root)
+    assert not fsutil.exists(spark, _inflight_path(root))
+    assert raw_files() == before
