@@ -26,9 +26,11 @@ executor (module import), not per batch.
 from __future__ import annotations
 
 import re
+import weakref
+from typing import NamedTuple
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -108,66 +110,64 @@ def _text_rule_hits(texts: pd.Series) -> pd.Series:
 _text_rule_udf = F.pandas_udf(_text_rule_hits, _RULE_HIT)
 
 
-def extract_triples(
-    turns: DataFrame, impl: str = "native", include_replies: bool = True
-) -> DataFrame:
-    """turns(conv_id, turn_idx, role, text, tool, ts) → triples
-    (subj, pred, obj, conf, span, conv_id, turn_idx, extracted_at).
+class _Columns(NamedTuple):
+    """The input-independent Column expressions of ``extract_triples``
+    for one ``impl``."""
 
-    ``include_replies=False`` drops the window-based ``replies_to``
-    branch — required on streaming input (windows need bounded
-    frames); the streaming twin derives replies with
-    ``streaming.ingest.stateful_replies_stream`` instead.
+    text_hits: Column  # per-turn text-rule hits array
+    hits: Column  # text_hits with the structural uses_tool hit fused in
+    explode: tuple[Column, ...]  # one row per hit
+    unpack: tuple[Column, ...]  # hit struct -> triple columns
+    prev_idx: Column  # lag over the (conv_id, turn_idx) window
+    has_prev: Column
+    replies: tuple[Column, ...]  # replies_to triple columns
 
-    Two equal-output implementations (equality asserted in
-    tests/test_extract.py):
 
-    - ``'native'`` (default): pure Catalyst regexp functions — stays
-      inside whole-stage codegen, zero JVM↔Python transfer.  Chosen
-      as default after measurement: on a 10^6-turn corpus it is both
-      faster and scales with cores, while the pandas path anti-scales
-      under local-mode oversubscription (32 JVM task threads + 32
-      Python workers on 32 cores); see BENCH/BASELINE.md.
-    - ``'pandas'``: Arrow-batched pandas UDF (Series → Series of
-      array<struct>).  The extensibility surface for rules that
-      regexes can't express (per input_hint every Python path is
-      vectorized/Arrow — no row-at-a-time ``F.udf`` anywhere).  On a
-      real cluster give Python workers their own cores
-      (``spark.task.cpus``) before defaulting to this path.
-    """
-    turns = turns.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+# spark._jvm -> {impl -> _Columns}
+_COLUMNS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _columns(spark: SparkSession, impl: str) -> _Columns:
+    """The expression tree ``extract_triples`` applies, built once per
+    gateway and ``impl``: every py4j call that builds a Column is a
+    driver↔JVM round-trip (2,300–2,900 for the native tree), paid on
+    every call before any job could start.  Reuse is safe: every
+    column is referenced by name, and a Column carries no expression
+    id until it is converted into a plan.  Keyed on ``spark._jvm``
+    like ``fsutil._jclass``, so a relaunched gateway rebuilds."""
+    if impl not in ("native", "pandas"):
+        raise ValueError(f"unknown impl {impl!r}")
+    by_impl = _COLUMNS.setdefault(spark._jvm, {})  # noqa: SLF001
+    if impl not in by_impl:
+        # two threads racing here both build; either tree is correct
+        by_impl[impl] = _build_columns(impl)
+    return by_impl[impl]
+
+
+def _build_columns(impl: str) -> _Columns:
     uri = F.concat_ws("#", F.col("conv_id"), F.col("turn_idx").cast("string"))
 
     # replies_to via lag over the stable (conv_id, turn_idx) window —
     # enforces the ordering invariant instead of trusting arithmetic
     # on possibly-non-contiguous turn indexes.
-    replies = None
-    if include_replies:
-        w = Window.partitionBy("conv_id").orderBy("turn_idx")
-        replies = (
-            turns.withColumn("prev_idx", F.lag("turn_idx").over(w))
-            .filter(F.col("prev_idx").isNotNull())
-            .select(
-                uri.alias("subj"),
-                F.lit(rules.PRED_REPLIES_TO).alias("pred"),
-                F.concat_ws(
-                    "#", F.col("conv_id"), F.col("prev_idx").cast("string")
-                ).alias("obj"),
-                F.lit(1.0).alias("conf"),
-                null_span(),
-                "conv_id",
-                "turn_idx",
-                F.col("ts").alias("extracted_at"),
-            )
-        )
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    replies = (
+        uri.alias("subj"),
+        F.lit(rules.PRED_REPLIES_TO).alias("pred"),
+        F.concat_ws(
+            "#", F.col("conv_id"), F.col("prev_idx").cast("string")
+        ).alias("obj"),
+        F.lit(1.0).alias("conf"),
+        null_span(),
+        F.col("conv_id"),
+        F.col("turn_idx"),
+        F.col("ts").alias("extracted_at"),
+    )
 
     # --- text rules ----------------------------------------------------
-    if impl == "pandas":
-        hits = turns.withColumn("hits", _text_rule_udf(F.col("text")))
-    elif impl == "native":
-        hits = _native_text_hits(turns)
-    else:
-        raise ValueError(f"unknown impl {impl!r}")
+    text_hits = (
+        _text_rule_udf(F.col("text")) if impl == "pandas" else _native_hits()
+    )
 
     # --- structural uses_tool rule, FUSED into the hits array ---------
     # A separate uses_tool branch unioned with the text branch would
@@ -195,19 +195,18 @@ def extract_triples(
             )
         ),
     ).otherwise(empty_hits)
-    hits = hits.withColumn(
-        "hits", F.concat(tool_hits, F.coalesce(F.col("hits"), empty_hits))
-    )
 
-    text_triples = (
-        hits.select(
-            "conv_id",
-            "turn_idx",
+    return _Columns(
+        text_hits=text_hits,
+        hits=F.concat(tool_hits, F.coalesce(F.col("hits"), empty_hits)),
+        explode=(
+            F.col("conv_id"),
+            F.col("turn_idx"),
             F.col("ts").alias("extracted_at"),
             uri.alias("turn_uri"),
             F.explode("hits").alias("h"),
-        )
-        .select(
+        ),
+        unpack=(
             # depends_on packs its subject into pred after \x00 (the
             # relation's subject is an entity, not the turn)
             F.when(
@@ -225,10 +224,55 @@ def extract_triples(
                     F.col("h.start").alias("start"), F.col("h.end").alias("end")
                 ),
             ).alias("span"),
-            "conv_id",
-            "turn_idx",
-            "extracted_at",
-        )
+            F.col("conv_id"),
+            F.col("turn_idx"),
+            F.col("extracted_at"),
+        ),
+        prev_idx=F.lag("turn_idx").over(w),
+        has_prev=F.col("prev_idx").isNotNull(),
+        replies=replies,
+    )
+
+
+def extract_triples(
+    turns: DataFrame, impl: str = "native", include_replies: bool = True
+) -> DataFrame:
+    """turns(conv_id, turn_idx, role, text, tool, ts) → triples
+    (subj, pred, obj, conf, span, conv_id, turn_idx, extracted_at).
+
+    ``include_replies=False`` drops the window-based ``replies_to``
+    branch — required on streaming input (windows need bounded
+    frames); the streaming twin derives replies with
+    ``streaming.ingest.stateful_replies_stream`` instead.
+
+    Two equal-output implementations (equality asserted in
+    tests/test_extract.py):
+
+    - ``'native'`` (default): pure Catalyst regexp functions — stays
+      inside whole-stage codegen, zero JVM↔Python transfer.  Chosen
+      as default after measurement: on a 10^6-turn corpus it is both
+      faster and scales with cores, while the pandas path anti-scales
+      under local-mode oversubscription (32 JVM task threads + 32
+      Python workers on 32 cores); see BENCH/BASELINE.md.
+    - ``'pandas'``: Arrow-batched pandas UDF (Series → Series of
+      array<struct>).  The extensibility surface for rules that
+      regexes can't express (per input_hint every Python path is
+      vectorized/Arrow — no row-at-a-time ``F.udf`` anywhere).  On a
+      real cluster give Python workers their own cores
+      (``spark.task.cpus``) before defaulting to this path.
+
+    The expressions themselves do not depend on the input, so they are
+    built once per JVM gateway and ``impl`` (``_columns``): the first
+    call pays ~0.4 s of py4j round-trips to build the tree, later calls
+    only plan the DataFrame operations.
+    """
+    c = _columns(turns.sparkSession, impl)
+    turns = turns.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    text_triples = (
+        turns.withColumn("hits", c.text_hits)
+        .withColumn("hits", c.hits)
+        .select(*c.explode)
+        .select(*c.unpack)
     )
 
     # Dedup (SURVEY.md §2 #10): duplicate facts can ONLY arise inside
@@ -237,15 +281,20 @@ def extract_triples(
     # dedup is a per-row array filter — no global shuffle.  First
     # occurrence wins (exact-alias conf=1.0 precedes wikilink 0.8 in
     # the concat order), which keeps conf deterministic.
-    if replies is None:
+    if not include_replies:
         return text_triples
+    replies = (
+        turns.withColumn("prev_idx", c.prev_idx)
+        .filter(c.has_prev)
+        .select(*c.replies)
+    )
     return text_triples.unionByName(replies)
 
 
-def _native_text_hits(turns: DataFrame) -> DataFrame:
+def _native_hits() -> Column:
     """Pure-Catalyst text rules: JVM regexp_extract_all inside
-    whole-stage codegen.  Produces the same ``hits`` array column as
-    the pandas UDF (verified equal in tests/test_extract.py).
+    whole-stage codegen.  Produces the same ``hits`` array as the
+    pandas UDF (verified equal in tests/test_extract.py).
 
     Mention spans mirror ``rules.mention_spans`` with ONE sort instead
     of a nested per-surface scan: every distinct raw (exact AND
@@ -391,9 +440,7 @@ def _native_text_hits(turns: DataFrame) -> DataFrame:
         ),
         F.lit(0),
     )
-    return turns.withColumn(
-        "hits", F.concat(mention, depends, tpl_hits)
-    )
+    return F.concat(mention, depends, tpl_hits)
 
 
 def split_rejects(triples: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -25,7 +25,8 @@ from __future__ import annotations
 
 import json
 import os
-from typing import NamedTuple
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -187,6 +188,7 @@ def refresh_from_feed(
     change_feed: DataFrame,
     impl: str = "native",
     n_buckets: int | None = None,
+    on_replacement: Callable[[DataFrame, list[int]], Any] | None = None,
 ) -> "RefreshResult":
     """Fully delta-scoped refresh: the end-to-end O(delta) ingest shape.
 
@@ -211,7 +213,8 @@ def refresh_from_feed(
     corpus, so run one full-corpus refresh (or ``sio.write_table`` +
     first ``refresh_triples_partitioned``) before switching to the
     feed loop — raises ValueError otherwise rather than silently
-    leaving unlisted conversations stale."""
+    leaving unlisted conversations stale.  ``on_replacement`` is passed
+    through to ``refresh_triples_partitioned``."""
     t_meta = validate_refresh_preconditions(
         spark, stage_location, turns_location
     )
@@ -244,6 +247,7 @@ def refresh_from_feed(
     return refresh_triples_partitioned(
         spark, turns, stage_location, impl=impl, n_buckets=n_buckets,
         change_feed=changed, _feed_normalized=True,
+        on_replacement=on_replacement,
     )
 
 
@@ -537,6 +541,8 @@ class RefreshResult(NamedTuple):
     # plans/refresh maintain lineage counts without re-reading the
     # files this refresh just wrote.  None on the 0-changed no-op.
     bucket_counts: tuple[tuple[int, int], ...] | None = None
+    # what ``on_replacement`` returned; None when it was not called
+    hook_result: Any = None
 
 
 def refresh_triples_partitioned(
@@ -547,6 +553,7 @@ def refresh_triples_partitioned(
     n_buckets: int | None = None,
     change_feed: DataFrame | None = None,
     _feed_normalized: bool = False,
+    on_replacement: Callable[[DataFrame, list[int]], Any] | None = None,
 ) -> RefreshResult:
     """Idempotent in-place refresh of a persisted Stage-A table: the
     parquet stand-in for Iceberg ``MERGE INTO`` (SURVEY.md §2 #2/#10).
@@ -601,7 +608,17 @@ def refresh_triples_partitioned(
     The table's bucketing comes from the ``_buckets.json`` sidecar
     recorded at write time; passing an ``n_buckets`` that contradicts
     it raises — a different modulus would scatter kept rows into new
-    buckets while dynamic overwrite leaves the stale ones in place."""
+    buckets while dynamic overwrite leaves the stale ones in place.
+
+    ``on_replacement(pinned, touched)`` is called with the touched
+    buckets' pinned replacement content (the stage table's new rows
+    for those buckets, without ``p_hash``) and the touched bucket ids,
+    as a third task beside the stage and frontier upserts; its result
+    comes back as ``RefreshResult.hook_result`` and its exception
+    propagates.  It must not read the stage table's touched buckets,
+    which the concurrent upsert is replacing.  ``plans.refresh``
+    derives its ``_surface_stats`` update and universe diff there.
+    Not called when nothing changed."""
     meta = sio.read_bucket_meta(spark, stage_location)
     if meta is not None:
         if n_buckets is not None and n_buckets != meta["n_buckets"]:
@@ -753,14 +770,16 @@ def refresh_triples_partitioned(
         frontier_replacement = kept_frontier.unionByName(new_frontier)
 
     # Replacement frames read the very files the upserts are about to
-    # replace, so they must be materialized BEFORE any write.  For the
-    # two upsert_partitions calls below that pin happens INSIDE the
-    # seam (touched_buckets forces an eager localCheckpoint there), so
-    # an extra one here would double the refresh's dominant
-    # materialization cost.  The one frame NOT covered is the
-    # bootstrap frontier: it lazily reads stage_location (the triples-
-    # derived frontier), goes through write_table (no internal pin),
-    # and the stage upsert rewrites those files first — pin it here.
+    # replace, so they must be materialized BEFORE any write — once per
+    # sink, never twice (a second pin would double the refresh's
+    # dominant materialization cost).  The stage replacement is pinned
+    # in _stage_upsert below, which hands the pinned frame to
+    # ``on_replacement``; the frontier's pin happens INSIDE the seam
+    # (touched_buckets forces an eager localCheckpoint there).  The
+    # one frame NOT covered is the bootstrap frontier: it lazily reads
+    # stage_location (the triples-derived frontier), goes through
+    # write_table (no internal pin), and the stage upsert rewrites
+    # those files first — pin it here.
     # Iceberg's snapshot isolation makes this unnecessary there; on
     # the parquet backend the staged volume is one full frontier
     # (bootstrap happens once per table).
@@ -780,17 +799,27 @@ def refresh_triples_partitioned(
 
     # The stage upsert and the frontier upsert touch DISJOINT tables
     # (each one's replacement frame reads only its own table's files,
-    # pinned inside the seam before its write) — run them as two
-    # concurrent jobs so the frontier write's fixed job costs hide
-    # under the stage write's tail instead of adding to it (guide
-    # §2.6: overlap independent jobs; a sparse refresh is fixed-cost-
-    # dominated, so serial job count IS its wall).
+    # pinned before its write) — run them as two concurrent jobs so
+    # the frontier write's fixed job costs hide under the stage
+    # write's tail instead of adding to it (guide §2.6: overlap
+    # independent jobs; a sparse refresh is fixed-cost-dominated, so
+    # serial job count IS its wall).  ``on_replacement`` is a third
+    # task in the same pool, started as soon as the stage replacement
+    # is pinned.
     def _stage_upsert():
-        return sio.upsert_partitions(
-            replacement, stage_location, partition_key="conv_id",
+        pinned = replacement.localCheckpoint(eager=True)
+        hook = (
+            pool.submit(on_replacement, pinned, touched)
+            if on_replacement is not None
+            else None
+        )
+        counts = sio.upsert_partitions(
+            pinned, stage_location, partition_key="conv_id",
             n_buckets=n_buckets, touched_buckets=touched,
             files_per_bucket=fpb,
+            pin_replacement=False,  # pinned above
         )
+        return counts, hook
 
     def _frontier_upsert():
         if bootstrap:
@@ -804,17 +833,17 @@ def refresh_triples_partitioned(
                 n_buckets=n_buckets, touched_buckets=touched,
             )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
+    with ThreadPoolExecutor(max_workers=3) as pool:
         stage_future = pool.submit(_stage_upsert)
         frontier_future = pool.submit(_frontier_upsert)
-        stage_counts = stage_future.result()
+        stage_counts, hook = stage_future.result()
         frontier_future.result()
+        hook_result = hook.result() if hook is not None else None
     return RefreshResult(
         sio.read_table(spark, stage_location),
         n_changed,
         n_buckets_touched,
         tuple(touched),
         tuple(stage_counts) if stage_counts is not None else None,
+        hook_result,
     )

@@ -20,9 +20,15 @@ exploiting what each stage actually depends on:
   conversation's ``p_hash`` bucket) makes the universe delta
   computable from the TOUCHED BUCKETS alone: conversations live in
   exactly one bucket, so per-surface totals are sums over buckets,
-  and only touched buckets' partial sums can move.  Newly-seen
-  surfaces are linked via ``link_surfaces`` (delta-sized catalog
-  join); vanished surfaces' rows are anti-joined away.
+  and only touched buckets' partial sums can move.  Those buckets'
+  new stats rows are aggregated from the pinned Stage-A replacement
+  (their new raw content) by a hook that runs beside the Stage-A
+  stage and frontier upserts; together with the untouched rows
+  (pinned before Stage A) they give the post-refresh stats and the
+  universe diff, so no step reads ``triples_raw`` or
+  ``_surface_stats`` back.  Newly-seen surfaces are linked via
+  ``link_surfaces`` (delta-sized catalog join); vanished surfaces'
+  rows are anti-joined away.
 - **Stage C** (canonicalization) updates through
   ``update_components``: vanished links can split components —
   recomputed from the survivors of just the affected components;
@@ -35,8 +41,8 @@ exploiting what each stage actually depends on:
   changed, plus the single NULL-conv_id bucket (``pmod(xxhash64(
   NULL), P)`` — where every same_as/canonical row lands, appended
   after the copy) when the link set changed.
-- **entities** is vocabulary-sized arithmetic over the
-  ``_surface_stats`` rollup (``mention_counts_of_triples`` twin) —
+- **entities** is vocabulary-sized arithmetic over the rollup of
+  those pinned stats rows (``mention_counts_of_triples`` twin) —
   a full rewrite of a tiny table, never a corpus rescan.
 
 Stage markers and lineage are updated so a subsequent
@@ -204,12 +210,13 @@ def ensure_surface_stats(
     table AS OF the last downstream (link/canonicalize) sync — it is
     the record of the surface universe Stage B last saw.  Every path
     that mutates ``triples_raw`` keeps it that way: ``refresh_pipeline``
-    updates stats and downstream together (so does the CLI's
-    ``--refresh``, which runs it); crash recovery drops the table and
-    rebuilds it with the downstream stages; stream-epoch compaction
-    deliberately does NOT touch stats — the next detection-mode
-    refresh re-detects the compacted conversations from the frontier
-    and squares both up."""
+    (which the CLI's ``--refresh`` runs) upserts the touched buckets'
+    rows, aggregated from the same pinned replacement the raw upsert
+    writes, inside the same in-flight window as the downstream
+    stages; crash recovery drops the table and rebuilds it with the
+    downstream stages; stream-epoch compaction deliberately does NOT
+    touch stats — the next detection-mode refresh re-detects the
+    compacted conversations from the frontier and squares both up."""
     loc = _stats_location(out_root)
     if not fsutil.exists(spark, os.path.join(loc, "_schema.json")):
         raw = sio.read_table(
@@ -219,37 +226,6 @@ def ensure_surface_stats(
             _stats_of(raw), loc, partition_key=None, n_buckets=n_buckets
         )
     return loc
-
-
-def update_surface_stats(
-    spark: SparkSession, out_root: str, touched_buckets: list[int]
-) -> None:
-    """Recompute + upsert the ``_surface_stats`` rows of the given
-    raw-table buckets (a delta-scoped pruned read — the stats half of
-    a refresh).  No-op when the stats table doesn't exist yet (a root
-    that has never synced stats has nothing to keep consistent).
-    Callers that ALSO need the before/after universe delta capture the
-    old rollup before invoking this (see ``refresh_pipeline``)."""
-    loc = _stats_location(out_root)
-    if not fsutil.exists(spark, os.path.join(loc, "_schema.json")):
-        return
-    meta = sio.read_bucket_meta(spark, loc)
-    touched = sorted(touched_buckets)
-    raw_touched = sio.read_table(
-        spark, os.path.join(out_root, "triples_raw"), keep_bucket_col=True
-    ).filter(F.col("p_hash").isin(touched))
-    sio.upsert_partitions(
-        _stats_of(raw_touched),
-        loc,
-        partition_key=None,
-        n_buckets=meta["n_buckets"],
-        touched_buckets=touched,
-        # deterministic aggregate over the RAW table — never reads the
-        # stats files being replaced, so the seam's self-read pin is
-        # pure cost here (callers needing the pre-upsert universe pin
-        # it themselves BEFORE calling, see refresh_pipeline)
-        pin_replacement=False,
-    )
 
 
 def _delta_bucket_counts(
@@ -391,61 +367,105 @@ def refresh_pipeline(
     n_buckets = P._check_bucket_layout(spark, raw_path)
     P._check_bucket_layout(spark, triples_path, n_buckets)
 
-    # ── surface universe, BEFORE the stats upsert ────────────────
-    # The old-universe pin only has to land before update_surface_stats
-    # moves the stats files — Stage A touches triples_raw/_frontier,
-    # never _surface_stats — so it runs on a side thread CONCURRENTLY
-    # with Stage A (guide §2.6) and is joined right before the stats
-    # upsert below.
+    # ── surface universe, derived beside the Stage-A upserts ──────
+    # The old _surface_stats rows are pinned on a side thread
+    # CONCURRENTLY with Stage A (guide §2.6): Stage A touches
+    # triples_raw/_frontier, never _surface_stats, and the pin only has
+    # to land before the stats upsert in _stats_and_diff moves the
+    # files, which joins it first.
     stats_loc = ensure_surface_stats(spark, out_root, n_buckets)
 
-    def _pin_old_totals():
+    def _pin_old_stats():
+        return sio.read_table(
+            spark, stats_loc, keep_bucket_col=True
+        ).localCheckpoint(eager=True)  # pinned: the files move next
+
+    def _universe(stats: DataFrame) -> DataFrame:
         return (
-            surface_rollup(sio.read_table(spark, stats_loc))
+            surface_rollup(stats)
             .filter(F.col("n_mentions") > 0)
             .select("surface_form")
-            .localCheckpoint(eager=True)  # pinned: the files move next
         )
 
-    side_pool = ThreadPoolExecutor(max_workers=1)
-    old_totals_future = side_pool.submit(_pin_old_totals)
+    def _stats_and_diff(pinned: DataFrame, touched: list[int]):
+        """Stage-A hook, run beside the stage and frontier upserts.
+        The touched raw buckets' new content IS ``pinned`` (the pinned
+        Stage-A replacement) and the untouched buckets' stats rows do
+        not change, so the post-refresh stats and the universe diff
+        come from pinned frames — nothing reads ``triples_raw`` or
+        ``_surface_stats`` back.  Returns the post-refresh stats rows,
+        the (lazy) diff frame and its added/removed counts."""
+        new_touched = _stats_of(
+            sio.with_partition_hash(pinned, "conv_id", n_buckets)
+        ).localCheckpoint(eager=True)
+        old = old_stats_future.result()
+        stats_now = old.filter(~F.col("p_hash").isin(touched)).unionByName(
+            new_touched
+        )
+        # ONE full-outer diff instead of two anti-join count jobs plus
+        # re-run anti-joins in Stage B: the diff frame is delta-sized
+        # (only surfaces on exactly one side survive the filter), and
+        # added/removed/counts all derive from it without touching the
+        # rollups again.  Join keys are never NULL (surfaces come from
+        # mention objects), so the null-side filters are exactly the
+        # two anti-join sets.  Both sides read pinned frames only, so
+        # the counts job runs while the stats upsert writes.
+        diff_plan = (
+            _universe(stats_now).withColumn("__new", F.lit(1))
+            .join(
+                _universe(old).withColumn("__old", F.lit(1)),
+                "surface_form",
+                "full_outer",
+            )
+            .filter(F.col("__new").isNull() | F.col("__old").isNull())
+        )
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            upsert = pool.submit(
+                sio.upsert_partitions, new_touched, stats_loc,
+                partition_key=None, n_buckets=n_buckets,
+                touched_buckets=touched,
+                pin_replacement=False,  # pinned above
+            )
+            counts_row = diff_plan.agg(
+                F.count("__new").alias("a"), F.count("__old").alias("r")
+            ).first()
+            upsert.result()
+        return stats_now, diff_plan, int(counts_row["a"]), int(counts_row["r"])
 
     # ── Stage A (delegated) ──────────────────────────────────────
-    # validate BEFORE opening the in-flight window: a refresh refused
-    # on its preconditions mutated nothing, and must not strand a
-    # marker that would force a spurious O(corpus) downstream rebuild
-    try:
+    with ThreadPoolExecutor(max_workers=1) as side_pool:
+        old_stats_future = side_pool.submit(_pin_old_stats)
+        # validate BEFORE opening the in-flight window: a refresh
+        # refused on its preconditions mutated nothing, and must not
+        # strand a marker that would force a spurious O(corpus)
+        # downstream rebuild
         validate_refresh_preconditions(
             spark, raw_path, turns_location=turns_location
         )
-    except BaseException:
-        old_totals_future.cancel()
-        side_pool.shutdown(wait=True)
-        raise
-    # in-flight from here until every downstream stage is synced: the
-    # Stage-A upsert advances the frontier, after which the delta is
-    # undetectable — a crash inside this window must force a
-    # downstream rebuild on the next run (recover_inflight_refresh)
-    begin_refresh(spark, out_root)
-    t0 = time.monotonic()
-    try:
+        # in-flight from here until every downstream stage is synced:
+        # the Stage-A upsert advances the frontier, after which the
+        # delta is undetectable — a crash inside this window (the
+        # stats upsert in _stats_and_diff included) must force a
+        # downstream rebuild on the next run (recover_inflight_refresh)
+        begin_refresh(spark, out_root)
+        t0 = time.monotonic()
         if turns_location is not None:
             res: RefreshResult = refresh_from_feed(
-                spark, turns_location, raw_path, change_feed, impl=impl
+                spark, turns_location, raw_path, change_feed, impl=impl,
+                on_replacement=_stats_and_diff,
             )
         else:
             res = refresh_triples_partitioned(
-                spark, turns, raw_path, impl=impl, change_feed=change_feed
+                spark, turns, raw_path, impl=impl, change_feed=change_feed,
+                on_replacement=_stats_and_diff,
             )
-    except BaseException:
-        side_pool.shutdown(wait=True)
-        raise
     if res.n_changed == 0:
-        side_pool.shutdown(wait=True)
         end_refresh(spark, out_root)  # nothing moved; window closed
         return RefreshPipelineResult(0, 0, 0, 0, False, [])
     touched = sorted(res.touched_buckets)
     wall_a = int((time.monotonic() - t0) * 1000)
+    stats_now, diff_plan, n_added, n_removed = res.hook_result
+    links_changed = bool(n_added or n_removed)
 
     run_id = P._new_run_id()
 
@@ -467,54 +487,11 @@ def refresh_pipeline(
         rows_in=res.n_changed,
     )
 
-    # ── surface-stats upsert + universe delta ────────────────────
-    t0 = time.monotonic()
-    old_totals = old_totals_future.result()  # pinned before the move
-    side_pool.shutdown()
-    update_surface_stats(spark, out_root, touched)
-    stats = sio.read_table(spark, stats_loc)
-    new_totals = (
-        surface_rollup(stats)
-        .filter(F.col("n_mentions") > 0)
-        .select("surface_form")
-    )
-    # ONE full-outer diff instead of two anti-join count jobs plus
-    # re-run anti-joins in Stage B: the diff frame is delta-sized
-    # (only surfaces on exactly one side survive the filter), and
-    # added/removed/counts all derive from it without touching the
-    # rollups again.  The new-universe rollup is NOT separately
-    # checkpointed — the diff is its only consumer, so it folds into
-    # this one job (its input files were just written and stay put
-    # until the next refresh's update_surface_stats).  Join keys are
-    # never NULL (surfaces come from mention objects), so the
-    # null-side filters are exactly the two anti-join sets.
-    #
-    # The counts run FIRST, over the un-pinned plan: in the common
-    # sparse case the universe does not change and the counts job is
-    # the diff's ONLY consumer — a checkpoint there is a pure extra
-    # materialization per refresh tick.  Only when the universe DID
-    # move (rare, and about to pay link+CC work anyway) is the diff
-    # pinned for its added/removed consumers; the one re-evaluation
-    # this costs reads the stats files just written, which stay put
-    # until the next refresh's update_surface_stats.
-    diff_plan = (
-        new_totals.withColumn("__new", F.lit(1))
-        .join(
-            old_totals.withColumn("__old", F.lit(1)),
-            "surface_form",
-            "full_outer",
-        )
-        .filter(F.col("__new").isNull() | F.col("__old").isNull())
-    )
-    counts_row = diff_plan.agg(
-        F.count("__new").alias("a"), F.count("__old").alias("r")
-    ).first()
-    n_added = int(counts_row["a"])
-    n_removed = int(counts_row["r"])
-    links_changed = bool(n_added or n_removed)
-
     refreshed = ["extract"]
     if links_changed:
+        # rare, and about to pay link+CC work anyway: pin the diff for
+        # its added/removed consumers
+        t0 = time.monotonic()
         diff = diff_plan.localCheckpoint(eager=True)
         added = diff.filter(F.col("__old").isNull()).select("surface_form")
         removed = diff.filter(F.col("__new").isNull()).select("surface_form")
@@ -574,7 +551,7 @@ def refresh_pipeline(
     # ── Stage D (materialize by copy) ∥ entities ─────────────────
     # The two closing stages read disjoint inputs (D: raw buckets +
     # the pinned link/canonical frames; entities: the pinned frames +
-    # the stats rollup) and write disjoint tables — run them as two
+    # the pinned stats rows) and write disjoint tables — run them as two
     # concurrent jobs (guide §2.6) so the smaller one's fixed job
     # costs hide under the larger one's tail.  Each thread reports its
     # own wall; job descriptions are thread-local so the UI stays
@@ -600,11 +577,11 @@ def refresh_pipeline(
     def _stage_entities():
         t0 = time.monotonic()
         # no pin needed: the frame reads canonical_new/same_as_new
-        # (already pinned) and the stats table — never entities/ —
+        # (already pinned) and the pinned stats rows — never entities/ —
         # and the row count rides the write job itself (observe) so
         # no post-write count job runs at all
         entities = P.entities_dim(
-            canonical_new, same_as_new, surface_rollup(stats)
+            canonical_new, same_as_new, surface_rollup(stats_now)
         )
         observed = sio.write_table(
             entities, entities_path, partition_key=None, observe_counts=True

@@ -20,7 +20,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from lexicator_spark import synth
+from lexicator_spark import rules, synth
 from lexicator_spark.operators.canonicalize import (
     connected_components,
     update_components,
@@ -512,3 +512,126 @@ def test_refresh_refuses_materialized_table_without_layout(spark, tmp_path):
         refresh_pipeline(spark, _df(spark, base + extra), root)
     assert not fsutil.exists(spark, _inflight_path(root))
     assert raw_files() == before
+
+
+def _assert_stats_equal_rebuild(spark, root, root_full):
+    """``_surface_stats`` under ``root``, bucket column included, equals
+    ``_stats_of`` over the from-scratch build's ``triples_raw``."""
+    from lexicator_spark.plans.refresh import _stats_of
+
+    def rows(df):
+        return sorted(
+            (tuple(r) for r in df.select(*sorted(df.columns)).collect()),
+            key=repr,
+        )
+
+    got = sio.read_table(spark, f"{root}/_surface_stats", keep_bucket_col=True)
+    want = _stats_of(
+        sio.read_table(spark, f"{root_full}/triples_raw", keep_bucket_col=True)
+    )
+    assert rows(got) == rows(want)
+
+
+def test_surface_stats_after_refresh_equal_rebuild(spark, tmp_path):
+    """A refresh derives the touched buckets' ``_surface_stats`` rows
+    from the pinned Stage-A replacement and keeps the rest: after a
+    growing delta, a delta that deletes the only conversation of a
+    bucket, and a link-changing delta, the stats table equals the one
+    a from-scratch build over the same corpus would hold."""
+    from datetime import timedelta
+
+    n_buckets = 32  # sparse: many buckets hold a single conversation
+    base = synth.make_corpus(n_convs=20, seed=41, shuffled=False).rows
+    t0 = synth.EPOCH + timedelta(days=7)
+    root = str(tmp_path / "inc")
+    run_pipeline(spark, _df(spark, base), root, n_buckets=n_buckets)
+
+    def rebuild_and_compare(rows, name):
+        full = str(tmp_path / name)
+        run_pipeline(spark, _df(spark, rows), full, n_buckets=n_buckets)
+        _assert_stats_equal_rebuild(spark, root, full)
+        _assert_stages_equal(spark, root, full)
+
+    # step 1 — growing delta: a conversation gains a turn repeating a
+    # mention-bearing text, so its bucket's counts and last_seen move
+    conv = base[0][0]
+    last = max(r[1] for r in base if r[0] == conv)
+    text = next(r[3] for r in base if r[3] and rules.WIKILINK_RE.findall(r[3]))
+    v2 = base + [(conv, last + 1, "user", text, None, t0)]
+    res = refresh_pipeline(spark, _df(spark, v2), root)
+    assert res.n_changed == 1 and not res.links_changed
+    rebuild_and_compare(v2, "full_grow")
+
+    # step 2 — the only conversation of its bucket, with mentions,
+    # disappears (a fed conversation with no turns is a deletion): the
+    # bucket's stats rows must go with it
+    raw = sio.read_table(spark, f"{root}/triples_raw", keep_bucket_col=True)
+    sole = [
+        r.conv_id
+        for r in raw.filter(F.col("conv_id").isNotNull())
+        .groupBy("p_hash")
+        .agg(
+            F.countDistinct("conv_id").alias("n"),
+            F.min("conv_id").alias("conv_id"),
+            F.sum((F.col("pred") == rules.PRED_MENTIONS).cast("int")).alias("m"),
+        )
+        .filter("n = 1 AND m > 0")
+        .collect()
+    ]
+    assert sole, "fixture has no single-conversation bucket with mentions"
+    gone = min(sole)
+    v3 = [r for r in v2 if r[0] != gone]
+    feed = spark.createDataFrame([(gone,)], "conv_id string")
+    res = refresh_pipeline(spark, _df(spark, v3), root, change_feed=feed)
+    assert res.n_changed == 1 and res.n_buckets_touched == 1
+    rebuild_and_compare(v3, "full_drop")
+
+    # step 3 — link-changing delta: new surfaces, one linkable
+    v4 = v3 + [
+        ("zstats1", 0, "user", f"try [[{LINKED_ADD}]] and [[{UNLINKED_ADD}]]",
+         None, t0 + timedelta(seconds=1)),
+    ]
+    res = refresh_pipeline(spark, _df(spark, v4), root)
+    assert res.links_changed and res.surfaces_added == 2
+    rebuild_and_compare(v4, "full_link")
+
+
+def test_refresh_crash_in_stats_upsert_recovers(spark, tmp_path, monkeypatch):
+    """The ``_surface_stats`` upsert runs inside the Stage-A pool, beside
+    the stage and frontier upserts: its failure must fail the refresh
+    (not vanish in an unjoined future) and leave the in-flight marker,
+    so the next refresh rebuilds the downstream stages and every table
+    ends equal to a rebuild."""
+    from datetime import timedelta
+
+    from lexicator_spark.plans.refresh import _inflight_path
+    from lexicator_spark.sources import fsutil
+
+    base = synth.make_corpus(n_convs=15, seed=43, shuffled=False).rows
+    t0 = synth.EPOCH + timedelta(days=9)
+    root = str(tmp_path / "inc")
+    run_pipeline(spark, _df(spark, base), root, n_buckets=8)
+
+    real_upsert = sio.upsert_partitions
+
+    def failing_stats_upsert(df, location, *a, **kw):
+        if location.endswith("_surface_stats"):
+            raise RuntimeError("injected stats upsert failure")
+        return real_upsert(df, location, *a, **kw)
+
+    v2 = base + [
+        ("zcrash2", 0, "user", f"mentions [[{LINKED_ADD}]] here", None, t0)
+    ]
+    with monkeypatch.context() as m:
+        m.setattr(sio, "upsert_partitions", failing_stats_upsert)
+        with pytest.raises(RuntimeError, match="injected stats upsert"):
+            refresh_pipeline(spark, _df(spark, v2), root)
+    assert fsutil.exists(spark, _inflight_path(root))
+
+    res = refresh_pipeline(spark, _df(spark, v2), root)
+    assert res.n_changed == 0  # the crashed delta reached triples_raw
+    assert not fsutil.exists(spark, _inflight_path(root))
+    full = str(tmp_path / "full")
+    run_pipeline(spark, _df(spark, v2), full, n_buckets=8)
+    _assert_stages_equal(spark, root, full)
+    _assert_stats_equal_rebuild(spark, root, full)
