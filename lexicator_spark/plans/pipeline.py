@@ -17,6 +17,16 @@ rows_out, wall_ms, n_partitions) as one small JSON-lines file under
 ``out_root``, so resume works identically on local disk, HDFS or an
 object store, and a marker never exists without its lineage rows
 (FIXTURES.md §4 schemas; read back with ``read_lineage``).
+
+A build overlaps stages where one does not read the other's table:
+Stage B links from Stage A's pinned checkpoint while ``triples_raw``
+is still being written on a side pool.  Markers and lineage rows stay
+in ``STAGES`` order all the same — a stage finishes once it and every
+earlier stage have — so a crash leaves a marker prefix.  A stage's
+``rows_in`` is a count the build already holds: the turns count (run
+beside the raw write) for extract, and the previous stage's
+``rows_out`` (observed, or read from its marker on a resume) for link
+and canonicalize.
 """
 
 from __future__ import annotations
@@ -358,10 +368,16 @@ def run_pipeline(
     skipped: list[str] = []
     run_id = _new_run_id()
 
-    # futures a stage's fn() launched that must complete BEFORE that
-    # stage's checkpoint marker becomes durable (e.g. the extract
-    # stage's error-channel write) — joined by _finish_stage
+    # futures a stage launched that must complete BEFORE that stage's
+    # checkpoint marker becomes durable (the extract stage's
+    # triples_raw and error-channel writes and its turns count) —
+    # joined by _finish_stage
     pre_mark_joins: list = []
+    # the finish of an earlier stage whose table is still being written
+    # beside the current stage (extract's, while link runs): called
+    # before the current stage finishes, so markers and lineage rows
+    # land in STAGES order
+    deferred: list = []
 
     def finish(
         name: str, rows_out: int, wall_ms: int, buckets,
@@ -376,12 +392,24 @@ def run_pipeline(
         )
         run.append(name)
 
-    def staged(name: str, in_df: DataFrame | None, fn, out_path: str, partition_key):
-        if resume and _is_done(spark, out_root, name):
-            skipped.append(name)
-            return sio.read_table(spark, out_path)
-        t0 = time.monotonic()
-        out_df = fn()
+    def finish_deferred() -> None:
+        while deferred:
+            deferred.pop()()
+
+    def rows_out_of(stage: str) -> int:
+        """A finished stage's row count, the next stage's ``rows_in``:
+        the count this run observed, or the marker's when a resume
+        skipped the stage.  Runs no Spark job."""
+        for row in lineage:
+            if row["stage"] == stage:
+                return row["rows_out"]
+        return _read_marker(spark, out_root, stage)["rows_out"]
+
+    def write_stage(
+        out_df: DataFrame, out_path: str, partition_key, t0: float
+    ) -> tuple[DataFrame, dict]:
+        """Write one stage table; return it read back, with the
+        arguments ``finish`` records for it apart from ``rows_in``."""
         observed = sio.write_table(
             out_df, out_path, partition_key=partition_key, n_buckets=n_buckets,
             observe_counts=True,
@@ -404,11 +432,34 @@ def run_pipeline(
         else:
             buckets = observed
             rows_out = sum(c for _, c in observed)
-        wall_ms = int((time.monotonic() - t0) * 1000)
+        return persisted, {
+            "rows_out": rows_out,
+            "wall_ms": int((time.monotonic() - t0) * 1000),
+            "buckets": buckets,
+            "n_partitions": persisted.rdd.getNumPartitions(),
+        }
+
+    def staged(
+        name: str, fn, out_path: str, partition_key,
+        input_stage: str | None = None,
+    ) -> DataFrame:
+        """Run stage ``name`` unless a resume finds its marker.
+        ``input_stage`` names the stage whose ``rows_out`` is this
+        stage's lineage ``rows_in`` (-1 when None)."""
+        if resume and _is_done(spark, out_root, name):
+            skipped.append(name)
+            return sio.read_table(spark, out_path)
+        t0 = time.monotonic()
+        try:
+            persisted, written = write_stage(fn(), out_path, partition_key, t0)
+        finally:
+            # also when this stage failed: an earlier stage whose table
+            # is committed keeps its marker, as if it had run first
+            finish_deferred()
         finish(
-            name, rows_out, wall_ms, buckets,
-            rows_in=in_df.count() if in_df is not None else -1,
-            n_partitions=persisted.rdd.getNumPartitions(),
+            name,
+            rows_in=rows_out_of(input_stage) if input_stage else -1,
+            **written,
         )
         return persisted
 
@@ -448,39 +499,38 @@ def run_pipeline(
         ):
             fsutil.delete(spark, stale, recursive=True)
 
-    # Side-job pool (guide §2.6): independent writes/aggregates whose
-    # outputs no stage reads (error channel, _frontier, the stats
-    # sidecar) run concurrently with the stage chain so their fixed
-    # job costs back-fill idle executor capacity instead of extending
-    # the critical path.  All futures are joined before the function
-    # returns (primary stage errors win; side-job errors surface on
-    # the success path) — see _join_side_jobs below.
+    # Side-job pool: writes and aggregates that the next
+    # stage does not wait for run concurrently with the stage chain, so
+    # their fixed job costs back-fill idle executor capacity instead of
+    # extending the critical path:
+    #   - extract's own sinks: the bucketed triples_raw write, the
+    #     rejects error channel, and the turns count (its rows_in).
+    #     Stage B links from the Stage-A pin on the calling thread
+    #     meanwhile; extract finishes (marker, lineage) when they are
+    #     joined, before link finishes — markers stay in STAGES order;
+    #   - the sidecars no stage before entities reads (_frontier,
+    #     _surface_stats), started once triples_raw is committed.
+    # Every future is joined before the function returns: primary
+    # stage errors win, side-job errors surface on the success path,
+    # and the error path waits for every side write (shutdown) — see
+    # _join_side_jobs below.
     from concurrent.futures import ThreadPoolExecutor
 
     side_pool = ThreadPoolExecutor(max_workers=3)
     side_futures = []
 
     # Stage A — extraction.  The extracted frame feeds two writes
-    # (rejects + good); pin it with localCheckpoint so the scan + rule
-    # evaluation runs once, not once per sink.  localCheckpoint beats
-    # persist(MEMORY_AND_DISK) here by ~2 s at bench scale (measured,
-    # scripts/bench_r06_probe.py stage_a at commit a4597d3): the
-    # checkpoint materializes straight to shuffle-format RDD blocks,
-    # while the cache path pays columnar-cache encode on write AND
-    # decode on each of the two sink reads, competing with execution
-    # memory (guide §5).  The
-    # rejects sink reads only the pinned checkpoint and nothing reads
-    # it back in-run — written on the side pool, overlapped with the
-    # good-side bucketed write.
-
-    # when extraction runs THIS invocation, its pinned output is kept
-    # here so stage B can link straight from the checkpoint instead
-    # of re-reading the just-written parquet (identical rows by
-    # determinism: the raw table holds exactly these rows); on a
-    # marker-skipped resume the list stays empty and stage B reads
-    # the persisted table
-    stage_a_ckpt: list[DataFrame] = []
-
+    # (rejects + good) and Stage B; pin it with localCheckpoint so the
+    # scan + rule evaluation runs once, not once per consumer.
+    # localCheckpoint beats persist(MEMORY_AND_DISK) here by ~2 s at
+    # bench scale (measured, scripts/bench_r06_probe.py stage_a at
+    # commit a4597d3): the checkpoint materializes straight to
+    # shuffle-format RDD blocks, while the cache path pays
+    # columnar-cache encode on write AND decode on each sink read,
+    # competing with execution memory.  Stage B links
+    # straight from the pin instead of re-reading the parquet being
+    # written (identical rows by determinism: the raw table holds
+    # exactly these rows).
     def stage_a():
         # serialized checkpoint blocks (pyspark-4 naming: MEMORY_AND_DISK
         # stores serialized; the eager default is MEMORY_AND_DISK_DESER):
@@ -489,17 +539,16 @@ def run_pipeline(
         # 29.3M turns — the build then OOMed in stage B 2 of 5 runs
         # (GC-timing luck).  Serialized blocks are several-fold
         # smaller, measured bench-neutral (4.03 vs 4.08 s for the full
-        # extract-pin-write cycle at sf0.1), and the two consumers
-        # (bucketed write + rejects write) each decode once.
+        # extract-pin-write cycle at sf0.1), and the consumers
+        # (bucketed write, rejects write, Stage B) each decode once.
         from pyspark import StorageLevel
 
         extracted = extract_triples(turns, impl=impl).localCheckpoint(
             eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
         )
         good, rejects = split_rejects(extracted)
-        stage_a_ckpt.append(good)
         # pre_mark_joins, not side_futures: the extract marker's
-        # durability must wait for the error channel (see staged)
+        # durability must wait for the error channel (_finish_stage)
         pre_mark_joins.append(
             side_pool.submit(
                 sio.write_table, rejects,
@@ -507,39 +556,6 @@ def run_pipeline(
             )
         )
         return good
-
-    extract_done = resume and _is_done(spark, out_root, "extract")
-    if extract_done:
-        # an earlier run wrote the raw table Stage D will copy
-        _check_bucket_layout(spark, raw_path, n_buckets)
-    if backfill_groups is not None and not extract_done:
-        from lexicator_spark.operators.incremental import backfill_triples
-
-        t0 = time.monotonic()
-        backfill_triples(
-            spark,
-            turns_source if turns_source is not None else turns,
-            raw_path,
-            impl=impl,
-            n_buckets=n_buckets,
-            n_groups=backfill_groups,
-            rejects_location=os.path.join(out_root, "rejects"),
-        )
-        # same bookkeeping as staged(): the stage checkpoint marks the
-        # WHOLE extraction done (group-level progress lives in the
-        # backfill marker); wall_ms spans only this invocation's groups
-        triples_a = sio.read_table(spark, raw_path)
-        buckets = _bucket_counts(spark, raw_path)
-        rows_out = (
-            sum(c for _, c in buckets) if buckets is not None else triples_a.count()
-        )
-        finish(
-            "extract", rows_out, int((time.monotonic() - t0) * 1000), buckets,
-            rows_in=turns.count(),
-            n_partitions=triples_a.rdd.getNumPartitions(),
-        )
-    else:
-        triples_a = staged("extract", turns, stage_a, raw_path, "conv_id")
 
     # build-time frontier: record what this build processed so the
     # first --refresh is delta-scoped instead of paying the detection
@@ -564,27 +580,15 @@ def run_pipeline(
     # sidecars no stage reads): run them on the side pool so their
     # ~5 s of aggregate+bucketed-write jobs back-fill the executor
     # capacity stages B-D leave idle (guide §2.6 — overlap independent
-    # jobs) instead of extending the critical path.  The stats table
-    # IS read by stage_entities, so the side jobs are joined before
-    # that stage runs.
+    # jobs) instead of extending the critical path.  They start only
+    # once triples_raw is committed: its overwrite would delete a
+    # _frontier written inside it, and the stats read its files.  The
+    # stats table IS read by stage_entities, so the side jobs are
+    # joined before that stage runs.
     from lexicator_spark.plans.refresh import ensure_surface_stats
 
-    def _join_side_jobs(swallow: bool = False) -> None:
-        """Wait for every side job.  ``swallow=True`` on the error
-        path: the primary stage exception must not be masked by a
-        secondary side-job failure raised out of a finally block."""
-        for fut in side_futures:
-            if swallow:
-                try:
-                    fut.result()
-                except Exception:
-                    pass
-            else:
-                fut.result()
-        side_futures.clear()
-
-    try:
-        if "extract" in run:
+    def start_side_jobs(extracted_now: bool) -> None:
+        if extracted_now:
             side_futures.append(
                 side_pool.submit(
                     materialize_frontier, spark, turns, raw_path,
@@ -592,23 +596,94 @@ def run_pipeline(
                 )
             )
         side_futures.append(
-            side_pool.submit(
-                ensure_surface_stats, spark, out_root, n_buckets
-            )
+            side_pool.submit(ensure_surface_stats, spark, out_root, n_buckets)
         )
 
-        # Stage B — linking (from the stage-A checkpoint when this
-        # invocation extracted — same rows, no parquet re-scan)
-        def stage_b():
-            catalog = build_catalog(spark)
-            return link_mentions(
-                stage_a_ckpt[0] if stage_a_ckpt else triples_a, catalog
+    def _join_side_jobs(swallow: bool = False) -> None:
+        """Wait for every side job: a stage's own sinks first (the
+        triples_raw write starts the sidecars), then the sidecars.
+        ``swallow=True`` on the error path: the primary stage exception
+        must not be masked by a secondary side-job failure raised out
+        of a finally block."""
+        for futures in (pre_mark_joins, side_futures):
+            for fut in futures:
+                if swallow:
+                    try:
+                        fut.result()
+                    except Exception:
+                        pass
+                else:
+                    fut.result()
+            futures.clear()
+
+    extract_done = resume and _is_done(spark, out_root, "extract")
+    try:
+        if extract_done:
+            # an earlier run wrote the raw table Stage D will copy
+            _check_bucket_layout(spark, raw_path, n_buckets)
+            skipped.append("extract")
+            link_input = sio.read_table(spark, raw_path)
+            start_side_jobs(extracted_now=False)
+        elif backfill_groups is not None:
+            from lexicator_spark.operators.incremental import backfill_triples
+
+            t0 = time.monotonic()
+            backfill_triples(
+                spark,
+                turns_source if turns_source is not None else turns,
+                raw_path,
+                impl=impl,
+                n_buckets=n_buckets,
+                n_groups=backfill_groups,
+                rejects_location=os.path.join(out_root, "rejects"),
             )
+            # same bookkeeping as staged(): the stage checkpoint marks
+            # the WHOLE extraction done (group-level progress lives in
+            # the backfill marker); wall_ms spans only this
+            # invocation's groups
+            link_input = sio.read_table(spark, raw_path)
+            buckets = _bucket_counts(spark, raw_path)
+            rows_out = (
+                sum(c for _, c in buckets)
+                if buckets is not None
+                else link_input.count()
+            )
+            finish(
+                "extract", rows_out, int((time.monotonic() - t0) * 1000),
+                buckets, rows_in=turns.count(),
+                n_partitions=link_input.rdd.getNumPartitions(),
+            )
+            start_side_jobs(extracted_now=True)
+        else:
+            t0 = time.monotonic()
+            link_input = stage_a()
+
+            def write_raw() -> dict:
+                _, written = write_stage(link_input, raw_path, "conv_id", t0)
+                start_side_jobs(extracted_now=True)
+                return written
+
+            raw_write = side_pool.submit(write_raw)
+            n_turns = side_pool.submit(turns.count)
+            pre_mark_joins.extend((raw_write, n_turns))
+
+            def finish_extract() -> None:
+                written = raw_write.result()
+                finish("extract", rows_in=n_turns.result(), **written)
+
+            deferred.append(finish_extract)
+
+        # Stage B — linking (from the Stage-A pin, beside the
+        # triples_raw write, when this call ran Stage A unchunked)
+        def stage_b():
+            return link_mentions(link_input, build_catalog(spark))
 
         if _runs("link"):
             same_as = staged(
-                "link", triples_a, stage_b, os.path.join(out_root, "same_as"), None
+                "link", stage_b, os.path.join(out_root, "same_as"), None,
+                input_stage="extract",
             )
+        finish_deferred()
 
         # Stage C — canonicalization
         def stage_c():
@@ -618,8 +693,9 @@ def run_pipeline(
 
         if _runs("canonicalize"):
             canonical = staged(
-                "canonicalize", same_as, stage_c,
+                "canonicalize", stage_c,
                 os.path.join(out_root, "canonical"), None,
+                input_stage="link",
             )
 
         # Stage D — materialize the final graph table by file copy
@@ -672,7 +748,7 @@ def run_pipeline(
         return entities_dim(canonical, same_as, surface_rollup(stats))
 
     if _runs("entities"):
-        staged("entities", None, stage_entities, entities_path, None)
+        staged("entities", stage_entities, entities_path, None)
 
     return PipelineResult(
         triples_path=triples_path,

@@ -401,6 +401,173 @@ def test_lineage_complete_after_crash_mid_build(spark, tmp_path, monkeypatch):
     assert read_lineage(spark, out).count() == n
 
 
+def _stage_tables(spark, root):
+    """Every table a build writes under ``root``, as sorted row reprs."""
+    from lexicator_spark.sources import io as sio
+
+    return {
+        name: sorted(
+            repr(tuple(r))
+            for r in sio.read_table(spark, os.path.join(root, name)).collect()
+        )
+        for name in (
+            "triples_raw", "triples_raw/_frontier", "rejects", "same_as",
+            "canonical", "triples", "entities", "_surface_stats",
+        )
+    }
+
+
+def test_lineage_rows_in_from_known_counts(spark, tmp_path):
+    """A stage's lineage ``rows_in`` is a count the build already holds
+    (FIXTURES.md §4): extract's is the turns count, link's is extract's
+    ``rows_out`` (the triples_raw rows), canonicalize's is link's (the
+    same_as rows) — also on a resume that skips extract, where link
+    takes it from the extract marker."""
+    from lexicator_spark.sources import io as sio
+
+    df = synth.corpus_df(spark, synth.make_corpus(n_convs=20, seed=5))
+    out = str(tmp_path / "kg")
+    res = run_pipeline(spark, df, out, resume=False)
+    rows = {r["stage"]: r for r in res.lineage}
+    assert rows["extract"]["rows_in"] == df.count()
+    assert rows["link"]["rows_in"] == rows["extract"]["rows_out"] > 0
+    assert rows["link"]["rows_in"] == sio.read_table(
+        spark, os.path.join(out, "triples_raw")
+    ).count()
+    assert rows["canonicalize"]["rows_in"] == rows["link"]["rows_out"] > 0
+    assert rows["canonicalize"]["rows_in"] == sio.read_table(
+        spark, os.path.join(out, "same_as")
+    ).count()
+    written = {
+        r.stage: (r.rows_in, r.rows_out)
+        for r in read_lineage(spark, out).filter("partition_id = -1").collect()
+    }
+    assert written == {s: (r["rows_in"], r["rows_out"]) for s, r in rows.items()}
+
+    for stage in ("link", "canonicalize", "materialize", "entities"):
+        os.remove(os.path.join(out, "_checkpoints", f"{stage}.json"))
+    again = run_pipeline(spark, df, out, resume=True)
+    assert again.stages_skipped == ["extract"]
+    resumed = {r["stage"]: r for r in again.lineage}
+    assert resumed["link"]["rows_in"] == rows["extract"]["rows_out"]
+    assert resumed["link"]["rows_out"] == rows["link"]["rows_out"]
+    assert resumed["canonicalize"]["rows_in"] == resumed["link"]["rows_out"]
+
+
+def _hold_raw_write(monkeypatch, until):
+    """Make the triples_raw write wait (at most 60 s) for ``until``;
+    returns the list that records whether each wait saw it set."""
+    from lexicator_spark.plans import pipeline as P
+
+    real_write = P.sio.write_table
+    waited = []
+
+    def write_table(df, location, *args, **kwargs):
+        if os.path.basename(location) == "triples_raw":
+            waited.append(until.wait(60))
+        return real_write(df, location, *args, **kwargs)
+
+    monkeypatch.setattr(P.sio, "write_table", write_table)
+    return waited
+
+
+def test_link_runs_while_triples_raw_is_written(spark, tmp_path, monkeypatch):
+    """Stage B links from the Stage-A pin while triples_raw is still
+    being written: the raw write waits for link_mentions to be called,
+    which a build that writes triples_raw before linking never does
+    (its wait times out)."""
+    import threading
+
+    from lexicator_spark.plans import pipeline as P
+
+    linking = threading.Event()
+    waited = _hold_raw_write(monkeypatch, linking)
+    real_link = P.link_mentions
+
+    def link_mentions(*args, **kwargs):
+        linking.set()
+        return real_link(*args, **kwargs)
+
+    monkeypatch.setattr(P, "link_mentions", link_mentions)
+    df = synth.corpus_df(spark, synth.make_corpus(n_convs=12, seed=3))
+    res = run_pipeline(spark, df, str(tmp_path / "kg"), resume=False)
+    assert linking.is_set()
+    assert waited == [True]
+    assert res.stages_run == list(P.STAGES)
+
+
+def test_link_failure_beside_raw_write_keeps_extract_marker(
+    spark, tmp_path, monkeypatch
+):
+    """Stage B fails while the triples_raw write is in flight: the
+    build raises B's error only after extract has finished, so the
+    extract marker exists and the link marker does not, and a resume
+    skips extract and ends with the tables of a clean build."""
+    import threading
+
+    import pytest
+
+    from lexicator_spark.plans import pipeline as P
+
+    link_failed = threading.Event()
+    waited = _hold_raw_write(monkeypatch, link_failed)
+
+    def link_mentions(*_args, **_kwargs):
+        link_failed.set()
+        raise RuntimeError("simulated crash in link")
+
+    monkeypatch.setattr(P, "link_mentions", link_mentions)
+    df = synth.corpus_df(spark, synth.make_corpus(n_convs=12, seed=4))
+    out = str(tmp_path / "kg")
+    with pytest.raises(RuntimeError, match="simulated crash in link"):
+        run_pipeline(spark, df, out, resume=False)
+    assert waited == [True]
+    assert P._is_done(spark, out, "extract")
+    assert not P._is_done(spark, out, "link")
+    monkeypatch.undo()
+
+    res = run_pipeline(spark, df, out, resume=True)
+    assert res.stages_skipped == ["extract"]
+    clean = str(tmp_path / "clean")
+    run_pipeline(spark, df, clean, resume=False)
+    assert _stage_tables(spark, out) == _stage_tables(spark, clean)
+
+
+def test_failed_raw_write_waits_for_rejects_write(spark, tmp_path, monkeypatch):
+    """A failed triples_raw write raises out of run_pipeline only after
+    the rejects write beside it has returned — no side write outlives
+    the call — and leaves no extract marker."""
+    import threading
+    import time
+
+    import pytest
+
+    from lexicator_spark.plans import pipeline as P
+
+    real_write = P.sio.write_table
+    rejects_returned = threading.Event()
+
+    def write_table(df, location, *args, **kwargs):
+        name = os.path.basename(location)
+        if name == "triples_raw":
+            raise RuntimeError("simulated triples_raw write failure")
+        if name == "rejects":
+            time.sleep(3)
+            try:
+                return real_write(df, location, *args, **kwargs)
+            finally:
+                rejects_returned.set()
+        return real_write(df, location, *args, **kwargs)
+
+    monkeypatch.setattr(P.sio, "write_table", write_table)
+    df = synth.corpus_df(spark, synth.make_corpus(n_convs=12, seed=6))
+    out = str(tmp_path / "kg")
+    with pytest.raises(RuntimeError, match="simulated triples_raw"):
+        run_pipeline(spark, df, out, resume=False)
+    assert rejects_returned.is_set()
+    assert not P._is_done(spark, out, "extract")
+
+
 def test_stage_recorder_runs_no_spark_job(spark, tmp_path):
     """Finishing a stage (lineage rows + marker) is driver-side
     small-file I/O: it must never launch a Spark job."""
