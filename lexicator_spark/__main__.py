@@ -155,7 +155,7 @@ def main(argv: list[str] | None = None) -> int:
 
             update_stage_bucket_counts(
                 spark, args.out, "extract", raw_path,
-                list(res.touched_buckets),
+                list(res.touched_buckets), list(res.bucket_counts),
             )
         print(
             json.dumps(

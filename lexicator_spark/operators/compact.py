@@ -77,6 +77,10 @@ class CompactResult(NamedTuple):
     # O(delta) refresh lineage merges against) need the list, not
     # just its length
     touched_buckets: tuple = ()
+    # the rewritten buckets' row counts, as the upsert returned them
+    # (sorted ``(bucket, count)`` pairs), so that bookkeeping needs no
+    # re-read of the buckets just written
+    bucket_counts: tuple = ()
 
 
 def _marker_path(stream_out: str) -> str:
@@ -195,7 +199,7 @@ def compact_stream_epochs(
     else:
         replacement = new_clean
 
-    sio.upsert_partitions(
+    counts = sio.upsert_partitions(
         replacement,
         stage_location,
         partition_key=partition_key,
@@ -210,5 +214,6 @@ def compact_stream_epochs(
             spark, os.path.join(stream_out, f"epoch_id={e}"), recursive=True
         )
     return CompactResult(
-        len(fresh), n_new, len(touched), max(fresh), tuple(sorted(touched))
+        len(fresh), n_new, len(touched), max(fresh), tuple(sorted(touched)),
+        tuple(counts),
     )

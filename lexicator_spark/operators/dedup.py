@@ -52,19 +52,6 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def tokenset_dedup(docs: DataFrame) -> DataFrame:
-    """Near-dup clusters: identical distinct-token SET (order/multiplicity
-    insensitive).  Signature = md5 of the sorted distinct tokens."""
-    sig = F.md5(F.concat_ws(" ", F.array_sort(_tokens(F.col("text")))))
-    return (
-        docs.select("doc_id", sig.alias("sig"))
-        .groupBy("sig")
-        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_members"))
-        .filter(F.col("n_members") > 1)
-        .select("keep_id", "n_members")
-    )
-
-
 def _verify_jaccard(
     cand: DataFrame, base: DataFrame, threshold: float
 ) -> DataFrame:

@@ -15,6 +15,12 @@ conversation is idempotent because stage writes are keyed dedups).
 With Iceberg the frontier bookkeeping is replaced by incremental
 snapshot reads — same function shape.
 
+One Stage-A refresh entry, ``refresh_triples_partitioned``: ``turns``
+is a snapshot DataFrame (changes detected, or named by a
+``change_feed``) or the location of a bucketed raw-turns table (feed
+required; the read prunes to the fed conversations' buckets).  Every
+bucket modulus comes from the tables' own ``_buckets.json``.
+
 Scale: detection is one union-aggregate shuffle over (conv_id); the
 anti/semi joins run on conv_id — co-partitioned with the stage
 tables' salted-hash layout, so at 10^12 turns the delta path touches
@@ -121,18 +127,18 @@ def validate_refresh_preconditions(
     stage_location: str,
     turns_location: str | None = None,
 ) -> dict | None:
-    """Raise — without mutating anything — the ValueErrors the refresh
-    entry points would raise before their first write.  Callers that
-    bracket a refresh with the crash-recovery in-flight marker
-    (``plans/refresh.begin_refresh``) run this FIRST, so a mere
-    validation failure cannot strand the marker and force a spurious
-    O(corpus) downstream rebuild on the next run.
+    """Raise — without mutating anything — the ValueErrors
+    ``refresh_triples_partitioned`` would raise before its first
+    write.  Callers that bracket a refresh with the crash-recovery
+    in-flight marker (``plans/refresh.begin_refresh``) run this FIRST,
+    so a mere validation failure cannot strand the marker and force a
+    spurious O(corpus) downstream rebuild on the next run.
 
     Checks: no unfinished chunked backfill on the stage table, and —
     for the feed-pruned path (``turns_location`` given) — frontier
     existence plus conv_id bucketing of the raw-turns table.  Returns
-    the turns table's bucket meta (``None`` when no ``turns_location``)
-    so the feed path doesn't re-read the sidecar."""
+    the turns table's bucket meta (``None`` when no ``turns_location``),
+    whose modulus the feed path prunes with."""
     _refuse_unfinished_backfill(spark, stage_location)
     if turns_location is None:
         return None
@@ -158,8 +164,8 @@ def validate_refresh_preconditions(
             f"turns table at {turns_location} is bucketed on "
             f"{t_meta['partition_key']} (_buckets.json), not conv_id: "
             "feed-scoped pruning would miss the fed conversations and "
-            "delete their triples; rebucket on conv_id or use "
-            "refresh_triples_partitioned with the full snapshot"
+            "delete their triples; rebucket on conv_id or pass the "
+            "full snapshot as a DataFrame"
         )
     return t_meta
 
@@ -181,81 +187,10 @@ def _refuse_unfinished_backfill(spark: SparkSession, stage_location: str) -> Non
             )
 
 
-def refresh_from_feed(
-    spark: SparkSession,
-    turns_location: str,
-    stage_location: str,
-    change_feed: DataFrame,
-    impl: str = "native",
-    n_buckets: int | None = None,
-    on_replacement: Callable[[DataFrame, list[int]], Any] | None = None,
-) -> "RefreshResult":
-    """Fully delta-scoped refresh: the end-to-end O(delta) ingest shape.
-
-    ``turns_location`` is a BUCKETED raw-turns table (written /
-    upserted via ``sio.write_table`` / ``sio.upsert_partitions`` keyed
-    on conv_id) that already contains the fed conversations' current
-    turns — the production loop is: a batch of new turns arrives with
-    its conv_id list (the RecentChanges poll), the raw table is
-    bucket-upserted with it (O(delta)), then this refresh re-extracts
-    exactly those conversations (O(delta)).  The raw-turns read here
-    partition-prunes to the buckets containing fed conversations —
-    with ``change_feed`` alone (``refresh_triples_partitioned``) the
-    detection is skipped but the re-extraction semi-join still scans
-    the whole snapshot, which at 29M turns costs ~47 s for a
-    10-conversation delta vs ~14 s via this path (2.9× vs 9.8×
-    against full rebuild; cost here ∝ touched-bucket fraction, so
-    the gap widens with bucket count — BENCH/BASELINE.md).
-
-    The raw table's bucket modulus may differ from the stage's (each
-    side prunes with its own sidecar-recorded modulus).  Requires an
-    existing stage frontier: the one-time bootstrap must see the full
-    corpus, so run one full-corpus refresh (or ``sio.write_table`` +
-    first ``refresh_triples_partitioned``) before switching to the
-    feed loop — raises ValueError otherwise rather than silently
-    leaving unlisted conversations stale.  ``on_replacement`` is passed
-    through to ``refresh_triples_partitioned``."""
-    t_meta = validate_refresh_preconditions(
-        spark, stage_location, turns_location
-    )
-    changed = (
-        change_feed.select("conv_id")
-        # a NULL conv_id names nothing — drop it.  (Note xxhash64(NULL)
-        # is NOT NULL: it folds to the seed, i.e. one constant bucket —
-        # the same constant plans/pipeline._null_bucket relies on — so
-        # without this filter a NULL feed row would needlessly drag
-        # that whole bucket into every refresh.)
-        .filter(F.col("conv_id").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    t_touched = sorted(
-        r.p
-        for r in changed.select(
-            F.pmod(F.xxhash64("conv_id"), F.lit(t_meta["n_buckets"]))
-            .cast("int")
-            .alias("p")
-        )
-        .distinct()
-        .collect()
-    )
-    turns = (
-        sio.read_table(spark, turns_location, keep_bucket_col=True)
-        .filter(F.col("p_hash").isin(t_touched))
-        .drop("p_hash")
-    )
-    return refresh_triples_partitioned(
-        spark, turns, stage_location, impl=impl, n_buckets=n_buckets,
-        change_feed=changed, _feed_normalized=True,
-        on_replacement=on_replacement,
-    )
-
-
 def materialize_frontier(
     spark: SparkSession,
     turns: DataFrame,
     stage_location: str,
-    n_buckets: int | None = None,
 ) -> bool:
     """Write the ``_frontier`` table at initial-build time, from the
     same turns snapshot the build extracted — so the FIRST refresh is
@@ -277,16 +212,21 @@ def materialize_frontier(
     floc = _frontier_location(stage_location)
     if fsutil.exists(spark, floc):
         return False
-    meta = sio.read_bucket_meta(spark, stage_location)
-    if meta is not None:
-        n_buckets = meta["n_buckets"]
-    elif n_buckets is None:
-        n_buckets = sio.DEFAULT_BUCKETS
     frontier = turns.groupBy("conv_id").agg(
         F.max("turn_idx").alias("done_max_idx")
     )
-    sio.write_table(frontier, floc, partition_key="conv_id", n_buckets=n_buckets)
+    sio.write_table(
+        frontier, floc, partition_key="conv_id",
+        n_buckets=_stage_modulus(spark, stage_location),
+    )
     return True
+
+
+def _stage_modulus(spark: SparkSession, stage_location: str) -> int:
+    """The stage table's bucket modulus: its ``_buckets.json``, else
+    ``sio.DEFAULT_BUCKETS`` (a table not written yet)."""
+    meta = sio.read_bucket_meta(spark, stage_location)
+    return meta["n_buckets"] if meta is not None else sio.DEFAULT_BUCKETS
 
 
 def _frontier_location(stage_location: str) -> str:
@@ -361,8 +301,7 @@ def backfill_triples(
     if max_groups_per_call is not None and max_groups_per_call < 1:
         raise ValueError("max_groups_per_call must be >= 1")
     if n_buckets is None:
-        meta = sio.read_bucket_meta(spark, stage_location)
-        n_buckets = meta["n_buckets"] if meta else sio.DEFAULT_BUCKETS
+        n_buckets = _stage_modulus(spark, stage_location)
     # validate the turns input BEFORE any marker is persisted: this is
     # read-only, and a marker stranded by a failed validation would
     # make every later refresh/backfill on this stage raise
@@ -547,20 +486,15 @@ class RefreshResult(NamedTuple):
 
 def refresh_triples_partitioned(
     spark: SparkSession,
-    turns: DataFrame,
+    turns: DataFrame | str,
     stage_location: str,
     impl: str = "native",
-    n_buckets: int | None = None,
     change_feed: DataFrame | None = None,
-    _feed_normalized: bool = False,
     on_replacement: Callable[[DataFrame, list[int]], Any] | None = None,
 ) -> RefreshResult:
     """Idempotent in-place refresh of a persisted Stage-A table: the
     parquet stand-in for Iceberg ``MERGE INTO`` (SURVEY.md §2 #2/#10).
-    (``_feed_normalized`` is internal — ``refresh_from_feed`` passes a
-    feed it already null-filtered, distinct-ed and checkpointed, so
-    repeating that normalization here would cost a second eager
-    materialization per refresh tick.)
+    The one Stage-A refresh entry, for both shapes of ``turns``.
 
     ``change_feed`` — a DataFrame with a ``conv_id`` column naming the
     conversations known to have changed — is the RecentChanges analog
@@ -605,10 +539,28 @@ def refresh_triples_partitioned(
     against that table.  On first refresh of a pre-frontier table the
     frontier bootstraps from the triples.
 
-    The table's bucketing comes from the ``_buckets.json`` sidecar
-    recorded at write time; passing an ``n_buckets`` that contradicts
-    it raises — a different modulus would scatter kept rows into new
-    buckets while dynamic overwrite leaves the stale ones in place.
+    ``turns`` as a STRING names a BUCKETED raw-turns table (written /
+    upserted via ``sio.write_table`` / ``sio.upsert_partitions`` keyed
+    on conv_id) that already holds the fed conversations' current
+    turns: the end-to-end O(delta) ingest shape.  The production loop
+    is: a batch of new turns arrives with its conv_id list (the
+    RecentChanges poll), the raw table is bucket-upserted with it
+    (O(delta)), then this refresh re-extracts exactly those
+    conversations (O(delta)).  It needs ``change_feed`` and an
+    existing ``_frontier`` (``validate_refresh_preconditions``; the
+    one-time bootstrap must see the full corpus), and reads only the
+    raw buckets holding a fed conversation, pruned in the turns
+    table's own ``_buckets.json`` modulus (it may differ from the
+    stage's).  With a DataFrame and a feed, detection is skipped but
+    the re-extraction semi-join still scans the whole snapshot, which
+    at 29M turns cost ~47 s for a 10-conversation delta vs ~14 s on
+    the pruned read (cost there ∝ touched-bucket fraction, so the gap
+    widens with bucket count — BENCH/BASELINE.md).
+
+    The stage table's bucketing comes from its ``_buckets.json``
+    sidecar recorded at write time (``sio.DEFAULT_BUCKETS`` when
+    there is none): a different modulus would scatter kept rows into
+    new buckets while dynamic overwrite leaves the stale ones in place.
 
     ``on_replacement(pinned, touched)`` is called with the touched
     buckets' pinned replacement content (the stage table's new rows
@@ -619,22 +571,21 @@ def refresh_triples_partitioned(
     which the concurrent upsert is replacing.  ``plans.refresh``
     derives its ``_surface_stats`` update and universe diff there.
     Not called when nothing changed."""
-    meta = sio.read_bucket_meta(spark, stage_location)
-    if meta is not None:
-        if n_buckets is not None and n_buckets != meta["n_buckets"]:
-            raise ValueError(
-                f"table at {stage_location} is bucketed with "
-                f"n_buckets={meta['n_buckets']} (from _buckets.json); "
-                f"refusing refresh with n_buckets={n_buckets}"
-            )
-        n_buckets = meta["n_buckets"]
-    elif n_buckets is None:
-        n_buckets = sio.DEFAULT_BUCKETS
-
-    _refuse_unfinished_backfill(spark, stage_location)
-
     floc = _frontier_location(stage_location)
-    bootstrap = not fsutil.exists(spark, floc)
+    if isinstance(turns, str):
+        if change_feed is None:
+            raise ValueError(
+                f"refresh from the turns table at {turns} needs "
+                "change_feed: without a feed the detection aggregate "
+                "must see the full snapshot — pass it as a DataFrame"
+            )
+        t_meta = validate_refresh_preconditions(spark, stage_location, turns)
+        bootstrap = False  # validated: the frontier exists
+    else:
+        _refuse_unfinished_backfill(spark, stage_location)
+        bootstrap = not fsutil.exists(spark, floc)
+    n_buckets = _stage_modulus(spark, stage_location)
+
     # detection mode pins (conv_id, max_idx) — the changed set AND the
     # changed conversations' new frontier rows in ONE checkpointed
     # delta-sized frame, so the frontier replacement below needs no
@@ -647,16 +598,31 @@ def refresh_triples_partitioned(
         # RecentChanges proper: the feed IS the changed set — no
         # snapshot-wide detection aggregate, no full frontier read.
         # NULL feed rows name nothing: dropped.  (xxhash64(NULL) is
-        # the constant seed bucket, not NULL — they wouldn't break
-        # the touched list, just drag one bucket in for no reason.)
+        # the constant seed bucket, not NULL — without this filter a
+        # NULL feed row would drag that whole bucket into every
+        # refresh, on the turns read and the stage upsert alike.)
         changed = (
-            change_feed
-            if _feed_normalized
-            else change_feed.select("conv_id")
+            change_feed.select("conv_id")
             .filter(F.col("conv_id").isNotNull())
             .distinct()
             .localCheckpoint(eager=True)
         )
+        if isinstance(turns, str):
+            t_touched = sorted(
+                r.p
+                for r in changed.select(
+                    F.pmod(F.xxhash64("conv_id"), F.lit(t_meta["n_buckets"]))
+                    .cast("int")
+                    .alias("p")
+                )
+                .distinct()
+                .collect()
+            )
+            turns = (
+                sio.read_table(spark, turns, keep_bucket_col=True)
+                .filter(F.col("p_hash").isin(t_touched))
+                .drop("p_hash")
+            )
     else:
         if bootstrap:
             # one-time full scan: no frontier table yet, derive it from

@@ -54,10 +54,6 @@ def _toked(docs: DataFrame, text_col: str, toks_col: str | None):
     return docs.withColumn("__toks", _toks(F.col(text_col))), F.col("__toks"), True
 
 
-def with_token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    return docs.withColumn("n_tokens", F.size(_toks(F.col(text_col))))
-
-
 def with_tokens(
     docs: DataFrame, text_col: str = "text", out_col: str = "__toks"
 ) -> DataFrame:

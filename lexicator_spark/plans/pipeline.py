@@ -590,10 +590,7 @@ def run_pipeline(
     def start_side_jobs(extracted_now: bool) -> None:
         if extracted_now:
             side_futures.append(
-                side_pool.submit(
-                    materialize_frontier, spark, turns, raw_path,
-                    n_buckets=n_buckets,
-                )
+                side_pool.submit(materialize_frontier, spark, turns, raw_path)
             )
         side_futures.append(
             side_pool.submit(ensure_surface_stats, spark, out_root, n_buckets)

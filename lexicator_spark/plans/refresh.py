@@ -75,7 +75,6 @@ from lexicator_spark.operators.canonicalize import (
 )
 from lexicator_spark.operators.incremental import (
     RefreshResult,
-    refresh_from_feed,
     refresh_triples_partitioned,
     validate_refresh_preconditions,
 )
@@ -234,15 +233,14 @@ def _delta_bucket_counts(
     out_root: str,
     stage: str,
     touched: list[int],
-    fresh_counts: list[tuple] | None = None,
+    fresh_counts: list[tuple],
 ) -> list[tuple] | None:
     """O(delta) per-bucket row counts after a partial upsert: untouched
     buckets keep the counts recorded in the stage's checkpoint marker
-    (written at build time and maintained by every refresh), only the
-    rewritten buckets are re-counted through a partition-pruned read —
-    or, when the caller passes ``fresh_counts`` (the rewritten buckets'
-    counts that ``sio.upsert_partitions`` or ``_materialize_by_copy``
-    returns), with ZERO extra jobs.  Falls back to one full
+    (written at build time and maintained by every refresh), the
+    rewritten buckets take ``fresh_counts`` (the counts that
+    ``sio.upsert_partitions`` or ``_materialize_by_copy`` returns for
+    them) — ZERO extra jobs.  Falls back to one full
     ``_bucket_counts`` pass when the marker carries no counts
     (pre-counts root) — a refresh must never pay a corpus-wide job for
     lineage bookkeeping (this module's own contract: 'a
@@ -253,21 +251,10 @@ def _delta_bucket_counts(
         prior = None
     if prior is None:
         return P._bucket_counts(spark, table_path)
-    if fresh_counts is not None:
-        fresh_map = {int(b): int(c) for b, c in fresh_counts}
-    else:
-        fresh_map = {
-            int(r["p_hash"]): int(r["count"])
-            for r in sio.read_table(spark, table_path, keep_bucket_col=True)
-            .filter(F.col("p_hash").isin(list(touched)))
-            .groupBy("p_hash")
-            .count()
-            .collect()
-        }
     merged = {int(b): int(c) for b, c in prior}
     for b in touched:
         merged.pop(int(b), None)  # a touched bucket may now be empty
-    merged.update(fresh_map)
+    merged.update((int(b), int(c)) for b, c in fresh_counts)
     return sorted(merged.items())
 
 
@@ -277,20 +264,25 @@ def update_stage_bucket_counts(
     stage: str,
     table_path: str,
     touched: list[int],
+    fresh_counts: list[tuple],
 ) -> None:
     """Keep a stage marker's per-bucket counts current after an
     out-of-band mutation of its table (stream compaction folds epochs
     into triples_raw without going through ``refresh_pipeline``) —
     otherwise the next ``refresh_pipeline``'s O(delta) lineage counts
     would merge against stale untouched-bucket numbers and persist the
-    error back into the marker.  Same O(delta) merge as
+    error back into the marker.  ``fresh_counts`` are the rewritten
+    buckets' counts the mutation's upsert returned
+    (``CompactResult.bucket_counts``); same O(delta) merge as
     ``_delta_bucket_counts``; no-op when the root has no marker for
     the stage (standalone tables)."""
     try:
         marker = P._read_marker(spark, out_root, stage)
     except Exception:
         return
-    merged = _delta_bucket_counts(spark, table_path, out_root, stage, touched)
+    merged = _delta_bucket_counts(
+        spark, table_path, out_root, stage, touched, fresh_counts
+    )
     marker["bucket_counts"] = merged
     if merged is not None:
         marker["rows_out"] = sum(c for _, c in merged)
@@ -315,11 +307,12 @@ def refresh_pipeline(
     derives from the refreshed raw table), so the Stage-A ladder's
     fully-pruned shape plugs in directly: pass ``turns_location`` (a
     BUCKETED raw-turns table already upserted with the delta) plus
-    ``change_feed`` instead of ``turns``, and extraction goes through
-    ``refresh_from_feed`` — the raw read partition-prunes to the fed
-    conversations' buckets and the last O(corpus) pass (the
-    re-extraction semi-join over the snapshot) disappears.  Measured
-    at 29.3M turns in BENCH/BASELINE.md (`refresh_e2e` section)."""
+    ``change_feed`` instead of ``turns``, and Stage A
+    (``refresh_triples_partitioned`` given the location) reads only
+    the fed conversations' raw buckets, so the last O(corpus) pass
+    (the re-extraction semi-join over the snapshot) disappears.
+    Measured at 29.3M turns in BENCH/BASELINE.md (`refresh_e2e`
+    section)."""
     if turns is None and turns_location is None:
         raise ValueError("refresh_pipeline needs turns or turns_location")
     if turns_location is not None and change_feed is None:
@@ -449,16 +442,12 @@ def refresh_pipeline(
         # downstream rebuild on the next run (recover_inflight_refresh)
         begin_refresh(spark, out_root)
         t0 = time.monotonic()
-        if turns_location is not None:
-            res: RefreshResult = refresh_from_feed(
-                spark, turns_location, raw_path, change_feed, impl=impl,
-                on_replacement=_stats_and_diff,
-            )
-        else:
-            res = refresh_triples_partitioned(
-                spark, turns, raw_path, impl=impl, change_feed=change_feed,
-                on_replacement=_stats_and_diff,
-            )
+        res: RefreshResult = refresh_triples_partitioned(
+            spark,
+            turns_location if turns_location is not None else turns,
+            raw_path, impl=impl, change_feed=change_feed,
+            on_replacement=_stats_and_diff,
+        )
     if res.n_changed == 0:
         end_refresh(spark, out_root)  # nothing moved; window closed
         return RefreshPipelineResult(0, 0, 0, 0, False, [])

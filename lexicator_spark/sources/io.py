@@ -453,10 +453,6 @@ def write_bucketed_table(
     writer.format("parquet").saveAsTable(table_name)
 
 
-def load_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
 def read_turns(spark: SparkSession, path: str, format: str = "parquet") -> DataFrame:
     """Transcript-turn source for the formats raw conversation logs
     actually arrive in.  The schema is always DECLARED (never

@@ -102,7 +102,8 @@ def main() -> None:
 
     # ── fully-pruned path: bucketed raw-turns table + feed, so the
     # Stage-A re-extraction reads only the fed conversations' buckets
-    # (refresh_from_feed) instead of semi-joining the whole snapshot.
+    # (refresh_triples_partitioned given its location) instead of
+    # semi-joining the whole snapshot.
     # Staging the raw table is untimed (a production loop maintains
     # it continuously); the per-delta raw upsert IS timed separately,
     # mirroring scripts/bench_refresh_invariance.py.

@@ -3,9 +3,11 @@ wall should track BUCKET size, not corpus size.
 
 SCALE.md's partitioning convention says P (the conv_id bucket modulus)
 scales with data so a bucket stays a few GB.  If that holds, the cost
-of `refresh_from_feed` for a fixed-size delta — read the touched raw
-buckets, re-extract the fed conversations, rewrite the touched stage
-buckets — is ∝ corpus_size / P and should be ~CONSTANT across corpus
+of a feed refresh from the bucketed raw table
+(`refresh_triples_partitioned(spark, raw, stage, change_feed=feed)`)
+for a fixed-size delta — read the touched raw buckets, re-extract the
+fed conversations, rewrite the touched stage buckets — is
+∝ corpus_size / P and should be ~CONSTANT across corpus
 sizes once P is sized proportionally.  This script measures exactly
 that, both corpus sizes in ONE session (same box-speed regime):
 
@@ -39,7 +41,7 @@ from pyspark.sql.window import Window as W
 from lexicator_spark.operators.extract import extract_triples, split_rejects
 from lexicator_spark.operators.incremental import (
     materialize_frontier,
-    refresh_from_feed,
+    refresh_triples_partitioned,
 )
 from lexicator_spark.session import get_spark
 from lexicator_spark.sources import io as sio
@@ -124,7 +126,7 @@ def main() -> None:
             )
             upserts.append(round(time.monotonic() - t0, 2))
             t0 = time.monotonic()
-            res = refresh_from_feed(spark, raw, stage, feed)
+            res = refresh_triples_partitioned(spark, raw, stage, change_feed=feed)
             walls.append(round(time.monotonic() - t0, 2))
             meta = [res.n_changed, res.n_buckets_touched]
             print(f"PHASE {tag} feed_refresh upsert={upserts[-1]}s "

@@ -158,14 +158,13 @@ def main() -> None:
     run_phase("refresh_1pct", (7,), 100, feed_mode=False)
     run_phase("refresh_1pct_feed", (8,), 100, feed_mode=True)
 
-    # ── fully delta-scoped loop (refresh_from_feed): raw turns live
-    # in a bucketed table, each batch is bucket-upserted along with
-    # its conv_id feed, and the refresh prunes BOTH the raw read and
+    # ── fully delta-scoped loop (feed refresh from the raw table's
+    # location): raw turns live in a bucketed table, each batch is
+    # bucket-upserted along with its conv_id feed, and the refresh
+    # prunes BOTH the raw read and
     # the stage read to the fed conversations' buckets.  Staged from
     # the base corpus (untimed): convs fed below were never bumped
     # above, so their raw content is current.
-    from lexicator_spark.operators.incremental import refresh_from_feed
-
     RAW = os.path.join(ROOT, "turns_bucketed")
     sio.write_table(turns, RAW, partition_key="conv_id")
     print("PHASE raw_staged", flush=True)
@@ -199,7 +198,7 @@ def main() -> None:
             )
             upserts.append(round(time.monotonic() - t0, 2))
             t0 = time.monotonic()
-            res = refresh_from_feed(spark, RAW, STAGE, feed)
+            res = refresh_triples_partitioned(spark, RAW, STAGE, change_feed=feed)
             walls.append(round(time.monotonic() - t0, 2))
             meta = [res.n_changed, res.n_buckets_touched]
             print(f"PHASE {name} upsert={upserts[-1]}s refresh={walls[-1]}s "

@@ -250,6 +250,45 @@ def test_compact_then_detection_refresh_converges(spark, tmp_path):
     assert (ref.n_changed, ref.n_buckets_touched) == (0, 0)
 
 
+def test_compact_into_built_root_keeps_extract_bucket_counts(spark, tmp_path):
+    """What the CLI's ``--compact`` does to a BUILT root: the extract
+    marker's per-bucket counts are merged with the counts the
+    compaction's upsert returned, and equal a full recount of
+    ``triples_raw`` afterwards."""
+    from lexicator_spark.plans import pipeline as P
+    from lexicator_spark.plans.refresh import update_stage_bucket_counts
+
+    corpus = synth.make_corpus(n_convs=40, seed=37, shuffled=False)
+    turns = synth.corpus_df(spark, corpus)
+    conv_ids = sorted({r[0] for r in corpus.rows})
+    out_root = str(tmp_path / "kg")
+    P.run_pipeline(
+        spark, turns.filter(F.col("conv_id").isin(conv_ids[:30])), out_root
+    )
+    raw = os.path.join(out_root, "triples_raw")
+
+    in_dir = str(tmp_path / "turns_in")
+    (
+        turns.filter(F.col("conv_id").isin(conv_ids[30:]))
+        .repartition(4)
+        .write.parquet(in_dir)
+    )
+    sink = str(tmp_path / "stream_out")
+    _run_stream(spark, in_dir, sink, str(tmp_path / "ckpt"))
+    res = compact_stream_epochs(spark, sink, raw)
+    assert res.n_buckets_touched > 0
+    assert [b for b, _ in res.bucket_counts] == list(res.touched_buckets)
+
+    update_stage_bucket_counts(
+        spark, out_root, "extract", raw,
+        list(res.touched_buckets), list(res.bucket_counts),
+    )
+    marker = P._read_marker(spark, out_root, "extract")
+    fresh = P._bucket_counts(spark, raw)
+    assert sorted(map(tuple, marker["bucket_counts"])) == sorted(fresh)
+    assert marker["rows_out"] == sum(c for _, c in fresh)
+
+
 def test_compact_preserves_duplicate_row_multiplicity(spark, streamed):
     """A legitimately duplicated row already in the serving table (a
     raw turn ingested twice extracts to two identical triples — the

@@ -102,7 +102,7 @@ def test_partitioned_refresh_upserts_only_touched_buckets(spark, tmp_path):
     sio.write_table(extract_triples(v1), loc, partition_key="conv_id", n_buckets=n_buckets)
     before = _file_state(loc)
 
-    res = refresh_triples_partitioned(spark, v2, loc, n_buckets=n_buckets)
+    res = refresh_triples_partitioned(spark, v2, loc)
     assert _tset(res.table) == _tset(extract_triples(v2))
     assert res.n_changed > 0 and res.n_buckets_touched > 0
 
@@ -124,18 +124,13 @@ def test_partitioned_refresh_upserts_only_touched_buckets(spark, tmp_path):
 
     # idempotent: refreshing again with the same turns touches no files
     stable = _file_state(loc)
-    again = refresh_triples_partitioned(spark, v2, loc, n_buckets=n_buckets)
+    again = refresh_triples_partitioned(spark, v2, loc)
     assert _file_state(loc) == stable
     assert again.n_changed == 0 and again.n_buckets_touched == 0
     assert _tset(again.table) == _tset(res.table)
 
-    # bucketing is recorded in the sidecar: a contradicting n_buckets
-    # is refused instead of silently scattering rows
-    import pytest
-
-    with pytest.raises(ValueError, match="n_buckets"):
-        refresh_triples_partitioned(spark, v2, loc, n_buckets=16)
-    # and omitting it uses the recorded value
+    # bucketing is recorded in the sidecar: the refresh uses the
+    # recorded value
     auto = refresh_triples_partitioned(spark, v2, loc)
     assert auto.n_changed == 0
 
@@ -203,9 +198,7 @@ def test_change_feed_refresh(spark, tmp_path):
 
     # frontier bootstrap always runs detection (documented): a feed on
     # a pre-frontier table still yields the full recompute
-    res = refresh_triples_partitioned(
-        spark, v1, loc, n_buckets=n_buckets, change_feed=feed([])
-    )
+    res = refresh_triples_partitioned(spark, v1, loc, change_feed=feed([]))
     assert res.n_changed == 0 or _tset(res.table) == _tset(extract_triples(v1))
 
     # partial feed: only the listed changed convs refresh; the rest of
@@ -213,9 +206,7 @@ def test_change_feed_refresh(spark, tmp_path):
     listed = sorted(grew)[: len(grew) // 2]
     unlisted = sorted(grew)[len(grew) // 2:]
     before = _file_state(loc)
-    res = refresh_triples_partitioned(
-        spark, v2, loc, n_buckets=n_buckets, change_feed=feed(listed)
-    )
+    res = refresh_triples_partitioned(spark, v2, loc, change_feed=feed(listed))
     assert res.n_changed == len(listed)
     got = _tset(res.table)
     v2_triples = _tset(extract_triples(v2))
@@ -242,36 +233,32 @@ def test_change_feed_refresh(spark, tmp_path):
     # same contents); feed naming the remaining changed convs: table
     # converges to the full recompute
     res = refresh_triples_partitioned(
-        spark, v2, loc, n_buckets=n_buckets,
-        change_feed=feed(unlisted + conv_ids[:3]),
+        spark, v2, loc, change_feed=feed(unlisted + conv_ids[:3]),
     )
     assert _tset(res.table) == v2_triples
 
     # a detection-mode refresh after feed refreshes: no-op (frontier
     # is consistent across both modes)
-    res = refresh_triples_partitioned(spark, v2, loc, n_buckets=n_buckets)
+    res = refresh_triples_partitioned(spark, v2, loc)
     assert res.n_changed == 0
 
     # deletion: fed conv_id with no rows in the snapshot drops out
     victim = conv_ids[5]
     v3 = v2.filter(F.col("conv_id") != victim)
-    res = refresh_triples_partitioned(
-        spark, v3, loc, n_buckets=n_buckets, change_feed=feed([victim])
-    )
+    res = refresh_triples_partitioned(spark, v3, loc, change_feed=feed([victim]))
     assert _tset(res.table) == {t for t in v2_triples if t[3] != victim}
 
 
-def test_refresh_from_feed_end_to_end(spark, tmp_path):
+def test_feed_refresh_end_to_end(spark, tmp_path):
     """The O(delta) ingest loop: raw turns live in a bucketed table,
     a batch of new turns is bucket-upserted along with its conv_id
-    list (the feed), and refresh_from_feed re-extracts exactly those
-    conversations reading only their raw/stage buckets — equals a
-    full recompute, leaves every untouched file byte-identical on
-    BOTH tables, and refuses to run before the frontier bootstrap."""
+    list (the feed), and refresh_triples_partitioned given the table's
+    location re-extracts exactly those conversations reading only
+    their raw/stage buckets — equals a full recompute, leaves every
+    untouched file byte-identical on BOTH tables, and refuses to run
+    before the frontier bootstrap."""
     import pytest
     from pyspark.sql import functions as F
-
-    from lexicator_spark.operators.incremental import refresh_from_feed
 
     full_corpus = synth.make_corpus(n_convs=60, seed=23, shuffled=False)
     conv_ids = sorted({r[0] for r in full_corpus.rows})
@@ -299,7 +286,7 @@ def test_refresh_from_feed_end_to_end(spark, tmp_path):
 
     # pre-frontier: feed-scoped refresh must refuse, not silently skip
     with pytest.raises(ValueError, match="_frontier"):
-        refresh_from_feed(spark, raw_loc, stage_loc, feed)
+        refresh_triples_partitioned(spark, raw_loc, stage_loc, change_feed=feed)
     # bootstrap via one full-corpus detection refresh (v1: no-op work)
     refresh_triples_partitioned(spark, v1, stage_loc)
 
@@ -307,7 +294,7 @@ def test_refresh_from_feed_end_to_end(spark, tmp_path):
     plain = str(tmp_path / "plain")
     v1.write.parquet(plain)
     with pytest.raises(ValueError, match="bucketed"):
-        refresh_from_feed(spark, plain, stage_loc, feed)
+        refresh_triples_partitioned(spark, plain, stage_loc, change_feed=feed)
 
     # ingest batch: upsert the new turns into the raw table — the
     # replacement must carry COMPLETE content for every touched raw
@@ -336,7 +323,7 @@ def test_refresh_from_feed_end_to_end(spark, tmp_path):
     }
     raw_before = _file_state(raw_loc)
     stage_before = _file_state(stage_loc)
-    res = refresh_from_feed(spark, raw_loc, stage_loc, feed)
+    res = refresh_triples_partitioned(spark, raw_loc, stage_loc, change_feed=feed)
     assert res.n_changed == len(grew)
     assert _tset(res.table) == _tset(extract_triples(v2))
 
@@ -355,7 +342,7 @@ def test_refresh_from_feed_end_to_end(spark, tmp_path):
             assert _file_state(stage_loc).get(rel) == meta, rel
 
     # steady state: same feed again is idempotent
-    res2 = refresh_from_feed(spark, raw_loc, stage_loc, feed)
+    res2 = refresh_triples_partitioned(spark, raw_loc, stage_loc, change_feed=feed)
     assert _tset(res2.table) == _tset(extract_triples(v2))
 
 
@@ -363,14 +350,12 @@ def test_build_time_frontier_materialization(spark, tmp_path):
     """run_pipeline writes _frontier at build time (turns-derived), so
     the first refresh is delta-scoped: no detection bootstrap, a
     same-snapshot detection refresh is a true no-op even for
-    zero-triple conversations, and refresh_from_feed runs immediately
-    instead of raising pre-bootstrap."""
+    zero-triple conversations, and a feed refresh from the raw-turns
+    table's location runs immediately instead of raising
+    pre-bootstrap."""
     from pyspark.sql import functions as F
 
-    from lexicator_spark.operators.incremental import (
-        materialize_frontier,
-        refresh_from_feed,
-    )
+    from lexicator_spark.operators.incremental import materialize_frontier
     from lexicator_spark.plans.pipeline import run_pipeline
     from lexicator_spark.sources import fsutil
 
@@ -408,9 +393,11 @@ def test_build_time_frontier_materialization(spark, tmp_path):
     )
     v2 = turns.unionByName(delta)
     sio.write_table(v2, raw_turns_loc, partition_key="conv_id")
-    res = refresh_from_feed(
+    res = refresh_triples_partitioned(
         spark, raw_turns_loc, raw,
-        spark.createDataFrame([(c,) for c in grown], "conv_id string"),
+        change_feed=spark.createDataFrame(
+            [(c,) for c in grown], "conv_id string"
+        ),
     )
     assert res.n_changed == len(grown)
     assert _tset(res.table) == _tset(extract_triples(v2))
@@ -422,15 +409,13 @@ def test_change_feed_null_conv_ids_ignored(spark, tmp_path):
     poisons the touched-bucket pruning lists."""
     from pyspark.sql import functions as F
 
-    from lexicator_spark.operators.incremental import refresh_from_feed
-
     corpus = synth.make_corpus(n_convs=30, seed=29, shuffled=False)
     turns = synth.corpus_df(spark, corpus)
     conv_ids = sorted({r[0] for r in corpus.rows})
     loc = str(tmp_path / "triples_raw")
     sio.write_table(extract_triples(turns), loc, partition_key="conv_id",
                     n_buckets=8)
-    refresh_triples_partitioned(spark, turns, loc, n_buckets=8)  # bootstrap
+    refresh_triples_partitioned(spark, turns, loc)  # bootstrap
 
     raw = str(tmp_path / "turns_bucketed")
     grown = conv_ids[:2]
@@ -448,31 +433,42 @@ def test_change_feed_null_conv_ids_ignored(spark, tmp_path):
         [(grown[0],), (None,), (grown[1],), (None,)], "conv_id string"
     )
     # both paths digest the NULLs silently and refresh only the real ids
-    res = refresh_from_feed(spark, raw, loc, feed)
+    res = refresh_triples_partitioned(spark, raw, loc, change_feed=feed)
     assert res.n_changed == 2
     assert _tset(res.table) == _tset(extract_triples(v2))
-    res = refresh_triples_partitioned(spark, v2, loc, n_buckets=8,
-                                      change_feed=feed)
+    res = refresh_triples_partitioned(spark, v2, loc, change_feed=feed)
     assert res.n_changed == 2  # idempotent re-feed, NULLs still ignored
 
 
-def test_refresh_from_feed_rejects_non_conv_id_bucketing(spark, tmp_path):
+def test_feed_refresh_rejects_non_conv_id_bucketing(spark, tmp_path):
     """Feed-scoped pruning is load-bearing for correctness: a raw
     table bucketed on another key would make the pruned read miss the
     fed conversations entirely, and the removed-conversation semantics
     would then DELETE their triples.  Refuse up front instead."""
     import pytest
 
-    from lexicator_spark.operators.incremental import (
-        materialize_frontier,
-        refresh_from_feed,
-    )
+    from lexicator_spark.operators.incremental import materialize_frontier
 
     turns = synth.corpus_df(spark, synth.make_corpus(n_convs=10, seed=23))
     raw = str(tmp_path / "turns_by_tool")
     sio.write_table(turns, raw, partition_key="tool", n_buckets=8)
     stage = str(tmp_path / "stage")
-    materialize_frontier(spark, turns, stage, n_buckets=8)
+    materialize_frontier(spark, turns, stage)
     feed = spark.createDataFrame([("c0",)], "conv_id string")
     with pytest.raises(ValueError, match="bucketed on tool"):
-        refresh_from_feed(spark, raw, stage, feed)
+        refresh_triples_partitioned(spark, raw, stage, change_feed=feed)
+
+
+def test_feed_refresh_location_needs_change_feed(spark, tmp_path):
+    """A turns-table location is the feed-pruned path: without a
+    feed, detection would need the full snapshot, so the call is
+    refused before anything is read or written."""
+    import pytest
+
+    turns = synth.corpus_df(spark, synth.make_corpus(n_convs=5, seed=3))
+    raw = str(tmp_path / "turns_bucketed")
+    sio.write_table(turns, raw, partition_key="conv_id", n_buckets=4)
+    stage = str(tmp_path / "stage")
+    with pytest.raises(ValueError, match="needs change_feed"):
+        refresh_triples_partitioned(spark, raw, stage)
+    assert not os.path.exists(stage)

@@ -345,3 +345,71 @@ def test_extraction_plans_two_scans(spark):
     for impl in ("native", "pandas"):
         nodes = _plan_nodes(_plan(extract_triples(turns, impl=impl)))
         assert nodes.count("Scan") == 2, (impl, nodes)
+
+
+def test_minhash_clusters_read_pinned_star_edges_once(spark, tmp_path, monkeypatch):
+    """``connected_components`` pins its input, so the plan of
+    ``near_dup_clusters(method="minhash_star")`` reads the verified
+    star edges only through the pin — ``Scan ExistingRDD`` nodes with
+    columns ``u, v``, all over ONE RDD — and scans the documents once,
+    for the singletons.  Control: with that pin patched out, the
+    isolated-node branches re-plan the verify subtree, which scans the
+    documents again."""
+    import re
+
+    from lexicator_spark.operators import canonicalize as C
+    from lexicator_spark.operators.dedup import near_dup_clusters
+
+    templates = [
+        "the quick brown fox jumps over the lazy dog near the river bank",
+        "spark shuffles data between stages when a join needs co-location",
+        "minhash bands turn jaccard similarity into bucket collisions fast",
+    ]
+    rows = [
+        (i * 4 + k, f"{t} copy{k}" if k else t)
+        for i, t in enumerate(templates)
+        for k in range(4)
+    ] + [(100, "a lone document shares nothing with the others at all")]
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(rows, "doc_id bigint, text string").write.parquet(path)
+    docs = spark.read.parquet(path)
+
+    def scans():
+        """(source, output columns, RDD) of every scan in the plan."""
+        plan = _plan(near_dup_clusters(docs, method="minhash_star"))
+        return [
+            (src, re.sub(r"#\d+L?", "", cols), rdd)
+            for src, cols, rdd in re.findall(
+                r"^\(\d+\) Scan (\w+).*\nOutput \[\d+\]: \[([^\]]*)\]"
+                r"(?:\nArguments: [^\n]*?(\w+RDD\[\d+\]))?",
+                plan,
+                flags=re.M,
+            )
+        ]
+
+    def edge_pins(found):
+        return [rdd for src, cols, rdd in found if (src, cols) == ("ExistingRDD", "u, v")]
+
+    pinned = scans()
+    assert [s[:2] for s in pinned if s[0] == "parquet"] == [("parquet", "doc_id")]
+    assert edge_pins(pinned) and len(set(edge_pins(pinned))) == 1, pinned
+
+    cc, pin = C.connected_components, type(docs).localCheckpoint
+
+    def cc_without_input_pin(edges, *args, **kwargs):
+        calls = []
+
+        def first_pin_skipped(self, *a, **kw):
+            if not calls:  # the input pin is connected_components' first
+                calls.append(self)
+                return self
+            return pin(self, *a, **kw)
+
+        with monkeypatch.context() as m:
+            m.setattr(type(docs), "localCheckpoint", first_pin_skipped)
+            return cc(edges, *args, **kwargs)
+
+    monkeypatch.setattr(C, "connected_components", cc_without_input_pin)
+    unpinned = scans()
+    assert len([s for s in unpinned if s[0] == "parquet"]) > 1, unpinned
+    assert edge_pins(unpinned) == [], unpinned

@@ -277,7 +277,7 @@ def test_detection_union_agg_equivalence(spark, tmp_path):
     loc = str(tmp_path / "stage")
     good, _ = split_rejects(extract_triples(turns0))
     sio.write_table(good, loc, partition_key="conv_id", n_buckets=4)
-    materialize_frontier(spark, turns0, loc, n_buckets=4)
+    materialize_frontier(spark, turns0, loc)
 
     # new snapshot: 'gone' removed, 'grow' gained a turn, 'new' added
     turns1 = _turns(

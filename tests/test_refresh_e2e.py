@@ -299,8 +299,9 @@ def test_compact_then_e2e_refresh_restores_consistency(spark, tmp_path):
 
 def test_refresh_pipeline_pruned_feed_path(spark, tmp_path):
     """turns_location + change_feed: Stage A goes through
-    refresh_from_feed (raw read pruned to the fed conversations'
-    buckets — no snapshot semi-join), and the downstream propagation
+    refresh_triples_partitioned given the location (raw read pruned to
+    the fed conversations' buckets — no snapshot semi-join), and the
+    downstream propagation
     still leaves every stage equal to a full rebuild."""
     from datetime import timedelta
 
