@@ -103,7 +103,6 @@ def _driver_union_find(spark, pairs: list[tuple[str, str]]) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
-    use_checkpoint: bool = True,
     driver_finish_threshold: int = 500_000,
 ) -> DataFrame:
     """edges(u string, v string) → assignments(node string, comp string)
@@ -164,9 +163,7 @@ def connected_components(
         n_parts = max(1, min(cur.rdd.getNumPartitions(), fp[0] // 200_000 + 1))
         if n_parts < cur.rdd.getNumPartitions():
             cur = cur.repartition(n_parts)
-        cur = _small_star(_large_star(cur))
-        if use_checkpoint:
-            cur = cur.localCheckpoint(eager=True)
+        cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         new_fp = _edge_fingerprint(cur)
         if new_fp == fp:
             converged = True
@@ -209,8 +206,6 @@ def update_components(
     added_edges: DataFrame,
     removed_edges: DataFrame | None = None,
     surviving_edges: DataFrame | None = None,
-    max_iter: int = 25,
-    driver_finish_threshold: int = 500_000,
 ) -> DataFrame:
     """Incrementally update a component partition under an edge delta
     — the O(delta) alternative to re-running ``connected_components``
@@ -278,11 +273,7 @@ def update_components(
             .join(affected, "comp", "left_semi")
             .select("u", "v")
         )
-        recomputed = connected_components(
-            sub,
-            max_iter=max_iter,
-            driver_finish_threshold=driver_finish_threshold,
-        )
+        recomputed = connected_components(sub)
         base = assignments.join(affected, "comp", "left_anti").unionByName(
             recomputed
         )
@@ -309,11 +300,9 @@ def update_components(
     )
     # self-loops (edge internal to one existing component) come back
     # from connected_components as identity rows — harmless no-ops
-    remap = connected_components(
-        mapped,
-        max_iter=max_iter,
-        driver_finish_threshold=driver_finish_threshold,
-    ).select(F.col("node").alias("key"), F.col("comp").alias("newc"))
+    remap = connected_components(mapped).select(
+        F.col("node").alias("key"), F.col("comp").alias("newc")
+    )
     old_keys = base.select(F.col("comp").alias("key")).distinct()
     updated = (
         base.join(remap, base.comp == remap.key, "left")

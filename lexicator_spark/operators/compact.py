@@ -61,6 +61,7 @@ from typing import NamedTuple
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from lexicator_spark.operators.incremental import _stage_modulus
 from lexicator_spark.sources import fsutil
 from lexicator_spark.sources import io as sio
 
@@ -100,12 +101,13 @@ def compact_stream_epochs(
     spark: SparkSession,
     stream_out: str,
     stage_location: str,
-    partition_key: str = "conv_id",
-    n_buckets: int | None = None,
 ) -> CompactResult:
     """Merge every epoch partition above the ``_compacted.json``
-    watermark into the ``p_hash``-bucketed table at
+    watermark into the ``conv_id``-bucketed table at
     ``stage_location``, then delete the folded epoch directories.
+    The modulus is the table's ``_buckets.json`` (``DEFAULT_BUCKETS``
+    for a table not written yet); a table bucketed on another key is
+    refused before any merge work.
 
     The epoch list is a ``collect`` of the partition column only —
     bounded by compaction cadence (epochs since the last run), never
@@ -143,20 +145,17 @@ def compact_stream_epochs(
         return CompactResult(0, 0, 0, done_max if done_max >= 0 else None)
 
     meta = sio.read_bucket_meta(spark, stage_location)
-    if meta is not None:
-        if meta["partition_key"] != partition_key:
-            raise ValueError(
-                f"table at {stage_location} is bucketed on "
-                f"{meta['partition_key']} (_buckets.json); refusing "
-                f"compaction keyed on {partition_key}"
-            )
-        n_buckets = meta["n_buckets"]
-    elif n_buckets is None:
-        n_buckets = sio.DEFAULT_BUCKETS
+    if meta is not None and meta["partition_key"] != "conv_id":
+        raise ValueError(
+            f"table at {stage_location} is bucketed on "
+            f"{meta['partition_key']} (_buckets.json); refusing "
+            "compaction keyed on conv_id"
+        )
+    n_buckets = _stage_modulus(spark, stage_location)
 
     new_rows = sio.with_partition_hash(
         epochs_df.filter(F.col("epoch_id").isin(fresh)).drop("epoch_id"),
-        partition_key,
+        "conv_id",
         n_buckets,
     ).localCheckpoint(eager=True)
     touched = sorted(
@@ -202,7 +201,7 @@ def compact_stream_epochs(
     counts = sio.upsert_partitions(
         replacement,
         stage_location,
-        partition_key=partition_key,
+        partition_key="conv_id",
         n_buckets=n_buckets,
         touched_buckets=touched,
     )

@@ -1,10 +1,8 @@
 """Document deduplication operators for large-scale training-data
-pipelines: exact, n-gram Jaccard, MinHash+LSH, SimHash, plus
-sub-document segment dedup (paragraph / turn boilerplate removal).
+pipelines: n-gram Jaccard, MinHash+LSH, SimHash, plus sub-document
+segment dedup (paragraph / turn boilerplate removal).
 
 Scale shapes (the point of each design):
-- exact: one hash-groupBy shuffle on a 16-byte digest — the cheapest
-  possible dedup at any scale; never groups on raw text.
 - ngram-Jaccard: candidate pairs come from an inverted-index
   self-join over LOW-FREQUENCY tokens (df ≤ max_token_df) plus each
   doc's ``keep_rarest`` rarest tokens (so docs made only of frequent
@@ -22,8 +20,8 @@ Scale shapes (the point of each design):
   pigeonhole), verified by exact Hamming distance.
 
 Docs with no tokens (empty/whitespace text) are excluded from the
-near-dup operators — they are exact duplicates of each other and
-belong to ``exact_dedup``.
+near-dup operators — they are exact duplicates of each other, which
+an md5 group (the CLI's ``--dedup exact``) finds.
 """
 
 from __future__ import annotations
@@ -37,18 +35,6 @@ TOKEN_SPLIT = "\\s+"
 def _tokens(col):
     return F.array_distinct(
         F.filter(F.split(F.lower(col), TOKEN_SPLIT), lambda t: t != F.lit(""))
-    )
-
-
-def exact_dedup(docs: DataFrame) -> DataFrame:
-    """Exact duplicate groups by md5(text): (keep_id, n_copies).
-    Only groups with more than one copy are returned."""
-    return (
-        docs.select(F.col("doc_id"), F.md5(F.col("text")).alias("h"))
-        .groupBy("h")
-        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
-        .filter(F.col("n_copies") > 1)
-        .select("keep_id", "n_copies")
     )
 
 
@@ -127,7 +113,6 @@ def ngram_jaccard_pairs(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 _N_HASHES = 32
-_N_BANDS = 8  # 4 rows per band
 
 
 def minhash_signatures(docs: DataFrame) -> DataFrame:

@@ -53,11 +53,6 @@ _RULE_HIT = T.ArrayType(
 
 SPAN_TYPE = "struct<start:int,end:int>"
 
-TRIPLE_COLUMNS = [
-    "subj", "pred", "obj", "conf", "span", "conv_id", "turn_idx", "extracted_at",
-]
-
-
 def null_span() -> F.Column:
     """Typed null span for triple emitters without character offsets
     (structural rules, linking, canonicalization)."""

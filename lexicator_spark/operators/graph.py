@@ -338,7 +338,10 @@ def pagerank(
     over it producing (next dangling mass, max |Δrank|) together — the
     dangling mass enters the next round as a literal, so the r3
     one-row ``crossJoin(broadcast(...))`` and its per-round
-    BroadcastExchange are gone from the plan.
+    BroadcastExchange are gone from the plan.  Out-weights never
+    change across rounds, so when no node has zero out-weight and no
+    ``tol`` is set that aggregation is skipped: the mass stays 0 and
+    the delta would go unread.
 
     When the node count — computed exactly, up front — is at most
     ``_BROADCAST_NODES_MAX``, the node-sized frames (ranks, then the
@@ -413,7 +416,12 @@ def pagerank(
     dangling_mass = F.coalesce(
         F.sum(F.when(F.col("out_w") == 0.0, F.col("rank"))), F.lit(0.0)
     )
-    mass = ranks.agg(dangling_mass.alias("m")).first()["m"]
+    init = ranks.agg(
+        dangling_mass.alias("m"),
+        F.count_if(F.col("out_w") == 0.0).alias("n_dangling"),
+    ).first()
+    mass = init["m"]
+    per_round_stats = init["n_dangling"] > 0 or tol is not None
     base = (1.0 - damping) / n
     bc_nodes = n <= _BROADCAST_NODES_MAX
     for _ in range(iterations):
@@ -421,6 +429,8 @@ def pagerank(
             directed, ranks, base, damping, mass, n,
             broadcast_ranks=bc_nodes,
         ).localCheckpoint(eager=True)
+        if not per_round_stats:
+            continue
         stats = ranks.agg(
             dangling_mass.alias("m"),
             F.max(F.abs(F.col("rank") - F.col("prev"))).alias("delta"),

@@ -68,10 +68,9 @@ def build_catalog(spark) -> DataFrame:
 
 def mention_surfaces(triples: DataFrame) -> DataFrame:
     """DISTINCT linkable mention surfaces of a triple table — the one
-    definition of the linker's input universe, shared by the static
-    linker and the external-resolver fallback so their anti-join can
-    never drift (empty normalized surfaces are unlinkable and the one
-    input where the Catalyst rule mirrors would diverge — dropped)."""
+    definition of the linker's input universe (empty normalized
+    surfaces are unlinkable and the one input where the Catalyst rule
+    mirrors would diverge — dropped)."""
     return (
         triples.filter(F.col("pred") == rules.PRED_MENTIONS)
         .select(F.col("obj").alias("surface"))

@@ -50,8 +50,7 @@ def _resolve_dim(df: DataFrame, vec_col: str, dim: int | None) -> int:
     or store it as column metadata ``{'dim': N}`` on ``vec_col``.  A
     silent ``df.first()`` sniff is deliberately NOT done — it runs a
     Spark job inside operator construction, a driver-side action you
-    don't want hidden in a larger plan (ivf_ann_topk's bounded sample
-    is explicit and documented; this seam stays lazy)."""
+    don't want hidden in a larger plan; this seam stays lazy."""
     if dim is not None:
         return dim
     for f in df.schema.fields:
@@ -250,106 +249,6 @@ def embedding_near_dup_pairs(
             "b",
             F.round(F.col("cos") * 1_000_000, 0).cast("bigint").alias("cos_micro"),
         )
-    )
-
-
-def ivf_ann_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 1,
-    n_centroids: int = 16,
-    n_probe: int = 8,
-    sample_size: int = 512,
-    kmeans_iters: int = 10,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k — the second scale path
-    next to sign-LSH: a coarse quantizer of ``n_centroids`` centroids
-    partitions the corpus; each probe searches only its ``n_probe``
-    nearest cells, exact cosine rerank inside.
-
-    Centroids come from a deterministic seeded k-means over a BOUNDED
-    corpus sample (the one driver-side step, explicit and sized; at
-    100 TB you train the quantizer once offline the same way).  Cell
-    assignment is one BLAS matmul per Arrow batch (same measured
-    reasoning as ``with_lsh_buckets`` — unrolled centroid literals
-    blow up driver analysis and run interpreted); joins and the exact
-    rerank are JVM-side.  The corpus is written bucketed by ``cell``
-    at scale so probes read only matching cells.
-
-    Default ``n_probe=8`` of 16 cells reflects the near-uniform test
-    embeddings (top-1 neighbors at cosine ~0.5 straddle cells);
-    genuinely clustered embeddings keep recall with far fewer probes
-    — recall vs brute force is gated in pytest."""
-    # --- train the coarse quantizer on a deterministic sample --------
-    sample = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)))
-        .limit(sample_size)
-        .collect()
-    )
-    x = np.array([r[1] for r in sample], dtype=np.float64)
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0  # a zero vector must not NaN-poison k-means
-    x = x / norms
-    rng = np.random.default_rng(seed)
-    cent = x[rng.choice(len(x), size=min(n_centroids, len(x)), replace=False)]
-    for _ in range(kmeans_iters):
-        sims = x @ cent.T
-        assign = sims.argmax(axis=1)
-        for c in range(len(cent)):
-            members = x[assign == c]
-            if len(members):
-                m = members.mean(axis=0)
-                cent[c] = m / (np.linalg.norm(m) or 1.0)
-    # centroid projections as one matmul per Arrow batch; cosine
-    # argmax == dot argmax because centroids are unit-norm and the
-    # row's own norm is a positive constant across cells
-    @F.pandas_udf("int")
-    def _best_cell(vecs: pd.Series) -> pd.Series:
-        x = np.array(vecs.tolist(), dtype=np.float64)
-        return pd.Series((x @ cent.T).argmax(axis=1).astype("int32"))
-
-    @F.pandas_udf("array<int>")
-    def _top_cells(vecs: pd.Series) -> pd.Series:
-        x = np.array(vecs.tolist(), dtype=np.float64)
-        sims = x @ cent.T
-        # stable argsort on -sims: ties keep cell-ascending order
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
-        return pd.Series(order.astype("int32").tolist())
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("c_norm"),
-        _best_cell(F.col(vec_col)).alias("cell"),
-    )
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("p_vec"),
-        _norm(F.col(vec_col)).alias("p_norm"),
-        F.explode(_top_cells(F.col(vec_col))).alias("cell"),
-    )
-    cand = (
-        c.join(F.broadcast(p), "cell")
-        .filter(F.col("probe_id") != F.col("neighbor_id"))
-        .dropDuplicates(["probe_id", "neighbor_id"])
-    )
-    scored = cand.withColumn(
-        "score",
-        F.round(
-            _dot(F.col("p_vec"), F.col("c_vec"))
-            / (F.col("p_norm") * F.col("c_norm")),
-            6,
-        ),
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "neighbor_id", "score", F.col("rn").alias("rank"))
     )
 
 

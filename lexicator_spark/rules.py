@@ -88,9 +88,8 @@ WIKILINK_RE = re.compile(WIKILINK_PATTERN)
 
 # Template invocation {{name|k=v|k2=v2}} — the direct analog of
 # lexicator/TemplateParser.py :: TemplateParser.parse_page [H name].
-TEMPLATE_PATTERN = r"\{\{([a-z_]+)((?:\|[a-z_]+=[^|{}]*)*)\}\}"
-TEMPLATE_RE = re.compile(TEMPLATE_PATTERN)
-# full-match variant for engines whose findall returns one group only
+# Group-free, so engines whose findall returns one group only match the
+# whole invocation and split it with ``parse_template``.
 TEMPLATE_FULL_PATTERN = r"\{\{[a-z_]+(?:\|[a-z_]+=[^|{}]*)*\}\}"
 PRED_TPL_PARAM = "tpl_param"
 

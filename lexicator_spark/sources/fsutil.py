@@ -90,9 +90,10 @@ def list_names(spark: SparkSession, path: str) -> list[str]:
     return [st.getPath().getName() for st in fs.listStatus(p)]
 
 
-def copy_paths(
-    spark: SparkSession, pairs: list[tuple[str, str]], max_workers: int = 16
-) -> None:
+_COPY_WORKERS = 16  # the thread count measured in copy_paths' docstring
+
+
+def copy_paths(spark: SparkSession, pairs: list[tuple[str, str]]) -> None:
     """Copy (src, dst) path pairs through ``FileUtil.copy`` — the
     FS-generic clone primitive behind the materialize-by-copy path
     (on S3 this is a server-side copy; locally a byte copy).  Threaded:
@@ -119,6 +120,6 @@ def copy_paths(
     if len(pairs) == 1:
         one(pairs[0])
         return
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+    with ThreadPoolExecutor(max_workers=_COPY_WORKERS) as pool:
         # list() so the first failure raises here, not silently
         list(pool.map(one, pairs))

@@ -431,67 +431,3 @@ def read_table(
     if keep_bucket_col:
         return df
     return df.drop("p_hash") if "p_hash" in df.columns else df
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_key: str,
-    n_buckets: int = DEFAULT_BUCKETS,
-    sort: bool = True,
-) -> None:
-    """Catalog-managed bucketed table (``bucketBy`` + ``sortBy``): two
-    tables bucketed the same way on the join key co-locate, so their
-    equi-join runs with ZERO exchange — the pre-shuffled layout big
-    repeated joins want at 100 TB (asserted in tests/test_plans.py).
-    Unlike the ``p_hash`` directory partitioning (which targets
-    partition PRUNING and complete-conversation locality), bucketing
-    targets shuffle elimination; the two compose."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_key)
-    if sort:
-        writer = writer.sortBy(bucket_key)
-    writer.format("parquet").saveAsTable(table_name)
-
-
-def read_turns(spark: SparkSession, path: str, format: str = "parquet") -> DataFrame:
-    """Transcript-turn source for the formats raw conversation logs
-    actually arrive in.  The schema is always DECLARED (never
-    inferred — inference is a full extra pass over 100 TB and can
-    drift between drops); timestamps in JSON/CSV are ISO-8601 strings
-    parsed explicitly.  Columns are selected by name so extra fields
-    in the source are pruned at scan."""
-    from lexicator_spark.streaming.ingest import TURN_SCHEMA
-
-    if format == "parquet":
-        return spark.read.parquet(path).select(
-            [f.name for f in TURN_SCHEMA.fields]
-        )
-    if format == "orc":
-        return spark.read.orc(path).select(
-            [f.name for f in TURN_SCHEMA.fields]
-        )
-    if format not in ("json", "csv"):
-        raise ValueError(f"unsupported transcript format {format!r}")
-    from pyspark.sql import types as T
-
-    string_ts = T.StructType(
-        [
-            f if f.name != "ts" else T.StructField("ts", T.StringType(), f.nullable)
-            for f in TURN_SCHEMA.fields
-        ]
-    )
-    reader = spark.read.schema(string_ts)
-    if format == "json":
-        df = reader.json(path)
-    else:
-        # multiLine + explicit quote/escape: transcript text routinely
-        # embeds newlines and quotes — without these the declared
-        # schema maps line fragments to wrong columns silently
-        df = (
-            reader.option("header", "true")
-            .option("multiLine", "true")
-            .option("quote", '"')
-            .option("escape", '"')
-            .csv(path)
-        )
-    return df.withColumn("ts", F.to_timestamp(F.col("ts")))

@@ -7,9 +7,6 @@ transcript files/snapshots arrive on a stream and flow through the
 SAME batch stage functions via ``foreachBatch`` (preferred over
 custom stateful operators: one code path, exactly-once via idempotent
 MERGE-style writes).
-
-Also provides the watermarked windowed aggregation used for
-freshness/metrics dashboards.
 """
 
 from __future__ import annotations
@@ -410,41 +407,6 @@ def start_extract_stream_stateful(
     )
 
 
-def streaming_sessionize(
-    events_stream: DataFrame,
-    by: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: int = 30,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming twin of ``operators.asof.sessionize``: Spark's native
-    ``session_window`` aggregation — sessions merge while consecutive
-    events are less than ``gap_minutes`` apart, close once the
-    watermark passes the session end, and state is evicted by the
-    engine (no unbounded keys).  Emits one row per closed session:
-    (by, session_start, session_end, n_events).
-
-    Boundary semantics: an event at EXACTLY ``gap_minutes`` after its
-    predecessor starts a new session here ([start, end) windows),
-    while the batch formulation keeps it (strict ``>`` gap test) —
-    equality between the two holds for corpora without exact-gap
-    timestamps (asserted in tests/test_salting_streaming_mm.py)."""
-    return (
-        events_stream.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.session_window(F.col(ts_col), f"{gap_minutes} minutes"),
-            F.col(by),
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col(by),
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
 def dedup_turns_stream(
     turns_stream: DataFrame, watermark: str = "1 hour"
 ) -> DataFrame:
@@ -457,16 +419,4 @@ def dedup_turns_stream(
     key forever."""
     return turns_stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["conv_id", "turn_idx"]
-    )
-
-
-def windowed_turn_counts(turns_stream: DataFrame) -> DataFrame:
-    """Watermarked sliding-window turn counts per role (10-minute
-    windows sliding every 5) — late rows beyond the 10-minute
-    watermark are dropped deterministically."""
-    return (
-        turns_stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "10 minutes", "5 minutes"), F.col("role"))
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(F.col("window.start").alias("bucket"), "role", "n_turns")
     )

@@ -1,8 +1,8 @@
-"""Shared scaffolding for the two-parallelism scaling scripts: launch
-a child python that prints one ``SCALING_RESULT {json}`` line, parse
-it, and keep the fastest of N fresh-JVM reps.  Shared by
-bench_paradedup_scale.py / bench_paradedup_gccontrol.py so the
-subprocess protocol (marker, timeout, error surfacing) lives once."""
+"""Scaffolding for the two-parallelism scaling script
+bench_paradedup_scale.py: launch a child python that prints one
+``SCALING_RESULT {json}`` line, parse it, and keep the fastest of N
+fresh-JVM reps, with the subprocess protocol (marker, timeout, error
+surfacing) in one place."""
 
 from __future__ import annotations
 

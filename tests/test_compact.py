@@ -153,9 +153,12 @@ def test_compact_onto_existing_batch_table(spark, streamed, tmp_path):
     batch_rows = _rows(sio.read_table(spark, stage))
     stream_rows = _rows(spark.read.parquet(out))
 
-    # wrong bucket key is refused at the seam (before any merge work)
+    # a copy bucketed on another key is refused at the seam (before any
+    # merge work)
+    subj_stage = str(tmp_path / "triples_raw_by_subj")
+    sio.write_table(batch_triples, subj_stage, partition_key="subj")
     with pytest.raises(ValueError, match="bucketed on"):
-        compact_stream_epochs(spark, out, stage, partition_key="subj")
+        compact_stream_epochs(spark, out, subj_stage)
     compact_stream_epochs(spark, out, stage)
     assert _rows(sio.read_table(spark, stage)) == batch_rows | stream_rows
 

@@ -49,15 +49,6 @@ def test_simhash_pairs_verified_by_hamming(spark):
     assert len(dup) == 1 and dup[0].hamming == 0
 
 
-def test_exact_dedup_finds_planted_dups(spark):
-    docs = spark.createDataFrame(
-        [(1, "same text"), (2, "same text"), (3, "other"), (4, "same text")],
-        "doc_id long, text string",
-    )
-    out = {(r.keep_id, r.n_copies) for r in D.exact_dedup(docs).collect()}
-    assert out == {(1, 3)}
-
-
 def test_ngram_jaccard_finds_high_multiplicity_dups(spark):
     """A duplicate cluster larger than max_token_df, made only of
     common tokens (every token df > max_token_df): the rarest-token
@@ -123,27 +114,6 @@ def test_embedding_near_dup_blocked_vs_exact(spark):
     }
     assert blocked <= exact, "blocked pairs must be a subset (exact rerank)"
     assert exact and len(blocked) / len(exact) >= 0.75
-
-
-def test_ivf_ann_recall_vs_bruteforce(spark):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    probes = emb.filter(F.col("vec_id") < 50)
-    exact = {
-        (r.probe_id, r.neighbor_id)
-        for r in SIM.cosine_topk(emb, probes, k=1).collect()
-    }
-    approx = {
-        (r.probe_id, r.neighbor_id)
-        for r in SIM.ivf_ann_topk(emb, probes, k=1).collect()
-    }
-    hits = len(exact & approx)
-    assert hits / len(exact) >= 0.7, f"IVF top-1 recall {hits}/{len(exact)}"
-    # determinism: seeded quantizer + rounded rerank → identical reruns
-    again = {
-        (r.probe_id, r.neighbor_id)
-        for r in SIM.ivf_ann_topk(emb, probes, k=1).collect()
-    }
-    assert again == approx
 
 
 def _py_union_find(pairs, all_ids):

@@ -163,6 +163,40 @@ def test_pagerank_weighted_matches_twin(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
+def _jobs_run(spark, group, action):
+    """Spark jobs ``action()`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # noqa: SLF001
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
+
+
+def test_pagerank_round_skips_unused_scalar_job(spark):
+    """An undirected graph has no zero-out-weight node, so with no
+    ``tol`` a round's dangling-mass/delta aggregation computes nothing
+    used and is not run: at most 4 jobs per round, not 6."""
+    pairs = [("a", "b"), ("b", "c"), ("c", "d"), ("a", "d"), ("a", "c")]
+    edges = _edges_df(spark, pairs).localCheckpoint(eager=True)
+    jobs = {
+        it: _jobs_run(
+            spark,
+            f"pagerank-{it}-rounds",
+            lambda it=it: G.pagerank(edges, iterations=it).collect(),
+        )
+        for it in (2, 6)
+    }
+    assert (jobs[6] - jobs[2]) / 4 <= 4, jobs
+
+
 def test_cooccurrence_edges(spark):
     mentions = spark.createDataFrame(
         [

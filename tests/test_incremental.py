@@ -135,36 +135,6 @@ def test_partitioned_refresh_upserts_only_touched_buckets(spark, tmp_path):
     assert auto.n_changed == 0
 
 
-def test_read_turns_jsonl_and_csv_equal_parquet(spark, tmp_path):
-    """Raw-log ingestion: the same corpus through JSONL / CSV / parquet
-    yields identical turn rows (declared schema, explicit ts parse)."""
-    from pyspark.sql import functions as F
-
-    from lexicator_spark.sources.io import read_turns
-
-    corpus = synth.make_corpus(n_convs=15, seed=11)
-    df = synth.corpus_df(spark, corpus)
-    p_parquet = str(tmp_path / "t.parquet")
-    p_orc = str(tmp_path / "t.orc")
-    p_json = str(tmp_path / "t.jsonl")
-    p_csv = str(tmp_path / "t.csv")
-    df.write.parquet(p_parquet)
-    df.write.orc(p_orc)
-    df.withColumn("ts", F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss")).write.json(p_json)
-    df.withColumn("ts", F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss")).write.option(
-        "header", "true"
-    ).csv(p_csv)
-
-    def rows(d):
-        return {tuple(r) for r in d.collect()}
-
-    base = rows(read_turns(spark, p_parquet))
-    assert rows(read_turns(spark, p_orc, "orc")) == base
-    assert rows(read_turns(spark, p_json, "json")) == base
-    assert rows(read_turns(spark, p_csv, "csv")) == base
-    assert base and len(base) == len(corpus.rows)
-
-
 def test_change_feed_refresh(spark, tmp_path):
     """RecentChanges-feed mode: the feed names the changed
     conversations, so refresh skips the snapshot-wide detection —

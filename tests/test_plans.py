@@ -152,41 +152,6 @@ def test_curation_is_single_pass_no_python(spark):
     assert "text" in read_schema and "doc_id" in read_schema
 
 
-def test_bucketed_tables_join_without_shuffle(spark):
-    """Two tables bucketed on the join key co-locate: the equi-join
-    plan contains NO shuffle exchange on either side — the layout big
-    repeated joins (triples ⋈ entities by id) use at scale."""
-    from lexicator_spark.sources.io import write_bucketed_table
-
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
-    cust = spark.read.parquet(f"{SF}/customer.parquet")
-    write_bucketed_table(
-        orders.select("o_orderkey", "o_custkey", "o_totalprice"),
-        "bt_orders", "o_custkey", n_buckets=8,
-    )
-    write_bucketed_table(
-        cust.select("c_custkey", "c_mktsegment"), "bt_customer", "c_custkey",
-        n_buckets=8,
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bt_orders").join(
-            spark.table("bt_customer"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        exec_plan = joined._jdf.queryExecution().executedPlan().toString()
-        n_rows = joined.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bt_orders")
-        spark.sql("DROP TABLE IF EXISTS bt_customer")
-    assert "Exchange hashpartitioning" not in exec_plan, exec_plan
-    # and the join result is actually correct, not just shuffle-free
-    expected = orders.join(cust, orders.o_custkey == cust.c_custkey).count()
-    assert n_rows == expected
-
-
 def test_partition_pruning_on_stage_table(spark, tmp_path):
     """Salted-hash-partitioned stage tables prune by p_hash."""
     from lexicator_spark.sources import io as sio

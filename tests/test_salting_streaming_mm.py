@@ -19,8 +19,6 @@ from lexicator_spark.streaming.ingest import (
     start_extract_stream,
     start_extract_stream_stateful,
     stream_turns,
-    streaming_sessionize,
-    windowed_turn_counts,
 )
 
 
@@ -102,22 +100,6 @@ def test_stream_extract_matches_batch_modulo_replies(spark, corpus_dir, tmp_path
         if r.pred != rules.PRED_REPLIES_TO
     }
     assert got == batch
-
-
-def test_windowed_stream_counts(spark, corpus_dir, tmp_path):
-    _corpus, path = corpus_dir
-    agg = windowed_turn_counts(stream_turns(spark, path))
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("turn_counts")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM turn_counts").collect()
-    assert rows and all(r.n_turns > 0 for r in rows)
-    assert {r.role for r in rows} <= {"user", "assistant", "tool"}
 
 
 def test_stateful_stream_matches_batch_including_replies(spark, tmp_path):
@@ -348,58 +330,6 @@ def test_streaming_dedup_drops_replayed_turns(spark, tmp_path):
     rows = spark.sql("SELECT conv_id, turn_idx FROM dedup_turns").collect()
     assert len(rows) == len(corpus.rows)
     assert len({(r.conv_id, r.turn_idx) for r in rows}) == len(rows)
-
-
-def test_streaming_sessionize_matches_batch(spark, tmp_path):
-    """session_window streaming sessionization equals the batch
-    lag+cumsum formulation (operators.asof.sessionize) on a corpus
-    without exact-gap-boundary timestamps: same (user, session_start,
-    session_end, n_events) rows."""
-    import datetime
-
-    from lexicator_spark.operators.asof import sessionize
-
-    base = datetime.datetime(2025, 1, 1)
-    rows = []
-    for u in range(6):
-        t = base + datetime.timedelta(minutes=u * 7)
-        for s in range((u % 3) + 1):
-            for i in range(2 + (u + s) % 3):
-                rows.append((u, t))
-                t += datetime.timedelta(minutes=3 + ((u + i) % 4))
-            t += datetime.timedelta(minutes=31 + s)
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    path = str(tmp_path / "events")
-    df.repartition(3).write.parquet(path)
-
-    stream = spark.readStream.schema(df.schema).parquet(path)
-    agg = streaming_sessionize(stream, by="user_id", ts_col="ts", gap_minutes=30)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("stream_sessions")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.sql("SELECT * FROM stream_sessions").collect()
-    }
-    batch = (
-        sessionize(df, by="user_id", ts_col="ts", gap_minutes=30)
-        .groupBy("user_id", "session_id")
-        .agg(
-            F.min("ts").alias("session_start"),
-            (F.max("ts") + F.expr("INTERVAL 30 MINUTES")).alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-    expected = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in batch.collect()
-    }
-    assert got == expected
 
 
 # ------------------------------------------------------------ multimodal
