@@ -4,7 +4,7 @@
     spark-submit --py-files $(python -m lexicator_spark.submit) \
         -m lexicator_spark --input <turns.parquet> --out <root> \
         [--stage all|extract|link|canonicalize|materialize|entities] \
-        [--no-resume] [--impl native|pandas] [--synth N] \
+        [--no-resume] [--synth N] \
         [--refresh [--change-feed FEED.parquet]] [--dedup METHOD] \
         [--dedup-turns] [--decontam BENCH.parquet] \
         [--graph degrees|triangles|pagerank] [--compact]
@@ -37,7 +37,6 @@ def main(argv: list[str] | None = None) -> int:
     from lexicator_spark.plans.pipeline import STAGES as _STAGES
 
     ap.add_argument("--stage", default="all", choices=["all", *_STAGES])
-    ap.add_argument("--impl", default="native", choices=["native", "pandas"])
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--refresh", action="store_true",
                     help="end-to-end incremental refresh: every stage "
@@ -354,7 +353,7 @@ def main(argv: list[str] | None = None) -> int:
                 validate_refresh_preconditions(spark, raw_path)
                 raw_meta = sio.read_bucket_meta(spark, raw_path)
                 _print_pipeline(run_pipeline(
-                    spark, turns, args.out, resume=True, impl=args.impl,
+                    spark, turns, args.out, resume=True,
                     n_buckets=(
                         raw_meta["n_buckets"] if raw_meta
                         else sio.DEFAULT_BUCKETS
@@ -373,7 +372,7 @@ def main(argv: list[str] | None = None) -> int:
             )
             res = refresh_pipeline(
                 spark, None if pruned else turns, args.out,
-                change_feed=feed, impl=args.impl,
+                change_feed=feed,
                 turns_location=args.input if pruned else None,
             )
             print(
@@ -402,7 +401,7 @@ def main(argv: list[str] | None = None) -> int:
             # its own raw buckets instead of re-scanning the corpus
             turns_source = args.input
     res = run_pipeline(
-        spark, turns, args.out, resume=not args.no_resume, impl=args.impl,
+        spark, turns, args.out, resume=not args.no_resume,
         backfill_groups=args.backfill, turns_source=turns_source,
         stop_after=None if args.stage == "all" else args.stage,
     )

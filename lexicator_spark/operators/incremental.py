@@ -34,7 +34,7 @@ import os
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lexicator_spark.operators.extract import extract_triples
@@ -93,7 +93,6 @@ _ISIN_DELTA_MAX = 1000
 def _delta_good_triples(
     turns: DataFrame,
     changed: DataFrame,
-    impl: str,
     changed_ids: list[str] | None = None,
 ) -> DataFrame:
     """Re-extract the changed conversations, good triples only (the
@@ -118,7 +117,7 @@ def _delta_good_triples(
         delta_turns = turns.filter(F.col("conv_id").isin(changed_ids))
     else:
         delta_turns = turns.join(changed, "conv_id", "left_semi")
-    good, _rejects = split_rejects(extract_triples(delta_turns, impl=impl))
+    good, _rejects = split_rejects(extract_triples(delta_turns))
     return good
 
 
@@ -251,7 +250,6 @@ def backfill_triples(
     spark: SparkSession,
     turns: DataFrame | str,
     stage_location: str,
-    impl: str = "native",
     n_buckets: int | None = None,
     n_groups: int = 8,
     rejects_location: str | None = None,
@@ -401,7 +399,7 @@ def backfill_triples(
         # consumer (wall-neutral on a page-cached local disk, strictly
         # fewer object-store reads on a real cluster)
         slice_df = slice_df.persist(StorageLevel.MEMORY_AND_DISK)
-        extracted = extract_triples(slice_df, impl=impl)
+        extracted = extract_triples(slice_df)
         if rejects_location is not None:
             # two sinks (good + error channel): evaluate the group's
             # extraction once, same as run_pipeline's stage_a persist
@@ -488,7 +486,6 @@ def refresh_triples_partitioned(
     spark: SparkSession,
     turns: DataFrame | str,
     stage_location: str,
-    impl: str = "native",
     change_feed: DataFrame | None = None,
     on_replacement: Callable[[DataFrame, list[int]], Any] | None = None,
 ) -> RefreshResult:
@@ -607,22 +604,6 @@ def refresh_triples_partitioned(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        if isinstance(turns, str):
-            t_touched = sorted(
-                r.p
-                for r in changed.select(
-                    F.pmod(F.xxhash64("conv_id"), F.lit(t_meta["n_buckets"]))
-                    .cast("int")
-                    .alias("p")
-                )
-                .distinct()
-                .collect()
-            )
-            turns = (
-                sio.read_table(spark, turns, keep_bucket_col=True)
-                .filter(F.col("p_hash").isin(t_touched))
-                .drop("p_hash")
-            )
     else:
         if bootstrap:
             # one-time full scan: no frontier table yet, derive it from
@@ -639,15 +620,18 @@ def refresh_triples_partitioned(
             eager=True
         )
         changed = changed_with_max.select("conv_id")
-    # ONE job answers both "how many changed?" and "which buckets?":
-    # the per-bucket grouped count is bounded by n_buckets rows, and
+    # ONE grouped collect answers "how many changed?", "which stage
+    # buckets?" and, on the bucketed raw-turns path, "which raw
+    # buckets?": it returns at most n_buckets × raw-buckets rows, and
     # n_changed is its sum (``changed`` is distinct by construction in
-    # every mode) — the separate count() + distinct-collect pair this
-    # replaces cost two scheduler round-trips per refresh tick.
-    bucket_of = F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
-    bucket_rows = (
-        changed.select(bucket_of.alias("p_hash")).groupBy("p_hash").count().collect()
-    )
+    # every mode).
+    def bucket_of(n: int) -> Column:
+        return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n)).cast("int")
+
+    keys = [bucket_of(n_buckets).alias("p_hash")]
+    if isinstance(turns, str):
+        keys.append(bucket_of(t_meta["n_buckets"]).alias("t_hash"))
+    bucket_rows = changed.groupBy(*keys).count().collect()
     n_changed = sum(int(r["count"]) for r in bucket_rows)
     if n_changed == 0:
         # true no-op: no stage write, no frontier write, zero files
@@ -658,8 +642,15 @@ def refresh_triples_partitioned(
     # ints) and lets the upsert express "bucket became empty" — a
     # changed conversation that re-extracts to zero triples must
     # DELETE its stale bucket, which dynamic overwrite alone cannot do
-    touched = sorted(int(r["p_hash"]) for r in bucket_rows)
+    touched = sorted({int(r["p_hash"]) for r in bucket_rows})
     n_buckets_touched = len(touched)
+    if isinstance(turns, str):
+        t_touched = sorted({int(r["t_hash"]) for r in bucket_rows})
+        turns = (
+            sio.read_table(spark, turns, keep_bucket_col=True)
+            .filter(F.col("p_hash").isin(t_touched))
+            .drop("p_hash")
+        )
     # small deltas: collect the id list (bounded by _ISIN_DELTA_MAX)
     # so the re-extraction runs as a literal scan filter instead of a
     # broadcast semi-join — see _delta_good_triples
@@ -698,7 +689,7 @@ def refresh_triples_partitioned(
     # corpus-side join well, and the anti-joins below are where the
     # kept-side shuffle actually disappears
     replacement = kept_in_touched.unionByName(
-        _delta_good_triples(turns, changed, impl, changed_ids=changed_ids)
+        _delta_good_triples(turns, changed, changed_ids=changed_ids)
     )
     # frontier maintenance: first refresh of a pre-frontier table
     # persists the COMPLETE frontier (one-time full write); afterwards

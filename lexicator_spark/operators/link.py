@@ -82,7 +82,6 @@ def mention_surfaces(triples: DataFrame) -> DataFrame:
 def link_mentions(
     triples: DataFrame,
     catalog: DataFrame,
-    threshold: float = rules.LINK_SCORE_THRESHOLD,
     broadcast_catalog: bool = True,
 ) -> DataFrame:
     """mention triples → ``same_as`` triples
@@ -96,7 +95,6 @@ def link_mentions(
     return link_surfaces(
         mention_surfaces(triples),
         catalog,
-        threshold=threshold,
         broadcast_catalog=broadcast_catalog,
     )
 
@@ -104,7 +102,6 @@ def link_mentions(
 def link_surfaces(
     surfaces: DataFrame,
     catalog: DataFrame,
-    threshold: float = rules.LINK_SCORE_THRESHOLD,
     broadcast_catalog: bool = True,
 ) -> DataFrame:
     """Link a pre-computed surface universe — ``surfaces(surface)``,
@@ -136,9 +133,8 @@ def link_surfaces(
     w = Window.partitionBy("surface").orderBy(
         F.col("score").desc(), F.col("canonical_id"), F.col("alias_norm")
     )
-    best = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("score") >= threshold))
+    best = cand.withColumn("rn", F.row_number().over(w)).filter(
+        (F.col("rn") == 1) & (F.col("score") >= rules.LINK_SCORE_THRESHOLD)
     )
 
     return best.select(

@@ -318,7 +318,6 @@ def run_pipeline(
     turns: DataFrame,
     out_root: str,
     resume: bool = True,
-    impl: str = "native",
     n_buckets: int = sio.DEFAULT_BUCKETS,
     backfill_groups: int | None = None,
     turns_source: str | None = None,
@@ -543,7 +542,7 @@ def run_pipeline(
         # (bucketed write, rejects write, Stage B) each decode once.
         from pyspark import StorageLevel
 
-        extracted = extract_triples(turns, impl=impl).localCheckpoint(
+        extracted = extract_triples(turns).localCheckpoint(
             eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
         )
         good, rejects = split_rejects(extracted)
@@ -629,7 +628,6 @@ def run_pipeline(
                 spark,
                 turns_source if turns_source is not None else turns,
                 raw_path,
-                impl=impl,
                 n_buckets=n_buckets,
                 n_groups=backfill_groups,
                 rejects_location=os.path.join(out_root, "rejects"),

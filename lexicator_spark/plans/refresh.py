@@ -294,7 +294,6 @@ def refresh_pipeline(
     turns: DataFrame | None,
     out_root: str,
     change_feed: DataFrame | None = None,
-    impl: str = "native",
     turns_location: str | None = None,
 ) -> RefreshPipelineResult:
     """Refresh every stage table under ``out_root`` for a turns delta,
@@ -335,7 +334,7 @@ def refresh_pipeline(
             else sio.read_table(spark, turns_location)
         )
         P.run_pipeline(
-            spark, recovery_turns, out_root, resume=True, impl=impl,
+            spark, recovery_turns, out_root, resume=True,
             n_buckets=P._check_bucket_layout(
                 spark, os.path.join(out_root, "triples_raw")
             ),
@@ -445,7 +444,7 @@ def refresh_pipeline(
         res: RefreshResult = refresh_triples_partitioned(
             spark,
             turns_location if turns_location is not None else turns,
-            raw_path, impl=impl, change_feed=change_feed,
+            raw_path, change_feed=change_feed,
             on_replacement=_stats_and_diff,
         )
     if res.n_changed == 0:

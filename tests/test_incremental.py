@@ -442,3 +442,55 @@ def test_feed_refresh_location_needs_change_feed(spark, tmp_path):
     with pytest.raises(ValueError, match="needs change_feed"):
         refresh_triples_partitioned(spark, raw, stage)
     assert not os.path.exists(stage)
+
+
+def test_location_feed_refresh_reads_the_feed_in_one_grouped_collect(
+    spark, tmp_path
+):
+    """On the bucketed raw-turns path, one grouped collect over the
+    pinned feed yields n_changed, the stage buckets and the raw
+    buckets; a second collect for the raw buckets would add its own
+    jobs.  Counts the jobs the calling thread launches (the upserts'
+    pool threads carry no job group)."""
+    from pyspark.sql import functions as F
+
+    from lexicator_spark.operators.incremental import materialize_frontier
+
+    turns = synth.corpus_df(spark, synth.make_corpus(n_convs=40, seed=5))
+    stage = str(tmp_path / "stage")
+    sio.write_table(
+        extract_triples(turns), stage, partition_key="conv_id", n_buckets=8
+    )
+    materialize_frontier(spark, turns, stage)
+    grown = sorted({r.conv_id for r in turns.select("conv_id").collect()})[:3]
+    delta = (
+        turns.filter(F.col("conv_id").isin(grown))
+        .groupBy("conv_id")
+        .agg(F.max("turn_idx").alias("turn_idx"))
+        .join(turns, ["conv_id", "turn_idx"])
+        .withColumn("turn_idx", F.col("turn_idx") + 1)
+        .select(*turns.columns)
+    )
+    v2 = turns.unionByName(delta)
+    raw = str(tmp_path / "turns_bucketed")
+    sio.write_table(v2, raw, partition_key="conv_id", n_buckets=4)
+    feed = spark.createDataFrame([(c,) for c in grown], "conv_id string")
+
+    sc = spark.sparkContext
+    group = "location-feed-refresh"
+    sc.setJobGroup(group, group)
+    try:
+        res = refresh_triples_partitioned(spark, raw, stage, change_feed=feed)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # noqa: SLF001
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
+    assert res.n_changed == len(grown)
+    assert _tset(res.table) == _tset(extract_triples(v2))
+    # the feed's pin, one grouped collect and the IN-list id collect
+    assert jobs <= 5, jobs

@@ -244,10 +244,8 @@ def test_delta_isin_path_equals_semi_join(spark):
         ],
     )
     changed = spark.createDataFrame([("a",), ("c",)], "conv_id string")
-    via_join = _delta_good_triples(turns, changed, "native")
-    via_isin = _delta_good_triples(
-        turns, changed, "native", changed_ids=["a", "c"]
-    )
+    via_join = _delta_good_triples(turns, changed)
+    via_isin = _delta_good_triples(turns, changed, changed_ids=["a", "c"])
     assert via_join.exceptAll(via_isin).isEmpty()
     assert via_isin.exceptAll(via_join).isEmpty()
 

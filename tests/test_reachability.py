@@ -25,7 +25,6 @@ KEPT = {
     "dedup_turns_stream": "streaming operator awaiting its batch-twin crossover measurement",
     "mention_spans": "reference implementation tests/oracle.py compares spans against",
     "jaccard": "reference implementation tests/oracle.py compares link scores against",
-    "read_lineage": "the reader of a root's _lineage table",
 }
 
 
