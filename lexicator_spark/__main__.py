@@ -153,7 +153,7 @@ def main(argv: list[str] | None = None) -> int:
             )
 
             update_stage_bucket_counts(
-                spark, args.out, "extract", raw_path,
+                spark, args.out, "extract",
                 list(res.touched_buckets), list(res.bucket_counts),
             )
         print(
@@ -338,9 +338,7 @@ def main(argv: list[str] | None = None) -> int:
         raw_path = os.path.join(args.out, "triples_raw")
         # no prior stage table → fall through to the full pipeline
         if fsutil.exists(spark, os.path.join(raw_path, "_schema.json")):
-            from lexicator_spark.operators.incremental import (
-                validate_refresh_preconditions,
-            )
+            from lexicator_spark.operators import incremental
             from lexicator_spark.plans.refresh import refresh_pipeline
             from lexicator_spark.sources import io as sio
 
@@ -350,14 +348,10 @@ def main(argv: list[str] | None = None) -> int:
                 # apply the delta below.  An unfinished --backfill is
                 # refused: re-run it instead of finishing its groups
                 # in one unchunked extraction pass here.
-                validate_refresh_preconditions(spark, raw_path)
-                raw_meta = sio.read_bucket_meta(spark, raw_path)
+                incremental._refuse_unfinished_backfill(spark, raw_path)
                 _print_pipeline(run_pipeline(
                     spark, turns, args.out, resume=True,
-                    n_buckets=(
-                        raw_meta["n_buckets"] if raw_meta
-                        else sio.DEFAULT_BUCKETS
-                    ),
+                    n_buckets=incremental._stage_modulus(spark, raw_path),
                 ))
             feed = (
                 spark.read.parquet(args.change_feed)

@@ -7,10 +7,14 @@ Batch form (parquet backend): the processed frontier is the explicit
 ``_frontier(conv_id, done_max_idx)`` table stored beside the stage
 table — written at build time (``materialize_frontier``,
 ``backfill_triples``) and bucket-upserted by every refresh, so
-zero-triple conversations count as processed.  New work = every turn
-of any conversation that is new or gained turns beyond its frontier
-row (``changed_conversations``; the extraction window and
-``replies_to`` need the whole conversation — re-deriving a
+zero-triple conversations count as processed.  One rule holds it to
+the rows it describes: a refresh writes its frontier only after its
+stage upsert has returned, so the frontier never runs ahead of the
+stage table, and every finished build root holds one.  A stage table
+without a ``_frontier`` is refused (``validate_refresh_preconditions``).
+New work = every turn of any conversation that is new or gained turns
+beyond its frontier row (``changed_conversations``; the extraction
+window and ``replies_to`` need the whole conversation — re-deriving a
 conversation is idempotent because stage writes are keyed dedups).
 With Iceberg the frontier bookkeeping is replaced by incremental
 snapshot reads — same function shape.
@@ -133,20 +137,22 @@ def validate_refresh_preconditions(
     so a mere validation failure cannot strand the marker and force a
     spurious O(corpus) downstream rebuild on the next run.
 
-    Checks: no unfinished chunked backfill on the stage table, and —
-    for the feed-pruned path (``turns_location`` given) — frontier
-    existence plus conv_id bucketing of the raw-turns table.  Returns
-    the turns table's bucket meta (``None`` when no ``turns_location``),
-    whose modulus the feed path prunes with."""
+    Checks, on both input shapes: no unfinished chunked backfill on
+    the stage table, and an existing ``_frontier``.  For the
+    feed-pruned path (``turns_location`` given) also the conv_id
+    bucketing of the raw-turns table.  Returns the turns table's
+    bucket meta (``None`` when no ``turns_location``), whose modulus
+    the feed path prunes with."""
     _refuse_unfinished_backfill(spark, stage_location)
-    if turns_location is None:
-        return None
     if not fsutil.exists(spark, _frontier_location(stage_location)):
         raise ValueError(
-            f"stage at {stage_location} has no _frontier yet: run one "
-            "full-corpus refresh_triples_partitioned to bootstrap it "
-            "before feed-scoped refreshes"
+            f"stage at {stage_location} has no _frontier: write it with "
+            "materialize_frontier from the turns the table was extracted "
+            "from, or, under a build root, with run_pipeline(..., "
+            "resume=True)"
         )
+    if turns_location is None:
+        return None
     t_meta = sio.read_bucket_meta(spark, turns_location)
     if t_meta is None:
         raise ValueError(
@@ -191,23 +197,17 @@ def materialize_frontier(
     turns: DataFrame,
     stage_location: str,
 ) -> bool:
-    """Write the ``_frontier`` table at initial-build time, from the
-    same turns snapshot the build extracted — so the FIRST refresh is
-    already delta-scoped instead of paying the detection bootstrap.
-
-    Measured cost of not doing this (BENCH/BASELINE.md, 29.3M turns):
-    the bootstrap refresh runs a full triples scan + full-snapshot
-    detection aggregate + complete frontier write — 374.9 s, 2.7× a
-    full rebuild — before the first delta is processed.  This helper
-    is one ``groupBy(conv_id).max(turn_idx)`` aggregate + one bucketed
-    write over data the build just scanned anyway.
-
-    Turns-derived (not triples-derived like the bootstrap fallback),
-    so zero-triple conversations are recorded as processed from day
-    one.  No-op returning False if a ``_frontier`` already exists
-    (refresh maintains it from then on); returns True when written.
-    Bucketing follows the stage table's ``_buckets.json`` so the
-    refresh upserts stay co-partitioned."""
+    """Write the ``_frontier`` of a stage table that has none:
+    ``max(turn_idx)`` per ``conv_id`` of ``turns``, which must be what
+    the stage table holds — the turns the build extracted, or the
+    table's own rows with ``conv_id`` not NULL.  Never a newer
+    snapshot: that would record never-extracted conversations as
+    processed.  A frontier taken from the table's rows has no row for
+    a zero-triple conversation, so the next detection refresh
+    re-extracts it (idempotent).  No-op returning False if a
+    ``_frontier`` already exists (refresh maintains it from then on);
+    returns True when written.  Bucketing follows the stage table's
+    ``_buckets.json`` so the refresh upserts stay co-partitioned."""
     floc = _frontier_location(stage_location)
     if fsutil.exists(spark, floc):
         return False
@@ -513,10 +513,8 @@ def refresh_triples_partitioned(
     path works, tested in tests/test_refresh_e2e.py) — so feeds must
     be emitted only after the corresponding raw-table upsert has
     landed, or a transiently-missing conversation will be dropped and
-    stay gone until a later feed re-lists it.  Without a feed (default), changes are
-    detected from the snapshot as below.  The one-time frontier
-    bootstrap always runs in detection mode (it must see the full
-    corpus once).
+    stay gone until a later feed re-lists it.  Without a feed
+    (default), changes are detected from the snapshot as below.
 
     Only the ``p_hash`` buckets containing a changed conversation are
     rewritten (dynamic partition overwrite via ``sio.upsert_partitions``);
@@ -533,8 +531,11 @@ def refresh_triples_partitioned(
     still recorded as processed — a refresh with no new turns rewrites
     NOTHING (a frontier derived from the triples would re-derive the
     zero-triple tail forever).  Detection is ``changed_conversations``
-    against that table.  On first refresh of a pre-frontier table the
-    frontier bootstraps from the triples.
+    against that table.  A stage table without one is refused
+    (``validate_refresh_preconditions``).  The frontier's write starts
+    only after the stage upsert has returned, and not at all if it
+    raised: the frontier never runs ahead of the rows it describes, so
+    a failed upsert leaves its conversations detectable.
 
     ``turns`` as a STRING names a BUCKETED raw-turns table (written /
     upserted via ``sio.write_table`` / ``sio.upsert_partitions`` keyed
@@ -543,10 +544,8 @@ def refresh_triples_partitioned(
     is: a batch of new turns arrives with its conv_id list (the
     RecentChanges poll), the raw table is bucket-upserted with it
     (O(delta)), then this refresh re-extracts exactly those
-    conversations (O(delta)).  It needs ``change_feed`` and an
-    existing ``_frontier`` (``validate_refresh_preconditions``; the
-    one-time bootstrap must see the full corpus), and reads only the
-    raw buckets holding a fed conversation, pruned in the turns
+    conversations (O(delta)).  It needs ``change_feed``, and reads
+    only the raw buckets holding a fed conversation, pruned in the turns
     table's own ``_buckets.json`` modulus (it may differ from the
     stage's).  With a DataFrame and a feed, detection is skipped but
     the re-extraction semi-join still scans the whole snapshot, which
@@ -569,18 +568,15 @@ def refresh_triples_partitioned(
     derives its ``_surface_stats`` update and universe diff there.
     Not called when nothing changed."""
     floc = _frontier_location(stage_location)
-    if isinstance(turns, str):
-        if change_feed is None:
-            raise ValueError(
-                f"refresh from the turns table at {turns} needs "
-                "change_feed: without a feed the detection aggregate "
-                "must see the full snapshot — pass it as a DataFrame"
-            )
-        t_meta = validate_refresh_preconditions(spark, stage_location, turns)
-        bootstrap = False  # validated: the frontier exists
-    else:
-        _refuse_unfinished_backfill(spark, stage_location)
-        bootstrap = not fsutil.exists(spark, floc)
+    if isinstance(turns, str) and change_feed is None:
+        raise ValueError(
+            f"refresh from the turns table at {turns} needs "
+            "change_feed: without a feed the detection aggregate "
+            "must see the full snapshot — pass it as a DataFrame"
+        )
+    t_meta = validate_refresh_preconditions(
+        spark, stage_location, turns if isinstance(turns, str) else None
+    )
     n_buckets = _stage_modulus(spark, stage_location)
 
     # detection mode pins (conv_id, max_idx) — the changed set AND the
@@ -591,7 +587,7 @@ def refresh_triples_partitioned(
     # changed_with_max stays None there and the frontier derives from
     # the one semi-join pass over `turns`.
     changed_with_max: DataFrame | None = None
-    if change_feed is not None and not bootstrap:
+    if change_feed is not None:
         # RecentChanges proper: the feed IS the changed set — no
         # snapshot-wide detection aggregate, no full frontier read.
         # NULL feed rows name nothing: dropped.  (xxhash64(NULL) is
@@ -605,20 +601,9 @@ def refresh_triples_partitioned(
             .localCheckpoint(eager=True)
         )
     else:
-        if bootstrap:
-            # one-time full scan: no frontier table yet, derive it from
-            # the triples (steady-state refreshes never touch this path)
-            done = sio.read_table(spark, stage_location)
-            frontier = (
-                done.filter(F.col("conv_id").isNotNull())
-                .groupBy("conv_id")
-                .agg(F.max("turn_idx").alias("done_max_idx"))
-            )
-        else:
-            frontier = sio.read_table(spark, floc)
-        changed_with_max = changed_conversations(turns, frontier).localCheckpoint(
-            eager=True
-        )
+        changed_with_max = changed_conversations(
+            turns, sio.read_table(spark, floc)
+        ).localCheckpoint(eager=True)
         changed = changed_with_max.select("conv_id")
     # ONE grouped collect answers "how many changed?", "which stage
     # buckets?" and, on the bucketed raw-turns path, "which raw
@@ -691,16 +676,15 @@ def refresh_triples_partitioned(
     replacement = kept_in_touched.unionByName(
         _delta_good_triples(turns, changed, changed_ids=changed_ids)
     )
-    # frontier maintenance: first refresh of a pre-frontier table
-    # persists the COMPLETE frontier (one-time full write); afterwards
-    # it is bucket-upserted exactly like the stage table.  Detection
-    # mode reuses the pinned (conv_id, max_idx) delta — the changed
-    # set's new frontier rows are BY DEFINITION `latest` restricted to
-    # it, so re-aggregating the snapshot here was a second full-corpus
-    # pass per refresh tick (removed r6; at 29M turns that pass is the
-    # difference between O(delta) and O(corpus) frontier upkeep).
-    # Feed mode still derives it from one semi-join pass over `turns`
-    # (delta-scoped by construction — no snapshot aggregate exists).
+    # frontier maintenance: bucket-upserted exactly like the stage
+    # table.  Detection mode reuses the pinned (conv_id, max_idx)
+    # delta — the changed set's new frontier rows are BY DEFINITION
+    # `latest` restricted to it, so re-aggregating the snapshot here
+    # was a second full-corpus pass per refresh tick (removed r6; at
+    # 29M turns that pass is the difference between O(delta) and
+    # O(corpus) frontier upkeep).  Feed mode still derives it from one
+    # semi-join pass over `turns` (delta-scoped by construction — no
+    # snapshot aggregate exists).
     if changed_with_max is not None:
         new_frontier = changed_with_max.select(
             "conv_id", F.col("max_idx").alias("done_max_idx")
@@ -711,37 +695,15 @@ def refresh_triples_partitioned(
             .groupBy("conv_id")
             .agg(F.max("turn_idx").alias("done_max_idx"))
         )
-    if bootstrap:
-        frontier_replacement = frontier.join(
-            changed_j, "conv_id", "left_anti"
-        ).unionByName(new_frontier)
-    else:
-        # partition-pruned like kept_in_touched: only touched buckets
-        # of the frontier table are read and rewritten
-        kept_frontier = (
-            sio.read_table(spark, floc, keep_bucket_col=True)
-            .filter(F.col("p_hash").isin(touched))
-            .drop("p_hash")
-            .join(changed_j, "conv_id", "left_anti")
-        )
-        frontier_replacement = kept_frontier.unionByName(new_frontier)
-
-    # Replacement frames read the very files the upserts are about to
-    # replace, so they must be materialized BEFORE any write — once per
-    # sink, never twice (a second pin would double the refresh's
-    # dominant materialization cost).  The stage replacement is pinned
-    # in _stage_upsert below, which hands the pinned frame to
-    # ``on_replacement``; the frontier's pin happens INSIDE the seam
-    # (touched_buckets forces an eager localCheckpoint there).  The
-    # one frame NOT covered is the bootstrap frontier: it lazily reads
-    # stage_location (the triples-derived frontier), goes through
-    # write_table (no internal pin), and the stage upsert rewrites
-    # those files first — pin it here.
-    # Iceberg's snapshot isolation makes this unnecessary there; on
-    # the parquet backend the staged volume is one full frontier
-    # (bootstrap happens once per table).
-    if bootstrap:
-        frontier_replacement = frontier_replacement.localCheckpoint(eager=True)
+    # partition-pruned like kept_in_touched: only touched buckets of
+    # the frontier table are read and rewritten
+    frontier_replacement = (
+        sio.read_table(spark, floc, keep_bucket_col=True)
+        .filter(F.col("p_hash").isin(touched))
+        .drop("p_hash")
+        .join(changed_j, "conv_id", "left_anti")
+        .unionByName(new_frontier)
+    )
 
     # a sparse delta touches few buckets: spread each touched bucket's
     # rewrite over salted files so it isn't one writer task per bucket
@@ -754,15 +716,16 @@ def refresh_triples_partitioned(
         ),
     )
 
-    # The stage upsert and the frontier upsert touch DISJOINT tables
-    # (each one's replacement frame reads only its own table's files,
-    # pinned before its write) — run them as two concurrent jobs so
-    # the frontier write's fixed job costs hide under the stage
-    # write's tail instead of adding to it (guide §2.6: overlap
-    # independent jobs; a sparse refresh is fixed-cost-dominated, so
-    # serial job count IS its wall).  ``on_replacement`` is a third
-    # task in the same pool, started as soon as the stage replacement
-    # is pinned.
+    # Replacement frames read the very files their upserts replace, so
+    # each is pinned once before its write: the stage replacement in
+    # _stage_upsert, which hands the pinned frame to ``on_replacement``
+    # (a third task in the same pool), and the frontier replacement in
+    # _frontier_upsert.  The two pins run concurrently (each reads only
+    # its own table), so the frontier's fixed job costs hide under the
+    # stage upsert (guide §2.6: a sparse refresh is fixed-cost-bound).
+    # The frontier's WRITE waits for the stage upsert to return and is
+    # skipped when it raised: a frontier ahead of its rows would hide
+    # the failed delta from every later detection refresh.
     def _stage_upsert():
         pinned = replacement.localCheckpoint(eager=True)
         hook = (
@@ -779,16 +742,13 @@ def refresh_triples_partitioned(
         return counts, hook
 
     def _frontier_upsert():
-        if bootstrap:
-            sio.write_table(
-                frontier_replacement, floc, partition_key="conv_id",
-                n_buckets=n_buckets,
-            )
-        else:
-            sio.upsert_partitions(
-                frontier_replacement, floc, partition_key="conv_id",
-                n_buckets=n_buckets, touched_buckets=touched,
-            )
+        pinned = frontier_replacement.localCheckpoint(eager=True)
+        stage_future.result()  # raises, writing nothing, if it failed
+        sio.upsert_partitions(
+            pinned, floc, partition_key="conv_id",
+            n_buckets=n_buckets, touched_buckets=touched,
+            pin_replacement=False,  # pinned above
+        )
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         stage_future = pool.submit(_stage_upsert)

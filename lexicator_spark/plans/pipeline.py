@@ -267,10 +267,7 @@ def _materialize_by_copy(
     counts, plus the appended count on the NULL bucket."""
     raw_path = os.path.join(root, "triples_raw")
     triples_path = os.path.join(root, "triples")
-    raw_counts = _read_marker(spark, root, "extract").get("bucket_counts")
-    if raw_counts is None:
-        # pre-counts extract marker: one footer scan of the raw table
-        raw_counts = _bucket_counts(spark, raw_path)
+    raw_counts = _read_marker(spark, root, "extract")["bucket_counts"]
     if touched is None:
         fsutil.delete(spark, triples_path, recursive=True)
     sio.copy_buckets(spark, raw_path, triples_path, buckets=touched)
@@ -556,41 +553,34 @@ def run_pipeline(
         )
         return good
 
-    # build-time frontier: record what this build processed so the
-    # first --refresh is delta-scoped instead of paying the detection
-    # bootstrap (374.9 s vs one aggregate pass at 29.3M turns,
-    # BENCH/BASELINE.md).  No-op when _frontier already exists (a
-    # refreshed table maintains its own).  Only when extraction RAN
-    # this invocation: on a marker-skipped resume the current turns
-    # snapshot may be newer than what the table holds, and stamping
-    # it as processed would hide its unextracted conversations from
-    # every future refresh (the refresh bootstrap derives a frontier
-    # from the triples table instead, which is always safe).
+    # The sidecars every refresh needs, written by every build:
+    #   - _frontier (materialize_frontier): what triples_raw holds, so
+    #     the first --refresh is delta-scoped.  When this call extracted,
+    #     from the turns it extracted; on a resume that skipped
+    #     extraction, from triples_raw's own rows — never from the
+    #     current turns snapshot, which may be newer than the table and
+    #     would record unextracted conversations as processed.  No-op
+    #     when _frontier exists (a refreshed table maintains its own);
+    #   - _surface_stats (ensure_surface_stats): one aggregate over the
+    #     mention triples, so the table is born consistent with the
+    #     downstream stages.
+    # Both are INDEPENDENT of stages B-D (they read the turns snapshot /
+    # the raw table, and write underscore-prefixed sidecars no stage
+    # reads): run them on the side pool so their ~5 s of
+    # aggregate+bucketed-write jobs back-fill the executor capacity
+    # stages B-D leave idle (guide §2.6 — overlap independent jobs)
+    # instead of extending the critical path.  They start only once
+    # triples_raw is committed: its overwrite would delete a _frontier
+    # written inside it, and the stats read its files.  The stats table
+    # IS read by stage_entities, so the side jobs are joined before that
+    # stage runs.
     from lexicator_spark.operators.incremental import materialize_frontier
-
-    # likewise materialize the per-bucket surface-universe stats
-    # (_surface_stats) the end-to-end refresh maintains — one
-    # aggregate over the mention triples this build just wrote, so
-    # the first --refresh never pays a full-table bootstrap and
-    # the table is born consistent with the downstream stages.
-    #
-    # Both sidecar builds are INDEPENDENT of stages B-D (they read the
-    # turns snapshot / the raw table, and write underscore-prefixed
-    # sidecars no stage reads): run them on the side pool so their
-    # ~5 s of aggregate+bucketed-write jobs back-fill the executor
-    # capacity stages B-D leave idle (guide §2.6 — overlap independent
-    # jobs) instead of extending the critical path.  They start only
-    # once triples_raw is committed: its overwrite would delete a
-    # _frontier written inside it, and the stats read its files.  The
-    # stats table IS read by stage_entities, so the side jobs are
-    # joined before that stage runs.
     from lexicator_spark.plans.refresh import ensure_surface_stats
 
-    def start_side_jobs(extracted_now: bool) -> None:
-        if extracted_now:
-            side_futures.append(
-                side_pool.submit(materialize_frontier, spark, turns, raw_path)
-            )
+    def start_side_jobs(frontier_rows: DataFrame) -> None:
+        side_futures.append(
+            side_pool.submit(materialize_frontier, spark, frontier_rows, raw_path)
+        )
         side_futures.append(
             side_pool.submit(ensure_surface_stats, spark, out_root, n_buckets)
         )
@@ -619,7 +609,7 @@ def run_pipeline(
             _check_bucket_layout(spark, raw_path, n_buckets)
             skipped.append("extract")
             link_input = sio.read_table(spark, raw_path)
-            start_side_jobs(extracted_now=False)
+            start_side_jobs(link_input.filter(F.col("conv_id").isNotNull()))
         elif backfill_groups is not None:
             from lexicator_spark.operators.incremental import backfill_triples
 
@@ -648,14 +638,14 @@ def run_pipeline(
                 buckets, rows_in=turns.count(),
                 n_partitions=link_input.rdd.getNumPartitions(),
             )
-            start_side_jobs(extracted_now=True)
+            start_side_jobs(turns)
         else:
             t0 = time.monotonic()
             link_input = stage_a()
 
             def write_raw() -> dict:
                 _, written = write_stage(link_input, raw_path, "conv_id", t0)
-                start_side_jobs(extracted_now=True)
+                start_side_jobs(turns)
                 return written
 
             raw_write = side_pool.submit(write_raw)

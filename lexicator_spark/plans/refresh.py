@@ -104,13 +104,14 @@ def _inflight_path(out_root: str) -> str:
 
 def begin_refresh(spark: SparkSession, out_root: str) -> None:
     """Write the refresh in-flight marker.  Stage A advances the
-    ``_frontier`` atomically with its raw upsert, so a crash between
-    Stage A and the downstream sync leaves a delta that can never be
-    RE-DETECTED — without this marker, the next refresh would see
-    n_changed == 0 and silently serve downstream tables that
-    permanently miss the delta.  Callers bracket the whole
-    upsert-through-downstream window with ``begin_refresh`` /
-    ``end_refresh`` and run ``recover_inflight_refresh`` at entry."""
+    ``_frontier`` right after its raw upsert returns (never before, and
+    not at all when the upsert raised), so a crash between Stage A and
+    the downstream sync leaves a delta that can never be RE-DETECTED —
+    without this marker, the next refresh would see n_changed == 0 and
+    silently serve downstream tables that permanently miss the delta.
+    Callers bracket the whole upsert-through-downstream window with
+    ``begin_refresh`` / ``end_refresh`` and run
+    ``recover_inflight_refresh`` at entry."""
     fsutil.write_text(
         spark, _inflight_path(out_root), json.dumps({"inflight": True})
     )
@@ -199,11 +200,12 @@ def surface_rollup(stats: DataFrame) -> DataFrame:
 def ensure_surface_stats(
     spark: SparkSession, out_root: str, n_buckets: int
 ) -> str:
-    """Bootstrap ``_surface_stats`` from the current Stage-A table if
-    absent (one full pass).  ``run_pipeline`` calls this at build time
-    (like ``materialize_frontier``) so the table is born consistent
-    with the downstream stages; the bootstrap here remains only as the
-    fallback for roots built by older code.  Returns the location.
+    """Write ``_surface_stats`` from the current Stage-A table if
+    absent (one full pass).  ``run_pipeline`` calls this on every
+    build and resume (beside ``materialize_frontier``), so a finished
+    root always holds the table, born consistent with the downstream
+    stages; ``refresh_pipeline`` refuses a root without it.  Returns
+    the location.
 
     Consistency contract: ``_surface_stats`` must reflect the raw
     table AS OF the last downstream (link/canonicalize) sync — it is
@@ -229,28 +231,20 @@ def ensure_surface_stats(
 
 def _delta_bucket_counts(
     spark: SparkSession,
-    table_path: str,
     out_root: str,
     stage: str,
     touched: list[int],
     fresh_counts: list[tuple],
-) -> list[tuple] | None:
+) -> list[tuple]:
     """O(delta) per-bucket row counts after a partial upsert: untouched
     buckets keep the counts recorded in the stage's checkpoint marker
     (written at build time and maintained by every refresh), the
     rewritten buckets take ``fresh_counts`` (the counts that
     ``sio.upsert_partitions`` or ``_materialize_by_copy`` returns for
-    them) — ZERO extra jobs.  Falls back to one full
-    ``_bucket_counts`` pass when the marker carries no counts
-    (pre-counts root) — a refresh must never pay a corpus-wide job for
-    lineage bookkeeping (this module's own contract: 'a
-    ten-conversation delta must not cost corpus-wide jobs')."""
-    try:
-        prior = P._read_marker(spark, out_root, stage).get("bucket_counts")
-    except Exception:
-        prior = None
-    if prior is None:
-        return P._bucket_counts(spark, table_path)
+    them) — ZERO extra jobs.  ``refresh_pipeline`` refuses a root whose
+    markers carry no counts, so a refresh never pays a corpus-wide job
+    for lineage bookkeeping."""
+    prior = P._read_marker(spark, out_root, stage)["bucket_counts"]
     merged = {int(b): int(c) for b, c in prior}
     for b in touched:
         merged.pop(int(b), None)  # a touched bucket may now be empty
@@ -262,7 +256,6 @@ def update_stage_bucket_counts(
     spark: SparkSession,
     out_root: str,
     stage: str,
-    table_path: str,
     touched: list[int],
     fresh_counts: list[tuple],
 ) -> None:
@@ -276,16 +269,12 @@ def update_stage_bucket_counts(
     (``CompactResult.bucket_counts``); same O(delta) merge as
     ``_delta_bucket_counts``; no-op when the root has no marker for
     the stage (standalone tables)."""
-    try:
-        marker = P._read_marker(spark, out_root, stage)
-    except Exception:
+    if not P._is_done(spark, out_root, stage):
         return
-    merged = _delta_bucket_counts(
-        spark, table_path, out_root, stage, touched, fresh_counts
-    )
+    marker = P._read_marker(spark, out_root, stage)
+    merged = _delta_bucket_counts(spark, out_root, stage, touched, fresh_counts)
     marker["bucket_counts"] = merged
-    if merged is not None:
-        marker["rows_out"] = sum(c for _, c in merged)
+    marker["rows_out"] = sum(c for _, c in merged)
     P._mark_done(spark, out_root, stage, marker)
 
 
@@ -353,11 +342,30 @@ def refresh_pipeline(
     canonical_path = os.path.join(out_root, "canonical")
     entities_path = os.path.join(out_root, "entities")
 
-    # Stage D copies raw buckets over materialized ones: both tables
-    # must record one conv_id layout, checked before anything is
-    # written (a refused refresh leaves no in-flight marker)
+    # What the refresh relies on, checked before anything is written:
+    # a refused refresh mutates nothing and leaves no in-flight marker
+    # (which would force a spurious O(corpus) downstream rebuild).
+    # Stage D copies raw buckets over materialized ones, so both tables
+    # record one conv_id layout; Stage A needs its _frontier (and, on
+    # the pruned path, a conv_id-bucketed turns table); Stage B derives
+    # the universe diff from _surface_stats; the lineage counts merge
+    # into the markers' bucket_counts.  Every build writes all of them.
     n_buckets = P._check_bucket_layout(spark, raw_path)
     P._check_bucket_layout(spark, triples_path, n_buckets)
+    validate_refresh_preconditions(spark, raw_path, turns_location=turns_location)
+    stats_loc = _stats_location(out_root)
+    if not fsutil.exists(spark, os.path.join(stats_loc, "_schema.json")):
+        raise ValueError(
+            f"{out_root} has no _surface_stats: write it with "
+            "run_pipeline(..., resume=True)"
+        )
+    for stage in ("extract", "materialize"):
+        if P._read_marker(spark, out_root, stage).get("bucket_counts") is None:
+            raise ValueError(
+                f"the {stage} marker under {out_root} carries no "
+                "bucket_counts: rebuild the root with "
+                "run_pipeline(..., resume=False)"
+            )
 
     # ── surface universe, derived beside the Stage-A upserts ──────
     # The old _surface_stats rows are pinned on a side thread
@@ -365,7 +373,6 @@ def refresh_pipeline(
     # triples_raw/_frontier, never _surface_stats, and the pin only has
     # to land before the stats upsert in _stats_and_diff moves the
     # files, which joins it first.
-    stats_loc = ensure_surface_stats(spark, out_root, n_buckets)
 
     def _pin_old_stats():
         return sio.read_table(
@@ -427,16 +434,9 @@ def refresh_pipeline(
     # ── Stage A (delegated) ──────────────────────────────────────
     with ThreadPoolExecutor(max_workers=1) as side_pool:
         old_stats_future = side_pool.submit(_pin_old_stats)
-        # validate BEFORE opening the in-flight window: a refresh
-        # refused on its preconditions mutated nothing, and must not
-        # strand a marker that would force a spurious O(corpus)
-        # downstream rebuild
-        validate_refresh_preconditions(
-            spark, raw_path, turns_location=turns_location
-        )
         # in-flight from here until every downstream stage is synced:
-        # the Stage-A upsert advances the frontier, after which the
-        # delta is undetectable — a crash inside this window (the
+        # once the Stage-A upsert returns, the frontier advances and
+        # the delta is undetectable — a crash inside this window (the
         # stats upsert in _stats_and_diff included) must force a
         # downstream rebuild on the next run (recover_inflight_refresh)
         begin_refresh(spark, out_root)
@@ -464,12 +464,11 @@ def refresh_pipeline(
         )
 
     raw_buckets = _delta_bucket_counts(
-        spark, raw_path, out_root, "extract", touched,
-        fresh_counts=res.bucket_counts,
+        spark, out_root, "extract", touched, fresh_counts=res.bucket_counts
     )
     _done(
         "extract",
-        sum(c for _, c in raw_buckets or []),
+        sum(c for _, c in raw_buckets),
         wall_a,
         raw_buckets,
         rows_in=res.n_changed,
@@ -557,8 +556,7 @@ def refresh_pipeline(
             n_buckets, touched=mat_touched,
         )
         mat_buckets = _delta_bucket_counts(
-            spark, triples_path, out_root, "materialize", mat_touched,
-            fresh_counts=fresh,
+            spark, out_root, "materialize", mat_touched, fresh_counts=fresh
         )
         return mat_buckets, int((time.monotonic() - t0) * 1000)
 
@@ -588,7 +586,7 @@ def refresh_pipeline(
         n_entities, wall_e = f_e.result()
     _done(
         "materialize",
-        sum(c for _, c in mat_buckets or []),
+        sum(c for _, c in mat_buckets),
         wall_d,
         mat_buckets,
     )

@@ -234,23 +234,49 @@ def test_pipeline_backfill_no_resume_rebuilds(spark, tmp_path):
 
 def test_resume_skip_does_not_stamp_frontier(spark, tmp_path):
     """A marker-skipped resume must NOT materialize a frontier from
-    the CURRENT turns snapshot: on a legacy root (no _frontier) with a
-    newer snapshot, stamping would record never-extracted
+    the CURRENT turns snapshot: on a root that lost its _frontier,
+    with a newer snapshot, stamping would record never-extracted
     conversations as processed — their triples would then be missing
-    from every future refresh with no error."""
+    from every future refresh with no error.  The resume writes the
+    frontier from triples_raw's own rows instead, so a detection
+    refresh then extracts the conversations only the newer snapshot
+    holds."""
     import shutil
 
+    from pyspark.sql import functions as F
+
     from lexicator_spark.plans.pipeline import run_pipeline
+    from lexicator_spark.plans.refresh import refresh_pipeline
+
+    def maxima(df):
+        return {
+            (r.conv_id, r.m)
+            for r in df.filter(F.col("conv_id").isNotNull())
+            .groupBy("conv_id")
+            .agg(F.max("turn_idx").alias("m"))
+            .collect()
+        }
 
     turns = _mk_turns(spark, n=15, seed=3)
     out = str(tmp_path / "kg")
     run_pipeline(spark, turns, out, resume=True, n_buckets=4)
-    floc = os.path.join(out, "triples_raw", "_frontier")
-    shutil.rmtree(floc)  # simulate a root built before frontiers existed
+    raw = os.path.join(out, "triples_raw")
+    floc = os.path.join(raw, "_frontier")
+    shutil.rmtree(floc)  # a root whose frontier side job never landed
     newer = _mk_turns(spark, n=25, seed=3)
     res = run_pipeline(spark, newer, out, resume=True, n_buckets=4)
     assert res.stages_run == []
-    assert not os.path.exists(floc)  # refresh bootstrap handles it safely
+    frontier = {
+        (r.conv_id, r.done_max_idx) for r in sio.read_table(spark, floc).collect()
+    }
+    assert frontier == maxima(sio.read_table(spark, raw))
+    assert frontier != maxima(newer)
+
+    good, _ = split_rejects(extract_triples(newer))
+    only_newer = {t for t in _tset(good) if t[3] not in {c for c, _ in frontier}}
+    assert only_newer, "fixture: the newer snapshot must add extracted triples"
+    refresh_pipeline(spark, newer, out)
+    assert _tset(sio.read_table(spark, raw)) == _tset(good)
 
 
 def test_backfill_non_conv_id_bucketed_falls_back_unpruned(spark, tmp_path):

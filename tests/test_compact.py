@@ -283,7 +283,7 @@ def test_compact_into_built_root_keeps_extract_bucket_counts(spark, tmp_path):
     assert [b for b, _ in res.bucket_counts] == list(res.touched_buckets)
 
     update_stage_bucket_counts(
-        spark, out_root, "extract", raw,
+        spark, out_root, "extract",
         list(res.touched_buckets), list(res.bucket_counts),
     )
     marker = P._read_marker(spark, out_root, "extract")

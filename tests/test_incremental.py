@@ -8,6 +8,7 @@ from lexicator_spark import synth
 from lexicator_spark.operators.extract import extract_triples
 from lexicator_spark.operators.incremental import (
     changed_conversations,
+    materialize_frontier,
     refresh_triples_partitioned,
 )
 from lexicator_spark.sources import io as sio
@@ -21,8 +22,8 @@ def _tset(df):
 
 
 def frontier_from(triples):
-    """The processed frontier a triples table implies (the refresh's
-    bootstrap shape): per-conversation max turn_idx."""
+    """The processed frontier a triples table implies:
+    per-conversation max turn_idx."""
     from pyspark.sql import functions as F
 
     return triples.groupBy("conv_id").agg(F.max("turn_idx").alias("done_max_idx"))
@@ -59,12 +60,14 @@ def test_incremental_refresh_equals_full_recompute(spark, tmp_path):
     with_triples = {r.conv_id for r in done.select("conv_id").distinct().collect()}
     assert all(c not in with_triples for c in changed - expected)
 
-    # the refresh bootstraps the same frontier from the stage table
-    # (no _frontier yet) and ends equal to a full recompute
+    # against the frontier of the turns the table came from, the
+    # refresh re-extracts exactly the changed conversations and ends
+    # equal to a full recompute
     loc = str(tmp_path / "triples_raw")
     sio.write_table(done, loc, partition_key="conv_id", n_buckets=4)
+    materialize_frontier(spark, v1, loc)
     res = refresh_triples_partitioned(spark, v2, loc)
-    assert res.n_changed == len(changed)
+    assert res.n_changed == len(expected)
     assert _tset(res.table) == _tset(extract_triples(v2))
 
 
@@ -100,11 +103,11 @@ def test_partitioned_refresh_upserts_only_touched_buckets(spark, tmp_path):
     v2 = synth.corpus_df(spark, full_corpus)
     loc = str(tmp_path / "triples_raw")
     sio.write_table(extract_triples(v1), loc, partition_key="conv_id", n_buckets=n_buckets)
+    materialize_frontier(spark, v1, loc)
     before = _file_state(loc)
 
     res = refresh_triples_partitioned(spark, v2, loc)
     assert _tset(res.table) == _tset(extract_triples(v2))
-    assert res.n_changed > 0 and res.n_buckets_touched > 0
 
     changed_ids = sorted(
         {c for c in {r[0] for r in full_corpus.rows} if int(c[1:]) % 5 == 0 or int(c[1:]) % 3 == 0}
@@ -116,6 +119,7 @@ def test_partitioned_refresh_upserts_only_touched_buckets(spark, tmp_path):
         .collect()
     }
     assert touched and len(touched) < n_buckets, "fixture must leave untouched buckets"
+    assert (res.n_changed, res.n_buckets_touched) == (len(changed_ids), len(touched))
     after = _file_state(loc)
     for rel, meta in before.items():
         bucket = int(rel.split("p_hash=")[1].split(os.sep)[0])
@@ -141,7 +145,9 @@ def test_change_feed_refresh(spark, tmp_path):
     result equals detection mode for listed convs, unlisted changes
     stay stale until a feed (or a detection refresh) mentions them,
     feed rows for unchanged convs are idempotent, and a fed conv_id
-    absent from the snapshot is deleted (page-deletion semantics)."""
+    absent from the snapshot is deleted (page-deletion semantics).
+    A stage table with no _frontier is refused, feed or not."""
+    import pytest
     from pyspark.sql import functions as F
 
     n_buckets = 8
@@ -166,10 +172,15 @@ def test_change_feed_refresh(spark, tmp_path):
     def feed(ids):
         return spark.createDataFrame([(c,) for c in ids], "conv_id string")
 
-    # frontier bootstrap always runs detection (documented): a feed on
-    # a pre-frontier table still yields the full recompute
-    res = refresh_triples_partitioned(spark, v1, loc, change_feed=feed([]))
-    assert res.n_changed == 0 or _tset(res.table) == _tset(extract_triples(v1))
+    # no _frontier yet: refused before anything is written, with or
+    # without a feed
+    before = _file_state(loc)
+    for kw in ({}, {"change_feed": feed(sorted(grew))}):
+        with pytest.raises(ValueError, match="materialize_frontier"):
+            refresh_triples_partitioned(spark, v2, loc, **kw)
+    assert _file_state(loc) == before
+    assert not os.path.exists(os.path.join(loc, "_frontier"))
+    materialize_frontier(spark, v1, loc)
 
     # partial feed: only the listed changed convs refresh; the rest of
     # `grew` stays stale — and untouched buckets keep their files
@@ -225,8 +236,8 @@ def test_feed_refresh_end_to_end(spark, tmp_path):
     list (the feed), and refresh_triples_partitioned given the table's
     location re-extracts exactly those conversations reading only
     their raw/stage buckets — equals a full recompute, leaves every
-    untouched file byte-identical on BOTH tables, and refuses to run
-    before the frontier bootstrap."""
+    untouched file byte-identical on BOTH tables, and refuses a stage
+    table with no _frontier."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -254,11 +265,11 @@ def test_feed_refresh_end_to_end(spark, tmp_path):
 
     feed = spark.createDataFrame([(c,) for c in grew], "conv_id string")
 
-    # pre-frontier: feed-scoped refresh must refuse, not silently skip
-    with pytest.raises(ValueError, match="_frontier"):
+    # no _frontier: feed-scoped refresh must refuse, not silently skip
+    with pytest.raises(ValueError, match="materialize_frontier"):
         refresh_triples_partitioned(spark, raw_loc, stage_loc, change_feed=feed)
-    # bootstrap via one full-corpus detection refresh (v1: no-op work)
-    refresh_triples_partitioned(spark, v1, stage_loc)
+    assert not os.path.exists(os.path.join(stage_loc, "_frontier"))
+    materialize_frontier(spark, v1, stage_loc)
 
     # unbucketed raw table is refused (pruning impossible)
     plain = str(tmp_path / "plain")
@@ -318,14 +329,12 @@ def test_feed_refresh_end_to_end(spark, tmp_path):
 
 def test_build_time_frontier_materialization(spark, tmp_path):
     """run_pipeline writes _frontier at build time (turns-derived), so
-    the first refresh is delta-scoped: no detection bootstrap, a
-    same-snapshot detection refresh is a true no-op even for
-    zero-triple conversations, and a feed refresh from the raw-turns
-    table's location runs immediately instead of raising
-    pre-bootstrap."""
+    the first refresh is delta-scoped: a same-snapshot detection
+    refresh is a true no-op even for zero-triple conversations, and a
+    feed refresh from the raw-turns table's location runs right after
+    the build."""
     from pyspark.sql import functions as F
 
-    from lexicator_spark.operators.incremental import materialize_frontier
     from lexicator_spark.plans.pipeline import run_pipeline
     from lexicator_spark.sources import fsutil
 
@@ -350,7 +359,7 @@ def test_build_time_frontier_materialization(spark, tmp_path):
     assert (res.n_changed, res.n_buckets_touched) == (0, 0)
 
     # feed mode straight after build: raw table bucketed + fed delta →
-    # works without any bootstrap refresh, equals full recompute
+    # equals full recompute
     raw_turns_loc = str(tmp_path / "turns_bucketed")
     grown = sorted({r[0] for r in corpus.rows})[:4]
     delta = (
@@ -385,7 +394,7 @@ def test_change_feed_null_conv_ids_ignored(spark, tmp_path):
     loc = str(tmp_path / "triples_raw")
     sio.write_table(extract_triples(turns), loc, partition_key="conv_id",
                     n_buckets=8)
-    refresh_triples_partitioned(spark, turns, loc)  # bootstrap
+    materialize_frontier(spark, turns, loc)
 
     raw = str(tmp_path / "turns_bucketed")
     grown = conv_ids[:2]
@@ -416,8 +425,6 @@ def test_feed_refresh_rejects_non_conv_id_bucketing(spark, tmp_path):
     fed conversations entirely, and the removed-conversation semantics
     would then DELETE their triples.  Refuse up front instead."""
     import pytest
-
-    from lexicator_spark.operators.incremental import materialize_frontier
 
     turns = synth.corpus_df(spark, synth.make_corpus(n_convs=10, seed=23))
     raw = str(tmp_path / "turns_by_tool")
@@ -453,8 +460,6 @@ def test_location_feed_refresh_reads_the_feed_in_one_grouped_collect(
     jobs.  Counts the jobs the calling thread launches (the upserts'
     pool threads carry no job group)."""
     from pyspark.sql import functions as F
-
-    from lexicator_spark.operators.incremental import materialize_frontier
 
     turns = synth.corpus_df(spark, synth.make_corpus(n_convs=40, seed=5))
     stage = str(tmp_path / "stage")

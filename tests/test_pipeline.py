@@ -401,6 +401,60 @@ def test_lineage_complete_after_crash_mid_build(spark, tmp_path, monkeypatch):
     assert read_lineage(spark, out).count() == n
 
 
+def test_resume_after_failed_frontier_job_writes_frontier(
+    spark, tmp_path, monkeypatch
+):
+    """The build's _frontier side job fails: the build raises, and the
+    resume, which skips extraction, writes the frontier from
+    triples_raw's own rows (per-conversation max turn_idx).  A
+    detection refresh over a snapshot with one new conversation then
+    ends equal to a rebuild."""
+    from datetime import timedelta
+
+    import pytest
+
+    from lexicator_spark.operators import incremental
+    from lexicator_spark.plans.refresh import refresh_pipeline
+    from lexicator_spark.sources import io as sio
+    from tests.test_refresh_e2e import _assert_stages_equal
+
+    rows = synth.make_corpus(n_convs=12, seed=6, shuffled=False).rows
+    df = synth.corpus_df(spark, synth.Corpus(rows))
+    out = str(tmp_path / "kg")
+
+    def fail(*_args, **_kwargs):
+        raise RuntimeError("simulated frontier failure")
+
+    monkeypatch.setattr(incremental, "materialize_frontier", fail)
+    with pytest.raises(RuntimeError, match="simulated frontier failure"):
+        run_pipeline(spark, df, out, n_buckets=8)
+    floc = os.path.join(out, "triples_raw", "_frontier")
+    assert not os.path.exists(floc)
+    monkeypatch.undo()
+
+    res = run_pipeline(spark, df, out, n_buckets=8)
+    assert "extract" in res.stages_skipped
+    raw = sio.read_table(spark, os.path.join(out, "triples_raw"))
+    want = {
+        (r.conv_id, r.m)
+        for r in raw.filter(F.col("conv_id").isNotNull())
+        .groupBy("conv_id")
+        .agg(F.max("turn_idx").alias("m"))
+        .collect()
+    }
+    got = {(r.conv_id, r.done_max_idx) for r in sio.read_table(spark, floc).collect()}
+    assert got == want
+
+    t0 = synth.EPOCH + timedelta(days=3)
+    v2 = synth.corpus_df(spark, synth.Corpus(
+        rows + [("znew", 0, "user", "mentions [[apache iceberx]] here", None, t0)]
+    ))
+    refresh_pipeline(spark, v2, out)
+    full = str(tmp_path / "full")
+    run_pipeline(spark, v2, full, n_buckets=8)
+    _assert_stages_equal(spark, out, full)
+
+
 def _stage_tables(spark, root):
     """Every table a build writes under ``root``, as sorted row reprs."""
     from lexicator_spark.sources import io as sio

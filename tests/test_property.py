@@ -116,7 +116,10 @@ def test_partitioned_refresh_equals_recompute_on_random_evolutions(
     added, conversations extended, some absent in v1), the
     partition-level refresh equals a full recompute and a second
     refresh is a no-op."""
-    from lexicator_spark.operators.incremental import refresh_triples_partitioned
+    from lexicator_spark.operators.incremental import (
+        materialize_frontier,
+        refresh_triples_partitioned,
+    )
     from lexicator_spark.sources import io as sio
 
     seed = data.draw(st.integers(0, 1000))
@@ -137,6 +140,7 @@ def test_partitioned_refresh_equals_recompute_on_random_evolutions(
     sio.write_table(
         extract_triples(v1), loc, partition_key="conv_id", n_buckets=n_buckets
     )
+    materialize_frontier(spark, v1, loc)
     res = refresh_triples_partitioned(spark, v2, loc)
     got = {
         (r.subj, r.pred, r.obj, r.conv_id, r.turn_idx)

@@ -157,15 +157,20 @@ def test_copy_materialize_rejects_non_null_conv_id_extras(spark, tmp_path):
     bucket on the promise that they all carry a NULL conv_id.  An
     extras row with a conv_id must fail the append job before it
     commits: none of the extras can be read from the table after."""
-    from lexicator_spark.plans.pipeline import _mark_done, _materialize_by_copy
+    from lexicator_spark.plans.pipeline import (
+        _bucket_counts,
+        _mark_done,
+        _materialize_by_copy,
+    )
 
     root = str(tmp_path / "kg")
     df = spark.range(100).select(
         F.concat(F.lit("c"), (F.col("id") % 20).cast("string")).alias("conv_id"),
         F.col("id").alias("v"),
     )
-    sio.write_table(df, os.path.join(root, "triples_raw"), n_buckets=8)
-    _mark_done(spark, root, "extract", {"bucket_counts": None})
+    raw = os.path.join(root, "triples_raw")
+    sio.write_table(df, raw, n_buckets=8)
+    _mark_done(spark, root, "extract", {"bucket_counts": _bucket_counts(spark, raw)})
     extras = spark.range(5).select(
         F.when(F.col("id") == 3, F.lit("c3"))
         .otherwise(F.lit(None).cast("string"))

@@ -1,12 +1,15 @@
 """Every module-level ``def`` and ``class`` of ``lexicator_spark/`` is
-reached from outside ``tests/``: from the package itself, the query
-registry (``__spark_entry__.py``), ``bench.py``, ``perfbench/`` or
-``scripts/``.  A definition only tests reach is either deleted or
+reached from outside ``tests/`` through a chain of references: from the
+query registry (``__spark_entry__.py``), ``bench.py``, ``perfbench/``,
+``scripts/`` or a package module's top-level statements, then on through
+the bodies of the definitions reached.  A definition only tests reach —
+directly, or only through other such definitions — is either deleted or
 listed in ``KEPT`` with the reason it stays.
 
 A reference is an ``ast.Name``, an ``ast.Attribute`` or an import
 alias naming the definition; docstring and comment text never
-counts."""
+counts.  Names are matched without their module, so a name defined in
+two modules is reached when either is."""
 
 from __future__ import annotations
 
@@ -15,23 +18,25 @@ import pathlib
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 
-# reached only from tests, kept on purpose: name -> why
+# reached by no chain from outside tests/, kept on purpose: name -> why
 KEPT = {
     "salted_count": "salting stays until skew is measured on a corpus that has it",
     "replicate_for_salt": "salting stays until skew is measured on a corpus that has it",
+    "with_salt": "salting stays until skew is measured on a corpus that has it",
     "stream_turns": "source of the epoch sink that the CLI's --compact folds",
     "start_extract_stream": "writes the epoch sink that the CLI's --compact folds",
     "start_extract_stream_stateful": "streaming operator awaiting its batch-twin crossover measurement",
     "dedup_turns_stream": "streaming operator awaiting its batch-twin crossover measurement",
+    "stateful_replies_stream": "streaming operator awaiting its batch-twin crossover measurement",
     "mention_spans": "reference implementation tests/oracle.py compares spans against",
     "jaccard": "reference implementation tests/oracle.py compares link scores against",
 }
 
 
-def _referenced_names(paths) -> set[str]:
+def _referenced_names(trees) -> set[str]:
     names: set[str] = set()
-    for path in paths:
-        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+    for tree in trees:
+        for node in ast.walk(tree):
             if isinstance(node, ast.Name):
                 names.add(node.id)
             elif isinstance(node, ast.Attribute):
@@ -45,28 +50,37 @@ def _py(sub: str) -> list[pathlib.Path]:
     return sorted((ROOT / sub).rglob("*.py"))
 
 
+def _parse(path: pathlib.Path) -> ast.Module:
+    return ast.parse(path.read_text(), str(path))
+
+
 def test_no_definition_is_reached_only_from_tests():
-    package = _py("lexicator_spark")
-    reached = _referenced_names(
-        package
-        + [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
+    defs: dict[str, list[ast.AST]] = {}
+    where: dict[str, str] = {}
+    roots = _referenced_names(
+        _parse(p)
+        for p in [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
         + _py("perfbench")
         + _py("scripts")
     )
-    from_tests = _referenced_names(_py("tests"))
-    tests_only = {}
-    for path in package:
-        for node in ast.parse(path.read_text(), str(path)).body:
-            if (
-                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-                and node.name in from_tests
-                and node.name not in reached
-            ):
-                tests_only[node.name] = str(path.relative_to(ROOT))
+    for path in _py("lexicator_spark"):
+        for node in _parse(path).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(node.name, []).append(node)
+                where[node.name] = str(path.relative_to(ROOT))
+            else:
+                roots |= _referenced_names([node])
+    reached: set[str] = set()
+    pending = set(roots)
+    while pending:
+        name = pending.pop()
+        reached.add(name)
+        pending |= _referenced_names(defs.get(name, [])) - reached
+    tests_only = {n: p for n, p in where.items() if n not in reached}
     unlisted = {n: p for n, p in tests_only.items() if n not in KEPT}
     assert not unlisted, (
-        f"reached only from tests/: {unlisted}; delete them with their "
-        "tests, or add each to KEPT with its reason"
+        f"reached by no chain from outside tests/: {unlisted}; delete "
+        "them with their tests, or add each to KEPT with its reason"
     )
     stale = sorted(set(KEPT) - set(tests_only))
     assert not stale, (

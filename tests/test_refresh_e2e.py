@@ -377,7 +377,7 @@ def test_refresh_pipeline_requires_complete_build(spark, tmp_path):
 def test_refresh_pipeline_recovers_from_crashed_refresh(spark, tmp_path):
     """A refresh that dies between its Stage-A upsert and the
     downstream sync leaves a delta that can never be re-detected (the
-    frontier advanced atomically with the upsert).  The in-flight
+    frontier advanced once the upsert returned).  The in-flight
     marker makes the next refresh_pipeline rebuild the downstream
     stages from the raw table before processing its own delta —
     without it, the crashed delta's triples would be permanently
@@ -636,3 +636,93 @@ def test_refresh_crash_in_stats_upsert_recovers(spark, tmp_path, monkeypatch):
     run_pipeline(spark, _df(spark, v2), full, n_buckets=8)
     _assert_stages_equal(spark, root, full)
     _assert_stats_equal_rebuild(spark, root, full)
+
+
+def test_refresh_crash_in_stage_upsert_keeps_delta_detectable(
+    spark, tmp_path, monkeypatch
+):
+    """The frontier is written only after the ``triples_raw`` upsert
+    has returned: when that upsert fails, the frontier stays where it
+    was, so the next detection refresh finds the delta again
+    (n_changed == 1) and every table ends equal to a rebuild.  A
+    frontier written beside the failed upsert would make the next
+    refresh a silent no-op over a stale table."""
+    from datetime import timedelta
+
+    from lexicator_spark.plans.refresh import _inflight_path
+    from lexicator_spark.sources import fsutil
+
+    base = synth.make_corpus(n_convs=15, seed=47, shuffled=False).rows
+    t0 = synth.EPOCH + timedelta(days=9)
+    root = str(tmp_path / "inc")
+    run_pipeline(spark, _df(spark, base), root, n_buckets=8)
+
+    real_upsert = sio.upsert_partitions
+
+    def failing_stage_upsert(df, location, *a, **kw):
+        if location.endswith("triples_raw"):
+            raise RuntimeError("injected stage upsert failure")
+        return real_upsert(df, location, *a, **kw)
+
+    v2 = base + [
+        ("zcrash3", 0, "user", f"mentions [[{LINKED_ADD}]] here", None, t0)
+    ]
+    with monkeypatch.context() as m:
+        m.setattr(sio, "upsert_partitions", failing_stage_upsert)
+        with pytest.raises(RuntimeError, match="injected stage upsert"):
+            refresh_pipeline(spark, _df(spark, v2), root)
+    assert fsutil.exists(spark, _inflight_path(root))
+
+    res = refresh_pipeline(spark, _df(spark, v2), root)
+    assert res.n_changed == 1  # the failed delta is still detectable
+    assert not fsutil.exists(spark, _inflight_path(root))
+    full = str(tmp_path / "full")
+    run_pipeline(spark, _df(spark, v2), full, n_buckets=8)
+    _assert_stages_equal(spark, root, full)
+    _assert_stats_equal_rebuild(spark, root, full)
+
+
+def test_refresh_refuses_root_without_sidecars_or_counts(spark, tmp_path):
+    """``refresh_pipeline`` checks, where it opens the root, what the
+    refresh relies on and every build writes: ``_surface_stats``, and
+    ``bucket_counts`` on the extract and materialize markers.  A root
+    missing one is refused before anything is written and with no
+    in-flight marker left."""
+    import json
+    import os
+    from datetime import timedelta
+    from pathlib import Path
+
+    from lexicator_spark.plans.refresh import _inflight_path
+    from lexicator_spark.sources import fsutil
+
+    base = synth.make_corpus(n_convs=10, seed=46, shuffled=False).rows
+    t0 = synth.EPOCH + timedelta(days=5)
+    extra = [("zsidecar", 0, "user", f"mentions [[{LINKED_ADD}]]", None, t0)]
+
+    def files(root):
+        return {
+            p.relative_to(root): p.read_bytes()
+            for p in Path(root).rglob("*")
+            if p.is_file()
+        }
+
+    def refused(root, match):
+        before = files(root)
+        with pytest.raises(ValueError, match=match):
+            refresh_pipeline(spark, _df(spark, base + extra), root)
+        assert not fsutil.exists(spark, _inflight_path(root))
+        assert files(root) == before
+
+    no_stats = str(tmp_path / "no_stats")
+    run_pipeline(spark, _df(spark, base), no_stats, n_buckets=8)
+    fsutil.delete(spark, os.path.join(no_stats, "_surface_stats"), recursive=True)
+    refused(no_stats, "no _surface_stats")
+
+    no_counts = str(tmp_path / "no_counts")
+    run_pipeline(spark, _df(spark, base), no_counts, n_buckets=8)
+    ck = os.path.join(no_counts, "_checkpoints", "extract.json")
+    marker = json.loads(fsutil.read_text(spark, ck))
+    marker.pop("bucket_counts")
+    fsutil.write_text(spark, ck, json.dumps(marker))
+    refused(no_counts, "extract marker .* carries no bucket_counts")
