@@ -5,8 +5,8 @@ transcript tables per BASELINE.json's north_rule.
 
 Pipeline: raw turns → extract (Stage A, vectorized pandas/Arrow UDF)
 → link (Stage B, blocking-key join + Jaccard scoring) → canonicalize
-(Stage C, large-star/small-star connected components) → materialize
-(Stage D, partitioned Iceberg-or-parquet triple + entity tables with
+(Stage C, each linked surface → its catalog id) → materialize
+(Stage D, bucketed parquet triple + entity tables with
 per-partition lineage and checkpoint/resume).
 """
 

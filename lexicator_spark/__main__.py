@@ -42,8 +42,8 @@ def main(argv: list[str] | None = None) -> int:
                     help="end-to-end incremental refresh: every stage "
                          "table updated O(delta) (plans.refresh) — "
                          "Stage B links only newly-seen surfaces, "
-                         "Stage C merges/splits only delta-adjacent "
-                         "components, materialize upserts only touched "
+                         "Stage C re-projects the new links, "
+                         "materialize upserts only touched "
                          "buckets; result row-identical to a full "
                          "rebuild")
     ap.add_argument("--change-feed", default=None, metavar="PATH",

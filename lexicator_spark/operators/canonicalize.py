@@ -1,18 +1,26 @@
-"""Stage C — connected-components canonicalization.
+"""Stage C — canonicalization — and the connected-components operator.
 
-Clusters the ``same_as`` link graph (surface ↔ canonical-id edges,
-transitively) and assigns every node a deterministic canonical
-component id.  This is the one genuinely custom distributed algorithm
-in the engine (SURVEY.md §2.2 'self-join iterate'): the
-**large-star / small-star** method of Kiveris et al., "Connected
-Components in MapReduce and Beyond" (SOCC'14) — O(log n) rounds on
-any graph, each round two groupBy+join shuffles, with per-round
-``localCheckpoint()`` to truncate lineage (SURVEY.md §4).
+Stage C (``canonical_of_links``) maps every linked surface to its
+catalog id.  Clustering the ``same_as`` graph transitively would only
+be needed if linking emitted record-to-record pairs; it does not.
+``link_surfaces`` keeps one best pick per surface, every pick is a
+catalog id (``Q_…``), and no surface can be one (``normalize_surface``
+outputs only ``[a-z0-9 ]``).  So each component of the link graph is a
+star — one catalog id plus the surfaces linked to it — and its
+canonical id is that catalog id: the table is a projection of
+``same_as``, with those two invariants checked row-inline.  (The
+reference reconciles the same way, by a point lookup per lexeme,
+``lexicator/WikidataUploader.py`` [M].)
 
-The reference has no graph algorithm at all (its reconciliation is a
-point lookup per lexeme, ``lexicator/WikidataUploader.py`` [M]); at
-10^12-turn scale transitive alias clustering has to be a fixpoint of
-DataFrame self-joins instead.
+``connected_components`` is the general clustering operator for graphs
+that are not stars (the registry's ``kg_*`` queries, near-duplicate
+clusters in ``operators.dedup``): the **large-star / small-star**
+method of Kiveris et al., "Connected Components in MapReduce and
+Beyond" (SOCC'14) — O(log n) rounds on any graph, each round two
+groupBy+join shuffles, with per-round ``localCheckpoint()`` to
+truncate lineage (SURVEY.md §4).  ``canonical_of_triples`` turns its
+assignments into ``canonical_of`` triples; on a star graph that equals
+``canonical_of_links`` (tested).
 
 Convergence detection: the edge multiset is compared between rounds
 with a (count, xor/sum of xxhash64) aggregate — one cheap job, no
@@ -184,138 +192,6 @@ def connected_components(
     return with_isolated(assignments.union(roots).distinct())
 
 
-def assignments_of_canonical(canonical: DataFrame) -> DataFrame:
-    """Reconstruct ``assignments(node, comp)`` from a persisted
-    ``canonical_of`` stage table, using the canonical id as the
-    component key.  Valid because ``canonical_of_triples`` emits one
-    row per non-canonical member plus (implicitly) the canonical node
-    itself, and the canonical id is unique per component.  Every
-    pipeline component has ≥ 2 nodes (a ``same_as`` edge always joins
-    two distinct nodes), so no component is invisible here."""
-    members = canonical.select(
-        F.col("subj").alias("node"), F.col("obj").alias("comp")
-    )
-    roots = canonical.select(
-        F.col("obj").alias("node"), F.col("obj").alias("comp")
-    ).distinct()
-    return members.unionByName(roots)
-
-
-def update_components(
-    assignments: DataFrame,
-    added_edges: DataFrame,
-    removed_edges: DataFrame | None = None,
-    surviving_edges: DataFrame | None = None,
-) -> DataFrame:
-    """Incrementally update a component partition under an edge delta
-    — the O(delta) alternative to re-running ``connected_components``
-    over the full edge set when a refresh adds / removes a few edges
-    (the RecentChanges analog propagated through Stage C).
-
-    ``assignments(node, comp)`` is the current partition (``comp``
-    is any per-component-unique key, e.g. the canonical id).  The new
-    edge set is ``(old_edges − removed_edges) ∪ added_edges``; callers
-    pass ``surviving_edges`` = old − removed whenever
-    ``removed_edges`` is given (removals can SPLIT a component, and
-    the split can only be recomputed from the survivors).
-
-    Two phases, each touching only delta-adjacent components:
-
-    1. **Splits** — components containing an endpoint of a removed
-       edge are recomputed from scratch over just THEIR surviving
-       edges (every old edge has both endpoints in one component, so
-       a semi-join on the u-side component suffices).  Members left
-       edge-less drop out, exactly as a full recompute would drop
-       them (CC input is edges only).
-    2. **Merges** — added edges are mapped endpoint→component
-       (unknown endpoints stay themselves: brand-new nodes), and
-       connected components run over that COMPONENT graph — sized by
-       the delta, not the corpus.  The resulting remap is applied to
-       member rows with one join.
-
-    Component-key uniqueness is preserved (old keys are member nodes
-    or prior canonical ids of disjoint node sets; merged keys are the
-    min over merging keys) but keys are NOT guaranteed to be the
-    min member — regenerate presentation labels downstream
-    (``canonical_of_triples`` recomputes them from membership).
-    Equality with a full ``connected_components`` run over the new
-    edge set — as a partition, i.e. same co-membership — is asserted
-    in tests/test_refresh_e2e.py including split, merge, new-node and
-    vanishing-node deltas.
-
-    Scale shape: phase 1 is bounded by the affected components'
-    edges; phase 2 by the added-edge count.  The only full-table
-    touches are two hash joins against ``assignments`` (node-keyed)
-    and one semi-join over ``surviving_edges`` — no global fixpoint,
-    no corpus-wide shuffle."""
-    base = assignments
-    if removed_edges is not None:
-        if surviving_edges is None:
-            raise ValueError(
-                "update_components: removed_edges requires "
-                "surviving_edges (= old edges minus removed) — splits "
-                "can only be recomputed from the survivors"
-            )
-        rm_nodes = (
-            removed_edges.select(F.col("u").alias("node"))
-            .union(removed_edges.select(F.col("v").alias("node")))
-            .distinct()
-        )
-        affected = (
-            assignments.join(rm_nodes, "node", "left_semi")
-            .select("comp")
-            .distinct()
-        )
-        sub = (
-            surviving_edges.join(
-                assignments.select(F.col("node").alias("u"), "comp"), "u"
-            )
-            .join(affected, "comp", "left_semi")
-            .select("u", "v")
-        )
-        recomputed = connected_components(sub)
-        base = assignments.join(affected, "comp", "left_anti").unionByName(
-            recomputed
-        )
-        base = base.localCheckpoint(eager=True)
-
-    adds = added_edges.select(
-        F.col("u").cast("string"), F.col("v").cast("string")
-    )
-    if adds.isEmpty():
-        return base
-    # endpoint → current component key; unknown endpoints (brand-new
-    # nodes) keep their own id as the key.  A new node cannot collide
-    # with an existing key: existing keys are members of existing
-    # components, and the node is by definition in none of them.
-    au = base.select(F.col("node").alias("u"), F.col("comp").alias("cu"))
-    av = base.select(F.col("node").alias("v"), F.col("comp").alias("cv"))
-    mapped = (
-        adds.join(au, "u", "left")
-        .join(av, "v", "left")
-        .select(
-            F.coalesce(F.col("cu"), F.col("u")).alias("u"),
-            F.coalesce(F.col("cv"), F.col("v")).alias("v"),
-        )
-    )
-    # self-loops (edge internal to one existing component) come back
-    # from connected_components as identity rows — harmless no-ops
-    remap = connected_components(mapped).select(
-        F.col("node").alias("key"), F.col("comp").alias("newc")
-    )
-    old_keys = base.select(F.col("comp").alias("key")).distinct()
-    updated = (
-        base.join(remap, base.comp == remap.key, "left")
-        .select(
-            "node", F.coalesce(F.col("newc"), F.col("comp")).alias("comp")
-        )
-    )
-    new_nodes = remap.join(old_keys, "key", "left_anti").select(
-        F.col("key").alias("node"), F.col("newc").alias("comp")
-    )
-    return updated.unionByName(new_nodes)
-
-
 def canonical_of_triples(assignments: DataFrame) -> DataFrame:
     """assignments → ``canonical_of`` triples.  The canonical id of a
     component is its catalog QID when one is a member (preferring the
@@ -339,4 +215,43 @@ def canonical_of_triples(assignments: DataFrame) -> DataFrame:
             F.lit(None).cast("int").alias("turn_idx"),
             F.lit(None).cast("timestamp").alias("extracted_at"),
         )
+    )
+
+
+def canonical_of_links(same_as: DataFrame) -> DataFrame:
+    """``same_as`` links → ``canonical_of`` triples, one per link:
+    ``(surface, canonical_of, Q, 1.0)`` with a null span and NULL
+    conv_id / turn_idx / extracted_at — the rows
+    ``canonical_of_triples(connected_components(links))`` yields when
+    every component is a star around one catalog id (module
+    docstring).  A row that breaks the star shape (an ``obj`` without
+    the ``Q_`` prefix ``canonical_of_triples`` keys on, or a ``subj``
+    with it) fails the job that evaluates it, before its write
+    commits: the projection never guesses where the general fixpoint
+    would have answered differently."""
+    subj, obj = F.col("subj"), F.col("obj")
+    star = obj.startswith("Q_") & ~subj.startswith("Q_")
+    return same_as.select(
+        subj,
+        F.lit(rules.PRED_CANONICAL_OF).alias("pred"),
+        F.when(star, obj)
+        .otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit(
+                        "canonicalize: same_as must link a surface to a "
+                        "Q_ catalog id, got "
+                    ),
+                    F.coalesce(subj, F.lit("NULL")),
+                    F.lit(" -> "),
+                    F.coalesce(obj, F.lit("NULL")),
+                )
+            )
+        )
+        .alias("obj"),
+        F.lit(1.0).alias("conf"),
+        null_span(),
+        F.lit(None).cast("string").alias("conv_id"),
+        F.lit(None).cast("int").alias("turn_idx"),
+        F.lit(None).cast("timestamp").alias("extracted_at"),
     )

@@ -239,7 +239,6 @@ def _backfill_marker(stage_location: str) -> str:
 
 
 class BackfillResult(NamedTuple):
-    table: DataFrame  # the stage table after this call
     n_groups: int
     groups_run: list[int]  # groups processed by THIS call
     groups_skipped: list[int]  # groups already done before this call
@@ -460,7 +459,6 @@ def backfill_triples(
             ),
         )
     return BackfillResult(
-        table=sio.read_table(spark, stage_location),
         n_groups=n_groups,
         groups_run=groups_run,
         groups_skipped=[g for g in done if g not in groups_run],
@@ -469,7 +467,6 @@ def backfill_triples(
 
 
 class RefreshResult(NamedTuple):
-    table: DataFrame  # the refreshed stage table, read back
     n_changed: int  # conversations re-extracted this refresh
     n_buckets_touched: int  # p_hash buckets rewritten
     touched_buckets: tuple[int, ...] = ()  # the rewritten p_hash ids
@@ -621,7 +618,7 @@ def refresh_triples_partitioned(
     if n_changed == 0:
         # true no-op: no stage write, no frontier write, zero files
         # touched — callers can skip downstream recomputes entirely
-        return RefreshResult(sio.read_table(spark, stage_location), 0, 0, ())
+        return RefreshResult(0, 0, ())
 
     # the touched-bucket list is bounded by the delta (≤ n_buckets
     # ints) and lets the upsert express "bucket became empty" — a
@@ -757,7 +754,6 @@ def refresh_triples_partitioned(
         frontier_future.result()
         hook_result = hook.result() if hook is not None else None
     return RefreshResult(
-        sio.read_table(spark, stage_location),
         n_changed,
         n_buckets_touched,
         tuple(touched),

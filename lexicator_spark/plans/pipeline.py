@@ -42,10 +42,7 @@ from pyspark.sql import functions as F
 
 from lexicator_spark.sources import fsutil
 
-from lexicator_spark.operators.canonicalize import (
-    canonical_of_triples,
-    connected_components,
-)
+from lexicator_spark.operators.canonicalize import canonical_of_links
 from lexicator_spark.operators.extract import extract_triples, split_rejects
 from lexicator_spark.operators.link import build_catalog, link_mentions
 from lexicator_spark.sources import io as sio
@@ -412,9 +409,10 @@ def run_pipeline(
         )
         persisted = sio.read_table(spark, out_path)
         # row counts observed on the write job itself (CollectMetrics)
-        # — no second scan of the files just written; the catalog
-        # backend (observed None) falls back to the footer-metadata
-        # count.  [(-1, n)] marks an unbucketed write.
+        # — no second scan of the files just written; a write that ran
+        # no task (observed None: an empty relation materializes no
+        # metrics) falls back to the footer-metadata count.  [(-1, n)]
+        # marks an unbucketed write.
         if observed is None:
             buckets = _bucket_counts(spark, out_path)
             rows_out = (
@@ -670,15 +668,10 @@ def run_pipeline(
             )
         finish_deferred()
 
-        # Stage C — canonicalization
-        def stage_c():
-            edges = same_as.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
-            assignments = connected_components(edges)
-            return canonical_of_triples(assignments)
-
+        # Stage C — canonicalization, a projection of the links
         if _runs("canonicalize"):
             canonical = staged(
-                "canonicalize", stage_c,
+                "canonicalize", lambda: canonical_of_links(same_as),
                 os.path.join(out_root, "canonical"), None,
                 input_stage="link",
             )

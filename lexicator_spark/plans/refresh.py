@@ -5,10 +5,9 @@ refresh path: the CLI's ``--refresh`` runs :func:`refresh_pipeline`.
 Refreshing only the Stage-A table O(delta)
 (``refresh_triples_partitioned``) and then recomputing link →
 canonicalize → materialize → entities from scratch would re-derive the
-distinct surface universe with a full-corpus shuffle (Stage B), re-run
-the global connected-components fixpoint (Stage C) and rewrite the
-whole materialized table (Stage D).  At 10^12 turns a
-ten-conversation delta must not cost four corpus-wide jobs.
+distinct surface universe with a full-corpus shuffle (Stage B) and
+rewrite the whole materialized table (Stage D).  At 10^12 turns a
+ten-conversation delta must not cost corpus-wide jobs.
 
 :func:`refresh_pipeline` makes the downstream stages O(delta) too, by
 exploiting what each stage actually depends on:
@@ -29,14 +28,13 @@ exploiting what each stage actually depends on:
   ``_surface_stats`` back.  Newly-seen surfaces are linked via
   ``link_surfaces`` (delta-sized catalog join); vanished surfaces'
   rows are anti-joined away.
-- **Stage C** (canonicalization) updates through
-  ``update_components``: vanished links can split components —
-  recomputed from the survivors of just the affected components;
-  new links merge components through a component-graph CC sized by
-  the delta.  Labels are regenerated by ``canonical_of_triples``
-  exactly as the full build does, so the refreshed table is
-  row-identical to a from-scratch run (asserted in
-  tests/test_refresh_e2e.py).
+- **Stage C** (canonicalization) is ``canonical_of_links`` over the
+  pinned new link set, exactly as the full build does: linking keeps
+  one catalog-id pick per surface, so every component of the link
+  graph is a star around its catalog id and no component fixpoint —
+  full or incremental — has anything to merge or split
+  (``operators.canonicalize`` module docstring).  One row per link,
+  so its row count is the link count.
 - **Stage D** (materialize) re-copies only the buckets whose raw rows
   changed, plus the single NULL-conv_id bucket (``pmod(xxhash64(
   NULL), P)`` — where every same_as/canonical row lands, appended
@@ -68,11 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lexicator_spark import rules
-from lexicator_spark.operators.canonicalize import (
-    assignments_of_canonical,
-    canonical_of_triples,
-    update_components,
-)
+from lexicator_spark.operators.canonicalize import canonical_of_links
 from lexicator_spark.operators.incremental import (
     RefreshResult,
     refresh_triples_partitioned,
@@ -476,7 +470,7 @@ def refresh_pipeline(
 
     refreshed = ["extract"]
     if links_changed:
-        # rare, and about to pay link+CC work anyway: pin the diff for
+        # rare, and about to pay link work anyway: pin the diff for
         # its added/removed consumers
         t0 = time.monotonic()
         diff = diff_plan.localCheckpoint(eager=True)
@@ -484,17 +478,11 @@ def refresh_pipeline(
         removed = diff.filter(F.col("__new").isNull()).select("surface_form")
 
         # ── Stage B: delta link ──────────────────────────────────
-        old_same_as = sio.read_table(spark, same_as_path)
-        removed_links = old_same_as.join(
-            removed.select(F.col("surface_form").alias("subj")),
-            "subj",
-            "left_semi",
-        ).localCheckpoint(eager=True)
-        surviving = old_same_as.join(
+        surviving = sio.read_table(spark, same_as_path).join(
             removed.select(F.col("surface_form").alias("subj")),
             "subj",
             "left_anti",
-        ).localCheckpoint(eager=True)  # consumed again AFTER same_as/ is overwritten
+        )
         new_links = link_surfaces(
             added.select(
                 F.col("surface_form").alias("surface")
@@ -509,26 +497,11 @@ def refresh_pipeline(
         wall_b = int((time.monotonic() - t0) * 1000)
         _done("link", n_same_as, wall_b, None)
 
-        # ── Stage C: incremental components ─────────────────────
+        # ── Stage C: a projection of the pinned links, one row each ──
         t0 = time.monotonic()
-        assignments = assignments_of_canonical(
-            sio.read_table(spark, canonical_path)
-        )
-        as_edges = lambda df: df.select(  # noqa: E731
-            F.col("subj").alias("u"), F.col("obj").alias("v")
-        )
-        has_removals = not removed_links.isEmpty()
-        new_assignments = update_components(
-            assignments,
-            added_edges=as_edges(new_links),
-            removed_edges=as_edges(removed_links) if has_removals else None,
-            surviving_edges=as_edges(surviving) if has_removals else None,
-        )
-        canonical_new = canonical_of_triples(new_assignments).localCheckpoint(
-            eager=True  # pinned before canonical/ is overwritten
-        )
+        canonical_new = canonical_of_links(same_as_new)
         sio.write_table(canonical_new, canonical_path, partition_key=None)
-        _done("canonicalize", canonical_new.count(),
+        _done("canonicalize", n_same_as,
               int((time.monotonic() - t0) * 1000), None)
         refreshed += ["link", "canonicalize"]
     else:

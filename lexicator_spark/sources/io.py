@@ -1,9 +1,9 @@
-"""Storage seam: Iceberg when the runtime jar + catalog are present,
-partitioned parquet otherwise (SURVEY.md §7 hard-part (c)).
+"""Storage seam: stage tables are bucketed parquet directories with
+``_schema.json`` / ``_buckets.json`` sidecars (SURVEY.md §7 hard-part
+(c)).
 
 Every stage boundary in the pipeline goes through ``write_table`` /
-``read_table`` so the rest of the engine never knows which backend it
-got.  Tables are salted-hash-partitioned on ``conv_id``
+``read_table``.  Tables are salted-hash-partitioned on ``conv_id``
 (``p_hash = pmod(xxhash64(conv_id), n_buckets)``, north_rule) so that
 
 - a downstream stage reading one stage-table partition sees complete
@@ -11,8 +11,7 @@ got.  Tables are salted-hash-partitioned on ``conv_id``
 - hot conversations spread across buckets deterministically.
 
 The reference's equivalent is the per-stage sqlite/file ContentStore
-(``lexicator/wikicache/ContentStore.py`` [M]); snapshot isolation +
-incremental refresh map to Iceberg snapshots when available.
+(``lexicator/wikicache/ContentStore.py`` [M]).
 """
 
 from __future__ import annotations
@@ -28,44 +27,8 @@ from lexicator_spark.sources import fsutil
 DEFAULT_BUCKETS = 64
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when an Iceberg catalog is configured and the runtime jar
-    loads.  In the sandbox this is False — parquet fallback.
-
-    Each call costs driver↔JVM round-trips (a ``Class.forName`` that
-    fails without the jar, then the whole conf), 12–18 ms on a 4-core
-    box, so routing sites test the pure-Python ``_is_path(location)``
-    FIRST and probe only for catalog names: filesystem paths, every
-    location the engine writes itself, never reach this probe."""
-    try:
-        jvm = spark._jvm  # noqa: SLF001
-        jvm.Class.forName("org.apache.iceberg.catalog.Catalog")
-        return any(
-            k.startswith("spark.sql.catalog.") for k, _ in spark.sparkContext.getConf().getAll()
-        )
-    except Exception:
-        return False
-
-
 def with_partition_hash(df: DataFrame, key: str = "conv_id", n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     return df.withColumn("p_hash", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int"))
-
-
-def _is_path(location: str) -> bool:
-    """Path-vs-catalog-table-name discrimination for the storage seam:
-    URIs (s3a://, hdfs://, file:), absolute paths, and ANYTHING
-    containing a path separator (plain relative paths like
-    'out/triples' are paths, not catalog identifiers) route to the
-    filesystem backend; only bare dotted identifiers route to the
-    catalog.  ``os.path.isabs`` alone misclassifies object-store URIs
-    — exactly the deployment where an Iceberg catalog is configured."""
-    return (
-        os.path.isabs(location)
-        or "://" in location
-        or "/" in location
-        or os.sep in location
-        or location.startswith("file:")
-    )
 
 
 def _cluster_for_write(
@@ -113,29 +76,21 @@ def _cluster_for_write(
 def write_table(
     df: DataFrame,
     location: str,
-    mode: str = "overwrite",
     partition_key: str | None = "conv_id",
     n_buckets: int = DEFAULT_BUCKETS,
     observe_counts: bool = False,
 ) -> list[tuple[int, int]] | None:
-    """Write a stage table.  ``location`` is a path (parquet backend)
-    or a catalog table name (iceberg backend, when available).
+    """Overwrite the stage table at ``location`` (a path).
 
     ``observe_counts=True`` rides row counts on the write job itself
     (``Observation``/CollectMetrics — per-bucket ``count_if`` for
     bucketed tables, one count otherwise) and returns them as sorted
     ``[(bucket, count), ...]`` (unbucketed: ``[(-1, total)]``), so
     stage bookkeeping never pays a second scan of the files it just
-    wrote.  Returns None when not requested or on the catalog backend
-    (Iceberg snapshots carry their own counts)."""
+    wrote.  Returns None when not requested, or when the write ran no
+    task (a plan collapsed to an empty relation materializes no
+    metrics)."""
     spark = df.sparkSession
-    if not _is_path(location) and iceberg_available(spark):
-        writer = df.writeTo(location)
-        if mode == "overwrite":
-            writer.createOrReplace()
-        else:
-            writer.append()
-        return None
     obs = None
     counts: list[tuple[int, int]] | None = None
     if observe_counts:
@@ -157,7 +112,7 @@ def write_table(
         # scale, and a full-table write touches ≥ cores buckets so
         # write parallelism is not the constraint here
         _cluster_for_write(df, partition_key, 1, n_buckets).write.mode(
-            mode
+            "overwrite"
         ).partitionBy("p_hash").parquet(location)
         if obs is not None:
             try:
@@ -175,7 +130,7 @@ def write_table(
     else:
         if obs is not None:
             df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        df.write.mode(mode).parquet(location)
+        df.write.mode("overwrite").parquet(location)
         if obs is not None:
             try:
                 counts = [(-1, int(obs.get["n"]))]
@@ -399,8 +354,6 @@ def append_into_bucket(df: DataFrame, location: str, bucket: int) -> int:
 def read_table(
     spark: SparkSession, location: str, keep_bucket_col: bool = False
 ) -> DataFrame:
-    if not _is_path(location) and iceberg_available(spark):
-        return spark.read.table(location)
     from pyspark.sql import types as T
 
     reader = spark.read

@@ -37,7 +37,7 @@ def test_backfill_equals_full_build(spark, tmp_path):
     )
     assert res.complete and res.groups_run == [0, 1, 2, 3]
     good, rejects = split_rejects(extract_triples(turns))
-    assert _tset(res.table) == _tset(good)
+    assert _tset(sio.read_table(spark, loc)) == _tset(good)
     assert _tset(sio.read_table(spark, rej)) == _tset(rejects)
     # frontier complete → detection refresh on the same snapshot is a
     # true no-op (the table is immediately delta-refreshable)
@@ -87,7 +87,7 @@ def test_backfill_chunked_resume_and_refresh_guard(spark, tmp_path):
     assert res.groups_run == [1, 2, 3] and res.groups_skipped == [0]
     assert res.complete
     good, _ = split_rejects(extract_triples(turns))
-    assert _tset(res.table) == _tset(good)
+    assert _tset(sio.read_table(spark, loc)) == _tset(good)
     # completed: a further call is a full no-op
     res = backfill_triples(spark, turns, loc, n_buckets=8, n_groups=4)
     assert res.groups_run == [] and res.complete
@@ -102,14 +102,14 @@ def test_backfill_pruned_from_bucketed_location(spark, tmp_path):
     sio.write_table(turns, raw16, partition_key="conv_id", n_buckets=16)
     loc = str(tmp_path / "stage_a")
     res = backfill_triples(spark, raw16, loc, n_buckets=8, n_groups=4)
-    assert res.complete and _tset(res.table) == _tset(good)
+    assert res.complete and _tset(sio.read_table(spark, loc)) == _tset(good)
 
     # raw modulus NOT a multiple → correct via the unpruned fallback
     raw6 = str(tmp_path / "turns6")
     sio.write_table(turns, raw6, partition_key="conv_id", n_buckets=6)
     loc_b = str(tmp_path / "stage_b")
     res = backfill_triples(spark, raw6, loc_b, n_buckets=8, n_groups=4)
-    assert res.complete and _tset(res.table) == _tset(good)
+    assert res.complete and _tset(sio.read_table(spark, loc_b)) == _tset(good)
 
 
 def test_backfill_guards(spark, tmp_path):
@@ -180,7 +180,7 @@ def test_backfill_group_alignment_boundaries(spark, tmp_path, n_buckets, n_group
     )
     assert res.complete
     good, _ = split_rejects(extract_triples(turns))
-    assert _tset(res.table) == _tset(good)
+    assert _tset(sio.read_table(spark, loc)) == _tset(good)
     # the finished table is immediately delta-refreshable
     assert refresh_triples_partitioned(spark, turns, loc).n_changed == 0
 
@@ -206,7 +206,7 @@ def test_backfill_first_group_crash_resumes(spark, tmp_path):
     res = backfill_triples(spark, turns, loc, n_buckets=8, n_groups=4)
     assert res.complete and res.groups_run == [0, 1, 2, 3]
     good, _ = split_rejects(extract_triples(turns))
-    assert _tset(res.table) == _tset(good)
+    assert _tset(sio.read_table(spark, loc)) == _tset(good)
     # degenerate chunking argument is rejected up front
     with pytest.raises(ValueError, match="max_groups_per_call"):
         backfill_triples(spark, turns, str(tmp_path / "x"),
@@ -294,7 +294,7 @@ def test_backfill_non_conv_id_bucketed_falls_back_unpruned(spark, tmp_path):
     sio.write_table(turns, raw, partition_key="tool", n_buckets=16)
     loc = str(tmp_path / "stage")
     res = backfill_triples(spark, raw, loc, n_buckets=8, n_groups=4)
-    assert res.complete and _tset(res.table) == _tset(good)
+    assert res.complete and _tset(sio.read_table(spark, loc)) == _tset(good)
 
 
 def test_rebuild_clears_markers_and_lineage(spark, tmp_path):

@@ -244,7 +244,7 @@ def test_compact_then_detection_refresh_converges(spark, tmp_path):
     ref = refresh_triples_partitioned(spark, turns, stage)
     assert ref.n_changed == len(streamed_ids)
     got = _rows(
-        ref.table.select("subj", "pred", "obj", "conv_id", "turn_idx")
+        sio.read_table(spark, stage).select("subj", "pred", "obj", "conv_id", "turn_idx")
     )
     assert got == expected
 

@@ -68,7 +68,7 @@ def test_incremental_refresh_equals_full_recompute(spark, tmp_path):
     materialize_frontier(spark, v1, loc)
     res = refresh_triples_partitioned(spark, v2, loc)
     assert res.n_changed == len(expected)
-    assert _tset(res.table) == _tset(extract_triples(v2))
+    assert _tset(sio.read_table(spark, loc)) == _tset(extract_triples(v2))
 
 
 def _file_state(root):
@@ -107,7 +107,7 @@ def test_partitioned_refresh_upserts_only_touched_buckets(spark, tmp_path):
     before = _file_state(loc)
 
     res = refresh_triples_partitioned(spark, v2, loc)
-    assert _tset(res.table) == _tset(extract_triples(v2))
+    assert _tset(sio.read_table(spark, loc)) == _tset(extract_triples(v2))
 
     changed_ids = sorted(
         {c for c in {r[0] for r in full_corpus.rows} if int(c[1:]) % 5 == 0 or int(c[1:]) % 3 == 0}
@@ -131,7 +131,7 @@ def test_partitioned_refresh_upserts_only_touched_buckets(spark, tmp_path):
     again = refresh_triples_partitioned(spark, v2, loc)
     assert _file_state(loc) == stable
     assert again.n_changed == 0 and again.n_buckets_touched == 0
-    assert _tset(again.table) == _tset(res.table)
+    assert _tset(sio.read_table(spark, loc)) == _tset(extract_triples(v2))
 
     # bucketing is recorded in the sidecar: the refresh uses the
     # recorded value
@@ -189,7 +189,7 @@ def test_change_feed_refresh(spark, tmp_path):
     before = _file_state(loc)
     res = refresh_triples_partitioned(spark, v2, loc, change_feed=feed(listed))
     assert res.n_changed == len(listed)
-    got = _tset(res.table)
+    got = _tset(sio.read_table(spark, loc))
     v2_triples = _tset(extract_triples(v2))
     v1_triples = _tset(extract_triples(v1))
     for t in v2_triples:
@@ -216,7 +216,7 @@ def test_change_feed_refresh(spark, tmp_path):
     res = refresh_triples_partitioned(
         spark, v2, loc, change_feed=feed(unlisted + conv_ids[:3]),
     )
-    assert _tset(res.table) == v2_triples
+    assert _tset(sio.read_table(spark, loc)) == v2_triples
 
     # a detection-mode refresh after feed refreshes: no-op (frontier
     # is consistent across both modes)
@@ -227,7 +227,7 @@ def test_change_feed_refresh(spark, tmp_path):
     victim = conv_ids[5]
     v3 = v2.filter(F.col("conv_id") != victim)
     res = refresh_triples_partitioned(spark, v3, loc, change_feed=feed([victim]))
-    assert _tset(res.table) == {t for t in v2_triples if t[3] != victim}
+    assert _tset(sio.read_table(spark, loc)) == {t for t in v2_triples if t[3] != victim}
 
 
 def test_feed_refresh_end_to_end(spark, tmp_path):
@@ -306,7 +306,7 @@ def test_feed_refresh_end_to_end(spark, tmp_path):
     stage_before = _file_state(stage_loc)
     res = refresh_triples_partitioned(spark, raw_loc, stage_loc, change_feed=feed)
     assert res.n_changed == len(grew)
-    assert _tset(res.table) == _tset(extract_triples(v2))
+    assert _tset(sio.read_table(spark, stage_loc)) == _tset(extract_triples(v2))
 
     # untouched buckets byte-identical on both tables (raw wasn't
     # written at all; stage only where fed convs hash)
@@ -324,7 +324,7 @@ def test_feed_refresh_end_to_end(spark, tmp_path):
 
     # steady state: same feed again is idempotent
     res2 = refresh_triples_partitioned(spark, raw_loc, stage_loc, change_feed=feed)
-    assert _tset(res2.table) == _tset(extract_triples(v2))
+    assert _tset(sio.read_table(spark, stage_loc)) == _tset(extract_triples(v2))
 
 
 def test_build_time_frontier_materialization(spark, tmp_path):
@@ -379,7 +379,7 @@ def test_build_time_frontier_materialization(spark, tmp_path):
         ),
     )
     assert res.n_changed == len(grown)
-    assert _tset(res.table) == _tset(extract_triples(v2))
+    assert _tset(sio.read_table(spark, raw)) == _tset(extract_triples(v2))
 
 
 def test_change_feed_null_conv_ids_ignored(spark, tmp_path):
@@ -414,7 +414,7 @@ def test_change_feed_null_conv_ids_ignored(spark, tmp_path):
     # both paths digest the NULLs silently and refresh only the real ids
     res = refresh_triples_partitioned(spark, raw, loc, change_feed=feed)
     assert res.n_changed == 2
-    assert _tset(res.table) == _tset(extract_triples(v2))
+    assert _tset(sio.read_table(spark, loc)) == _tset(extract_triples(v2))
     res = refresh_triples_partitioned(spark, v2, loc, change_feed=feed)
     assert res.n_changed == 2  # idempotent re-feed, NULLs still ignored
 
@@ -496,6 +496,6 @@ def test_location_feed_refresh_reads_the_feed_in_one_grouped_collect(
         ):
             sc.setLocalProperty(key, None)
     assert res.n_changed == len(grown)
-    assert _tset(res.table) == _tset(extract_triples(v2))
+    assert _tset(sio.read_table(spark, stage)) == _tset(extract_triples(v2))
     # the feed's pin, one grouped collect and the IN-list id collect
     assert jobs <= 5, jobs

@@ -1,9 +1,7 @@
-"""Storage-seam routing tests: path-vs-catalog discrimination, the
-Iceberg writeTo/read.table branch (structurally exercised with a
-stubbed catalog — the runtime jar is absent in the sandbox), the
-empty-bucket semantics of the partition upsert, and the seam's
-driver↔JVM round-trip budget: filesystem paths never reach the Iceberg
-probe, and the small-file helpers resolve their JVM classes once."""
+"""Storage-seam tests: the bucket-layout sidecar across upserts, a
+build and a refresh, the empty-bucket semantics of the partition
+upsert, the salted multi-file layout, and the small-file helpers'
+driver↔JVM round-trip budget (they resolve their JVM classes once)."""
 
 from __future__ import annotations
 
@@ -14,76 +12,18 @@ from pyspark.sql import functions as F
 from lexicator_spark.sources import io as sio
 
 
-def test_is_path_discrimination():
-    # paths: URIs, absolute, anything with a separator
-    for p in (
-        "/abs/path", "s3a://bucket/key", "hdfs://nn/t", "file:/x",
-        "./rel", "../up", "out/triples", "a/b.parquet",
-    ):
-        assert sio._is_path(p), p
-    # catalog identifiers: bare (possibly dotted) names only
-    for t in ("triples", "glacier.triples", "cat.db.table"):
-        assert not sio._is_path(t), t
-
-
-def test_iceberg_branch_routing(spark, monkeypatch, tmp_path):
-    """With a catalog 'available', table NAMES route to writeTo()/
-    read.table() and PATHS still route to parquet — the exact decision
-    io.py makes on a real deployment, minus the jar."""
-    calls = {}
-
-    class FakeWriter:
-        def __init__(self, loc):
-            self.loc = loc
-
-        def createOrReplace(self):
-            calls["write"] = ("createOrReplace", self.loc)
-
-        def append(self):
-            calls["write"] = ("append", self.loc)
-
-    monkeypatch.setattr(sio, "iceberg_available", lambda s: True)
-    df = spark.range(3).toDF("x")
-    # patch the CONCRETE class (pyspark.sql.classic.DataFrame in Spark
-    # 4) — the pyspark.sql.DataFrame base's method is shadowed by it
-    monkeypatch.setattr(type(df), "writeTo", lambda self, loc: FakeWriter(loc))
-
-    sio.write_table(df, "glacier.triples", mode="overwrite", partition_key=None)
-    assert calls["write"] == ("createOrReplace", "glacier.triples")
-    sio.write_table(df, "glacier.triples", mode="append", partition_key=None)
-    assert calls["write"] == ("append", "glacier.triples")
-
-    # a filesystem path bypasses the catalog even when one is configured
-    out = str(tmp_path / "plain")
-    sio.write_table(df, out, partition_key=None)
-    assert calls["write"][1] == "glacier.triples"  # unchanged — not writeTo
-    assert sio.read_table(spark, out).count() == 3
-
-    seen = {}
-
-    def fake_table(self, name):
-        seen["table"] = name
-        return df
-
-    monkeypatch.setattr(type(spark.read), "table", fake_table)
-    got = sio.read_table(spark, "glacier.triples")
-    assert seen["table"] == "glacier.triples" and got.count() == 3
-
-
-def test_filesystem_paths_never_probe_iceberg(spark, monkeypatch, tmp_path):
-    """Every location the engine uses is a path, and a path routes to
-    parquet before the (py4j-costly) catalog probe runs: the seam, a
-    build and a refresh all succeed with the probe raising."""
+def test_bucket_layout_sidecar_kept_by_upserts_and_refresh(
+    spark, monkeypatch, tmp_path
+):
+    """``_buckets.json`` is written once per table: an upsert onto a
+    table that records its layout, and a refresh's partial Stage-D
+    copy, leave it alone; a new table gets one."""
     from datetime import timedelta
 
     from lexicator_spark import synth
     from lexicator_spark.plans.pipeline import run_pipeline
     from lexicator_spark.plans.refresh import refresh_pipeline
 
-    def no_probe(spark):
-        raise AssertionError("iceberg_available probed for a path")
-
-    monkeypatch.setattr(sio, "iceberg_available", no_probe)
     df = spark.createDataFrame(
         [(f"c{i}", i) for i in range(20)], "conv_id string, v int"
     )

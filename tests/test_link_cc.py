@@ -1,16 +1,22 @@
-"""Stage B (linking) and Stage C (connected components) tests."""
+"""Stage B (linking), Stage C (the ``canonical_of_links`` projection)
+and connected-components tests."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from lexicator_spark import rules, synth
 from lexicator_spark.operators.canonicalize import (
+    canonical_of_links,
     canonical_of_triples,
     connected_components,
 )
 from lexicator_spark.operators.extract import extract_triples
 from lexicator_spark.operators.link import build_catalog, link_mentions
+from lexicator_spark.sources import io as sio
 from tests import oracle
 
 
@@ -145,3 +151,45 @@ def test_canonical_of_prefers_qid(spark):
     assert ("z lone", rules.PRED_CANONICAL_OF, "a lone") in got
     # canonical node itself emits no self triple
     assert not any(s == o for s, _p, o in got)
+
+
+def assert_projection_is_fixpoint(same_as):
+    """``canonical_of_links(same_as)`` holds exactly the rows, under the
+    same schema (nullability included), that the general path — the
+    component fixpoint over the link graph, then
+    ``canonical_of_triples`` — yields."""
+    edges = same_as.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
+    want = canonical_of_triples(connected_components(edges))
+    got = canonical_of_links(same_as)
+    assert got.schema == want.schema
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    assert rows(got) == rows(want)
+    return len(rows(got))
+
+
+def test_canonical_of_links_equals_component_fixpoint(spark):
+    corpus = synth.make_corpus(n_convs=300, seed=7)
+    same_as = link_mentions(
+        extract_triples(synth.corpus_df(spark, corpus)), build_catalog(spark)
+    )
+    assert assert_projection_is_fixpoint(same_as) > 0
+
+
+@pytest.mark.parametrize(
+    "subj,obj",
+    [("apache spark", "spork"), ("Q_spark", "Q_flink")],
+)
+def test_canonical_of_links_rejects_non_star_rows(spark, tmp_path, subj, obj):
+    """A link that is not surface → catalog id would make the projection
+    differ from the component fixpoint: the canonical write fails before
+    it commits."""
+    same_as = spark.createDataFrame(
+        [("duckdb", "Q_duckdb"), (subj, obj)], "subj string, obj string"
+    )
+    loc = str(tmp_path / "canonical")
+    with pytest.raises(Exception, match=f"Q_ catalog id, got {subj} -> {obj}"):
+        sio.write_table(canonical_of_links(same_as), loc, partition_key=None)
+    assert not os.path.exists(os.path.join(loc, "_SUCCESS"))

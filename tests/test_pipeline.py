@@ -372,10 +372,10 @@ def test_lineage_complete_after_crash_mid_build(spark, tmp_path, monkeypatch):
     df = synth.corpus_df(spark, corpus)
     out = str(tmp_path / "kg")
 
-    def crash(_edges):
+    def crash(_same_as):
         raise RuntimeError("simulated crash in canonicalize")
 
-    monkeypatch.setattr(P, "connected_components", crash)
+    monkeypatch.setattr(P, "canonical_of_links", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
         run_pipeline(spark, df, out, resume=False)
     assert P._is_done(spark, out, "extract") and P._is_done(spark, out, "link")

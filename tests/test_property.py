@@ -144,7 +144,7 @@ def test_partitioned_refresh_equals_recompute_on_random_evolutions(
     res = refresh_triples_partitioned(spark, v2, loc)
     got = {
         (r.subj, r.pred, r.obj, r.conv_id, r.turn_idx)
-        for r in res.table.select("subj", "pred", "obj", "conv_id", "turn_idx").collect()
+        for r in sio.read_table(spark, loc).select("subj", "pred", "obj", "conv_id", "turn_idx").collect()
     }
     want = {
         (r.subj, r.pred, r.obj, r.conv_id, r.turn_idx)

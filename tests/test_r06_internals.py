@@ -298,7 +298,7 @@ def test_detection_union_agg_equivalence(spark, tmp_path):
     assert res.n_changed == 2
     convs = {
         r.conv_id
-        for r in res.table.select("conv_id").distinct().collect()
+        for r in sio.read_table(spark, loc).select("conv_id").distinct().collect()
         if r.conv_id is not None
     }
     # 'gone' keeps its triples (detection cannot see deletions —
@@ -306,7 +306,7 @@ def test_detection_union_agg_equivalence(spark, tmp_path):
     assert {"keep", "grow", "new", "gone"} <= convs
     # the refreshed table equals a full re-extraction of the union of
     # surviving frontier state: grow has turn 1's triples now
-    grow_triples = res.table.filter(
+    grow_triples = sio.read_table(spark, loc).filter(
         (F.col("conv_id") == "grow") & (F.col("turn_idx") == 1)
     ).count()
     assert grow_triples > 0

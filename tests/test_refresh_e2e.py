@@ -5,126 +5,22 @@ every stage table under the root is ROW-IDENTICAL to a from-scratch
 ``run_pipeline`` over the updated corpus — through the added-surface,
 removed-surface, links-unchanged, feed-mode and no-op paths — and the
 stage markers stay coherent (a subsequent resume is a full no-op).
-
-Plus unit coverage for ``update_components``: incremental component
-maintenance equals a full connected-components run, as a partition
-(same co-membership), under random add/remove/mixed edge deltas
-including splits into several parts, multi-component merges, new
-nodes, and nodes whose last edge vanishes.
+Stage C, build and refresh alike, is the ``canonical_of_links``
+projection: equal to the component fixpoint over the refreshed links,
+and reached without it.
 """
 
 from __future__ import annotations
-
-import random
 
 import pytest
 from pyspark.sql import functions as F
 
 from lexicator_spark import rules, synth
-from lexicator_spark.operators.canonicalize import (
-    connected_components,
-    update_components,
-)
+from lexicator_spark.operators import canonicalize as C
 from lexicator_spark.plans.pipeline import read_lineage, run_pipeline
 from lexicator_spark.plans.refresh import refresh_pipeline
 from lexicator_spark.sources import io as sio
-
-
-# ── update_components vs full CC, arbitrary graphs ──────────────────
-
-
-def _edges_df(spark, pairs):
-    if not pairs:
-        return spark.createDataFrame([], "u string, v string")
-    return spark.createDataFrame(sorted(pairs), "u string, v string")
-
-
-def _partition_of(df):
-    """assignments → set of frozensets (co-membership, label-free),
-    asserting each node appears exactly once."""
-    rows = [(r.node, r.comp) for r in df.collect()]
-    nodes = [n for n, _ in rows]
-    assert len(nodes) == len(set(nodes)), "duplicate node assignment"
-    groups: dict[str, set] = {}
-    for n, c in rows:
-        groups.setdefault(c, set()).add(n)
-    return {frozenset(g) for g in groups.values()}
-
-
-def _uf_partition(pairs):
-    parent: dict[str, str] = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for u, v in pairs:
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            parent[rv] = ru
-    groups: dict[str, set] = {}
-    for n in parent:
-        groups.setdefault(find(n), set()).add(n)
-    return {frozenset(g) for g in groups.values()}
-
-
-@pytest.mark.parametrize("seed", [3, 11, 27])
-def test_update_components_matches_full_cc(spark, seed):
-    rng = random.Random(seed)
-    nodes = [f"n{i:02d}" for i in range(30)]
-    old = set()
-    while len(old) < 40:
-        u, v = rng.sample(nodes, 2)
-        old.add((min(u, v), max(u, v)))
-    old = sorted(old)
-
-    removed = set(rng.sample(old, 12))
-    surviving = [e for e in old if e not in removed]
-    new_nodes = [f"x{i}" for i in range(5)]
-    added = set()
-    while len(added) < 10:
-        u = rng.choice(nodes + new_nodes)
-        v = rng.choice(nodes + new_nodes)
-        if u != v:
-            added.add((min(u, v), max(u, v)))
-    added = sorted(added)
-
-    assignments = connected_components(_edges_df(spark, old))
-
-    # mixed add+remove
-    got = update_components(
-        assignments,
-        added_edges=_edges_df(spark, added),
-        removed_edges=_edges_df(spark, sorted(removed)),
-        surviving_edges=_edges_df(spark, surviving),
-    )
-    assert _partition_of(got) == _uf_partition(surviving + added)
-
-    # add-only (no removal phase at all)
-    got_add = update_components(assignments, added_edges=_edges_df(spark, added))
-    assert _partition_of(got_add) == _uf_partition(old + added)
-
-    # remove-only (empty added set short-circuits phase 2)
-    got_rm = update_components(
-        assignments,
-        added_edges=_edges_df(spark, []),
-        removed_edges=_edges_df(spark, sorted(removed)),
-        surviving_edges=_edges_df(spark, surviving),
-    )
-    assert _partition_of(got_rm) == _uf_partition(surviving)
-
-
-def test_update_components_requires_survivors(spark):
-    a = connected_components(_edges_df(spark, [("a", "b")]))
-    with pytest.raises(ValueError, match="surviving_edges"):
-        update_components(
-            a,
-            added_edges=_edges_df(spark, []),
-            removed_edges=_edges_df(spark, [("a", "b")]),
-        )
+from tests.test_link_cc import assert_projection_is_fixpoint
 
 
 # ── refresh_pipeline == run_pipeline, stage by stage ─────────────────
@@ -186,8 +82,8 @@ def test_refresh_pipeline_equals_full_rebuild(spark, tmp_path):
     run_pipeline(spark, _df(spark, v2), full_a)
     _assert_stages_equal(spark, root_inc, full_a)
 
-    # step 2 — added surfaces (one linkable, one not): star merge in
-    # Stage C via the component-graph path, detection mode
+    # step 2 — added surfaces (one linkable, one not): a new link
+    # joins Q_iceberg's star in Stage C, detection mode
     v3 = v2 + [
         turn("zadd01", 2, f"also [[{LINKED_ADD}]] and [[{UNLINKED_ADD}]]", 20)
     ]
@@ -204,7 +100,7 @@ def test_refresh_pipeline_equals_full_rebuild(spark, tmp_path):
     # step 3 — removed surface via an in-place text edit (same turn
     # count → invisible to max-turn_idx detection; the change feed
     # names the conversation, RecentChanges-style).  The vanished
-    # link splits Q_kafka's star component.
+    # link leaves Q_kafka's star.
     v4 = [
         r if not (r[0] == "zrem01" and r[1] == 1)
         else ("zrem01", 1, "user", "see the other queue instead", None,
@@ -217,6 +113,8 @@ def test_refresh_pipeline_equals_full_rebuild(spark, tmp_path):
     full_c = str(tmp_path / "full_c")
     run_pipeline(spark, _df(spark, v4), full_c)
     _assert_stages_equal(spark, root_inc, full_c)
+    # the links those refreshes left: their projection is the fixpoint
+    assert_projection_is_fixpoint(sio.read_table(spark, f"{root_inc}/same_as"))
 
     # no-op refresh: nothing changed → nothing rewritten
     res = refresh_pipeline(spark, _df(spark, v4), root_inc)
@@ -726,3 +624,47 @@ def test_refresh_refuses_root_without_sidecars_or_counts(spark, tmp_path):
     marker.pop("bucket_counts")
     fsutil.write_text(spark, ck, json.dumps(marker))
     refused(no_counts, "extract marker .* carries no bucket_counts")
+
+
+def test_build_and_refresh_never_reach_connected_components(
+    spark, tmp_path, monkeypatch
+):
+    """Stage C is a projection of the links in build and refresh alike:
+    with ``connected_components`` raising in every loaded module that
+    binds it, a build and a refresh that adds one link and drops
+    another both succeed, and the refreshed root equals a rebuild."""
+    import sys
+    from datetime import timedelta
+
+    def fixpoint(*_a, **_kw):
+        raise AssertionError("Stage C reached connected_components")
+
+    patched = [
+        name
+        for name, mod in list(sys.modules.items())
+        if getattr(mod, "__dict__", {}).get("connected_components")
+        is C.connected_components
+    ]
+    assert C.__name__ in patched
+    for name in patched:
+        monkeypatch.setattr(sys.modules[name], "connected_components", fixpoint)
+
+    t0 = synth.EPOCH + timedelta(days=15)
+    base = synth.make_corpus(n_convs=20, seed=51, shuffled=False).rows + [
+        ("zrem02", 0, "user", f"see [[{LINKED_REM}]] first", None, t0),
+    ]
+    root = str(tmp_path / "inc")
+    run_pipeline(spark, _df(spark, base), root, n_buckets=8)
+
+    v2 = [
+        r if r[0] != "zrem02" else r[:3] + ("see the other queue",) + r[4:]
+        for r in base
+    ] + [("zadd02", 0, "user", f"now [[{LINKED_ADD}]]", None, t0)]
+    feed = spark.createDataFrame([("zrem02",), ("zadd02",)], "conv_id string")
+    res = refresh_pipeline(spark, _df(spark, v2), root, change_feed=feed)
+    assert res.links_changed
+    assert res.surfaces_added >= 1 and res.surfaces_removed >= 1
+
+    full = str(tmp_path / "full")
+    run_pipeline(spark, _df(spark, v2), full, n_buckets=8)
+    _assert_stages_equal(spark, root, full)
