@@ -595,26 +595,38 @@ def refresh_triples_partitioned(
             change_feed.select("conv_id")
             .filter(F.col("conv_id").isNotNull())
             .distinct()
-            .localCheckpoint(eager=True)
         )
     else:
         changed_with_max = changed_conversations(
             turns, sio.read_table(spark, floc)
         ).localCheckpoint(eager=True)
         changed = changed_with_max.select("conv_id")
-    # ONE grouped collect answers "how many changed?", "which stage
-    # buckets?" and, on the bucketed raw-turns path, "which raw
-    # buckets?": it returns at most n_buckets × raw-buckets rows, and
-    # n_changed is its sum (``changed`` is distinct by construction in
-    # every mode).
+
     def bucket_of(n: int) -> Column:
         return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n)).cast("int")
 
     keys = [bucket_of(n_buckets).alias("p_hash")]
     if isinstance(turns, str):
         keys.append(bucket_of(t_meta["n_buckets"]).alias("t_hash"))
-    bucket_rows = changed.groupBy(*keys).count().collect()
-    n_changed = sum(int(r["count"]) for r in bucket_rows)
+    # ONE collect answers "how many changed?", "which stage buckets?",
+    # on the bucketed raw-turns path "which raw buckets?", and "which
+    # ids?" for a delta of at most _ISIN_DELTA_MAX conversations
+    # (``changed`` is distinct by construction in every mode).  The
+    # ids replace every join against ``changed`` below with a literal
+    # filter: no pin of the feed, no broadcast build.  A bulk delta
+    # pins ``changed`` and reads its buckets in one grouped collect,
+    # at most n_buckets × raw-buckets rows.
+    rows = changed.select("conv_id", *keys).limit(_ISIN_DELTA_MAX + 1).collect()
+    if len(rows) <= _ISIN_DELTA_MAX:
+        changed_ids = sorted(r["conv_id"] for r in rows)
+        bucket_rows = rows
+        n_changed = len(rows)
+    else:
+        changed_ids = None
+        if changed_with_max is None:
+            changed = changed.localCheckpoint(eager=True)
+        bucket_rows = changed.groupBy(*keys).count().collect()
+        n_changed = sum(int(r["count"]) for r in bucket_rows)
     if n_changed == 0:
         # true no-op: no stage write, no frontier write, zero files
         # touched — callers can skip downstream recomputes entirely
@@ -633,43 +645,51 @@ def refresh_triples_partitioned(
             .filter(F.col("p_hash").isin(t_touched))
             .drop("p_hash")
         )
-    # small deltas: collect the id list (bounded by _ISIN_DELTA_MAX)
-    # so the re-extraction runs as a literal scan filter instead of a
-    # broadcast semi-join — see _delta_good_triples
-    changed_ids = (
-        [r.conv_id for r in changed.collect()]
-        if n_changed <= _ISIN_DELTA_MAX
-        else None
-    )
-    # `changed` is checkpoint-RDD-backed (no Catalyst size estimate),
-    # so un-hinted, the anti/semi-joins below plan as sort-merge and
-    # shuffle the KEPT side.  n_changed is now known EXACTLY before
-    # any of these joins run, so a gated explicit broadcast (same
-    # bound the graph loops use) beats both the SMJ and AQE's
-    # shuffle-then-replan detour; bulk deltas beyond the bound keep
-    # the shuffle plan — `changed` is unbounded in general (a backfill
-    # day can touch most conversations).
-    changed_j = (
-        F.broadcast(changed) if n_changed <= 1_000_000 else changed
-    )
+    if changed_ids is not None:
+        # A NULL conv_id is kept, as the anti-join keeps it.  String
+        # literals are references in generated code, so these filters
+        # compile to a new class only per list length up to Spark's
+        # InSet threshold (10), never per id; they stay IN-lists, which
+        # a parquet scan pushes down for row-group skipping.
+        def without_changed(df: DataFrame) -> DataFrame:
+            return df.filter(
+                F.col("conv_id").isNull() | ~F.col("conv_id").isin(changed_ids)
+            )
+
+        def only_changed(df: DataFrame) -> DataFrame:
+            return df.filter(F.col("conv_id").isin(changed_ids))
+    else:
+        # `changed` is checkpoint-RDD-backed (no Catalyst size
+        # estimate), so un-hinted, the anti-joins plan as sort-merge
+        # and shuffle the KEPT side.  n_changed is known exactly here,
+        # so a gated explicit broadcast (same bound the graph loops
+        # use) beats both the SMJ and AQE's shuffle-then-replan detour;
+        # deltas beyond the bound keep the shuffle plan.  The semi-joins
+        # stay UNhinted: interleaved A/B at the 1%-delta shape (3071
+        # changed) measured the forced-broadcast variant
+        # par-to-slightly-worse there.
+        changed_j = (
+            F.broadcast(changed) if n_changed <= 1_000_000 else changed
+        )
+
+        def without_changed(df: DataFrame) -> DataFrame:
+            return df.join(changed_j, "conv_id", "left_anti")
+
+        def only_changed(df: DataFrame) -> DataFrame:
+            return df.join(changed, "conv_id", "left_semi")
+
     # Kept rows are read by filtering on the PARTITION COLUMN itself
     # (keep_bucket_col=True + isin(touched)), so the parquet source
     # prunes to the touched bucket directories — re-deriving the hash
     # from conv_id on a plain read would scan the whole table even for
     # a one-conversation delta, which at 10^12 turns turns every tiny
     # refresh into a full-table I/O pass.
-    kept_in_touched = (
+    kept_in_touched = without_changed(
         sio.read_table(spark, stage_location, keep_bucket_col=True)
         .filter(F.col("p_hash").isin(touched))
         .drop("p_hash")
         .filter(F.col("conv_id").isNotNull())
-        .join(changed_j, "conv_id", "left_anti")
     )
-    # the re-extraction semi-join stays UNhinted: interleaved A/B at
-    # the 1%-delta shape (3071 changed) measured the forced-broadcast
-    # variant par-to-slightly-worse there — AQE already handles the
-    # corpus-side join well, and the anti-joins below are where the
-    # kept-side shuffle actually disappears
     replacement = kept_in_touched.unionByName(
         _delta_good_triples(turns, changed, changed_ids=changed_ids)
     )
@@ -680,27 +700,25 @@ def refresh_triples_partitioned(
     # was a second full-corpus pass per refresh tick (removed r6; at
     # 29M turns that pass is the difference between O(delta) and
     # O(corpus) frontier upkeep).  Feed mode still derives it from one
-    # semi-join pass over `turns` (delta-scoped by construction — no
-    # snapshot aggregate exists).
+    # pass over the changed conversations' turns (delta-scoped by
+    # construction — no snapshot aggregate exists).
     if changed_with_max is not None:
         new_frontier = changed_with_max.select(
             "conv_id", F.col("max_idx").alias("done_max_idx")
         )
     else:
         new_frontier = (
-            turns.join(changed, "conv_id", "left_semi")
+            only_changed(turns)
             .groupBy("conv_id")
             .agg(F.max("turn_idx").alias("done_max_idx"))
         )
     # partition-pruned like kept_in_touched: only touched buckets of
     # the frontier table are read and rewritten
-    frontier_replacement = (
+    frontier_replacement = without_changed(
         sio.read_table(spark, floc, keep_bucket_col=True)
         .filter(F.col("p_hash").isin(touched))
         .drop("p_hash")
-        .join(changed_j, "conv_id", "left_anti")
-        .unionByName(new_frontier)
-    )
+    ).unionByName(new_frontier)
 
     # a sparse delta touches few buckets: spread each touched bucket's
     # rewrite over salted files so it isn't one writer task per bucket

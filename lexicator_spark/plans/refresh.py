@@ -373,13 +373,6 @@ def refresh_pipeline(
             spark, stats_loc, keep_bucket_col=True
         ).localCheckpoint(eager=True)  # pinned: the files move next
 
-    def _universe(stats: DataFrame) -> DataFrame:
-        return (
-            surface_rollup(stats)
-            .filter(F.col("n_mentions") > 0)
-            .select("surface_form")
-        )
-
     def _stats_and_diff(pinned: DataFrame, touched: list[int]):
         """Stage-A hook, run beside the stage and frontier upserts.
         The touched raw buckets' new content IS ``pinned`` (the pinned
@@ -392,25 +385,38 @@ def refresh_pipeline(
             sio.with_partition_hash(pinned, "conv_id", n_buckets)
         ).localCheckpoint(eager=True)
         old = old_stats_future.result()
-        stats_now = old.filter(~F.col("p_hash").isin(touched)).unionByName(
-            new_touched
-        )
-        # ONE full-outer diff instead of two anti-join count jobs plus
-        # re-run anti-joins in Stage B: the diff frame is delta-sized
-        # (only surfaces on exactly one side survive the filter), and
-        # added/removed/counts all derive from it without touching the
-        # rollups again.  Join keys are never NULL (surfaces come from
-        # mention objects), so the null-side filters are exactly the
-        # two anti-join sets.  Both sides read pinned frames only, so
-        # the counts job runs while the stats upsert writes.
+        # an array literal is a reference in generated code, where
+        # isin(touched) inlines each bucket id: one compiled class
+        # serves every delta's bucket list
+        in_touched = F.array_contains(F.lit(touched), F.col("p_hash"))
+        stats_now = old.filter(~in_touched).unionByName(new_touched)
+        # ONE grouped aggregate over the old rows and the new touched
+        # rows, each tagged with the mentions it counts before and
+        # after the refresh: a surface is in a universe iff it has
+        # mentions there, and the diff frame is delta-sized (only
+        # surfaces on exactly one side survive the filter).  Added,
+        # removed and their counts all derive from it; it reads pinned
+        # frames only, so the counts job runs while the stats upsert
+        # writes.
         diff_plan = (
-            _universe(stats_now).withColumn("__new", F.lit(1))
-            .join(
-                _universe(old).withColumn("__old", F.lit(1)),
+            old.select(
                 "surface_form",
-                "full_outer",
+                F.col("n_mentions").alias("before"),
+                F.when(in_touched, 0).otherwise(F.col("n_mentions")).alias("after"),
             )
-            .filter(F.col("__new").isNull() | F.col("__old").isNull())
+            .unionByName(
+                new_touched.select(
+                    "surface_form",
+                    F.lit(0).alias("before"),
+                    F.col("n_mentions").alias("after"),
+                )
+            )
+            .groupBy("surface_form")
+            .agg(
+                (F.sum("before") > 0).alias("__old"),
+                (F.sum("after") > 0).alias("__new"),
+            )
+            .filter(F.col("__old") != F.col("__new"))
         )
         with ThreadPoolExecutor(max_workers=1) as pool:
             upsert = pool.submit(
@@ -420,7 +426,7 @@ def refresh_pipeline(
                 pin_replacement=False,  # pinned above
             )
             counts_row = diff_plan.agg(
-                F.count("__new").alias("a"), F.count("__old").alias("r")
+                F.count_if("__new").alias("a"), F.count_if("__old").alias("r")
             ).first()
             upsert.result()
         return stats_now, diff_plan, int(counts_row["a"]), int(counts_row["r"])
@@ -474,8 +480,8 @@ def refresh_pipeline(
         # its added/removed consumers
         t0 = time.monotonic()
         diff = diff_plan.localCheckpoint(eager=True)
-        added = diff.filter(F.col("__old").isNull()).select("surface_form")
-        removed = diff.filter(F.col("__new").isNull()).select("surface_form")
+        added = diff.filter("__new").select("surface_form")
+        removed = diff.filter("__old").select("surface_form")
 
         # ── Stage B: delta link ──────────────────────────────────
         surviving = sio.read_table(spark, same_as_path).join(

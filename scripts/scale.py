@@ -31,7 +31,10 @@ Each target reports ``wall_s``, the wall of its headline unit:
   12-token snippets of every 5,000th document.
 
 Per-stage walls of ``build`` and ``refresh`` come from the root's
-``_lineage`` rows.  With one ``--cpus`` level the target runs here at
+``_lineage`` rows; next to them each run reports ``compiles``, the
+classes Spark's code generator compiled during it (its JVM counter,
+read around the run), so a run shows whether recompilation is part of
+its fixed cost.  With one ``--cpus`` level the target runs here at
 ``local[level]``.  With several, every level and rep runs in a fresh
 JVM (this script with ``--level``), the fastest run per level is kept,
 and levels four times apart report the N→4N efficiency
@@ -102,6 +105,12 @@ def _fastest(reps: int, run) -> dict:
     return min((run() for _ in range(reps)), key=lambda r: r["wall_s"])
 
 
+def _compiles(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -168,8 +177,13 @@ def build(spark, corpus_path: str, reps: int) -> dict:
 
     def once() -> dict:
         _fresh(root)
+        c0 = _compiles(spark)
         wall = _timed(lambda: run_pipeline(spark, turns, root, resume=False))
-        return {"wall_s": wall, "stages_s": _stage_walls(spark, root, set())}
+        return {
+            "wall_s": wall,
+            "compiles": _compiles(spark) - c0,
+            "stages_s": _stage_walls(spark, root, set()),
+        }
 
     best = _fastest(reps, once)
     return {
@@ -186,10 +200,12 @@ def refresh(spark, corpus_path: str, reps: int) -> dict:
     root = _fresh(f"{corpus_path}_refresh")
     kg = os.path.join(root, "kg")
     seen: set = set()
+    c0 = _compiles(spark)
     out = {
         "n_turns": n_turns,
         "n_convs": n_convs,
         "build_s": _timed(lambda: run_pipeline(spark, turns, kg, resume=False)),
+        "build_compiles": _compiles(spark) - c0,
         "build_stages_s": _stage_walls(spark, kg, seen),
     }
     turns_now = turns
@@ -209,7 +225,7 @@ def refresh(spark, corpus_path: str, reps: int) -> dict:
                 run["raw_upsert_s"] = _timed(lambda: upsert_raw(spark, raw, extra))
             else:
                 turns_now = turns_now.unionByName(extra)
-            t0 = time.monotonic()
+            c0, t0 = _compiles(spark), time.monotonic()
             res = refresh_pipeline(
                 spark,
                 None if shape == "pruned_feed" else turns_now,
@@ -218,6 +234,7 @@ def refresh(spark, corpus_path: str, reps: int) -> dict:
                 turns_location=raw if shape == "pruned_feed" else None,
             )
             run["wall_s"] = round(time.monotonic() - t0, 2)
+            run["compiles"] = _compiles(spark) - c0
             run["n_changed"] = res.n_changed
             run["buckets_touched"] = res.n_buckets_touched
             run["stages_refreshed"] = res.stages_refreshed

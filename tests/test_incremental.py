@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from lexicator_spark import synth
 from lexicator_spark.operators.extract import extract_triples
 from lexicator_spark.operators.incremental import (
@@ -69,6 +71,41 @@ def test_incremental_refresh_equals_full_recompute(spark, tmp_path):
     res = refresh_triples_partitioned(spark, v2, loc)
     assert res.n_changed == len(expected)
     assert _tset(sio.read_table(spark, loc)) == _tset(extract_triples(v2))
+
+
+@pytest.mark.parametrize("fed", [False, True])
+def test_bulk_delta_join_path_equals_full_recompute(
+    spark, tmp_path, monkeypatch, fed
+):
+    """A delta of more than ``_ISIN_DELTA_MAX`` conversations is not
+    collected as an id list: the changed set is pinned, its buckets
+    come from one grouped collect, and the kept, frontier and
+    re-extracted rows are joined against it.  The bound is shrunk so a
+    small corpus takes that path; the table still ends equal to a full
+    recompute, and its frontier leaves nothing to detect."""
+    from lexicator_spark.operators import incremental
+
+    monkeypatch.setattr(incremental, "_ISIN_DELTA_MAX", 2)
+    full_corpus = synth.make_corpus(n_convs=30, seed=41, shuffled=False)
+    grew = sorted({r[0] for r in full_corpus.rows if int(r[0][1:]) % 3 == 0})
+    last = {}
+    for r in full_corpus.rows:
+        last[r[0]] = max(last.get(r[0], -1), r[1])
+    v1 = synth.corpus_df(spark, synth.Corpus(
+        rows=[r for r in full_corpus.rows if not (r[0] in grew and r[1] == last[r[0]])]
+    ))
+    v2 = synth.corpus_df(spark, full_corpus)
+    loc = str(tmp_path / "triples_raw")
+    sio.write_table(extract_triples(v1), loc, partition_key="conv_id", n_buckets=4)
+    materialize_frontier(spark, v1, loc)
+    feed = (
+        spark.createDataFrame([(c,) for c in grew], "conv_id string")
+        if fed else None
+    )
+    res = refresh_triples_partitioned(spark, v2, loc, change_feed=feed)
+    assert res.n_changed == len(grew) > 2
+    assert _tset(sio.read_table(spark, loc)) == _tset(extract_triples(v2))
+    assert refresh_triples_partitioned(spark, v2, loc).n_changed == 0
 
 
 def _file_state(root):
@@ -454,11 +491,11 @@ def test_feed_refresh_location_needs_change_feed(spark, tmp_path):
 def test_location_feed_refresh_reads_the_feed_in_one_grouped_collect(
     spark, tmp_path
 ):
-    """On the bucketed raw-turns path, one grouped collect over the
-    pinned feed yields n_changed, the stage buckets and the raw
-    buckets; a second collect for the raw buckets would add its own
-    jobs.  Counts the jobs the calling thread launches (the upserts'
-    pool threads carry no job group)."""
+    """On the bucketed raw-turns path, one collect over the feed
+    yields n_changed, the stage buckets, the raw buckets and the ids;
+    a second collect for any of them would add its own jobs.  Counts
+    the jobs the calling thread launches (the upserts' pool threads
+    carry no job group)."""
     from pyspark.sql import functions as F
 
     turns = synth.corpus_df(spark, synth.make_corpus(n_convs=40, seed=5))
@@ -497,5 +534,7 @@ def test_location_feed_refresh_reads_the_feed_in_one_grouped_collect(
             sc.setLocalProperty(key, None)
     assert res.n_changed == len(grown)
     assert _tset(sio.read_table(spark, stage)) == _tset(extract_triples(v2))
-    # the feed's pin, one grouped collect and the IN-list id collect
-    assert jobs <= 5, jobs
+    # one collect of the fed ids and their buckets, over the feed's
+    # distinct: its map stage and its result (5 when the feed was
+    # pinned, then grouped, then collected again for its ids)
+    assert jobs <= 2, jobs

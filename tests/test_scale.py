@@ -28,16 +28,19 @@ def test_build_target_reads_every_stage_from_lineage(spark, corpus_path):
     assert r["n_turns"] == spark.read.parquet(corpus_path).count()
     assert set(r["stages_s"]) == set(STAGES)
     assert r["wall_s"] > 0
+    assert r["compiles"] >= 0
 
 
 def test_refresh_target_changes_exactly_each_delta(spark, corpus_path):
     r = scale.refresh(spark, corpus_path, 1)
     assert r["n_convs"] == N_CONVS
     assert set(r["build_stages_s"]) == set(STAGES)
+    assert r["build_compiles"] >= 0
     for shape in ("detection", "snapshot_feed", "pruned_feed"):
         (run,) = r[shape]["runs"]
         assert run["delta_convs"] > 0, shape
         assert run["n_changed"] == run["delta_convs"], shape
+        assert run["compiles"] >= 0, shape
         # each refresh writes its own lineage files, one per stage it
         # refreshed (link and canonicalize only when links changed)
         assert {"extract", "materialize", "entities"} <= set(
